@@ -79,7 +79,7 @@ object Bench {
     }
     // min of 3: a single probe sample lands inside this box's multi-second
     // stall windows often enough to read as calibration drift (r16
-    // baseline, CalibDiag) — the MIN is the box's attainable speed at
+    // baseline) — the MIN is the box's attainable speed at
     // that moment, which is what per-query normalization needs
     def calibProbe(): Double = (1 to 3).map(_ => calibProbeOnce()).min
     calibProbeOnce() // its own codegen/JIT warm-up is not a box signal

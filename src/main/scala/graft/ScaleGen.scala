@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *
   * `copies` is also the WORLD-LAYOUT knob for the streaming gates
   * (r10 verdict #2): the doc/event stream scaffolds slice the scaled
-  * table into StreamSlices ntile blocks over id/time order, and worlds
+  * table into StreamScaffold.Slices ntile blocks over id/time order, and worlds
   * are id-contiguous — so if `copies` divides evenly by the slice
   * count, every world lands wholly inside one micro-batch and no
   * near-dup (which exist only WITHIN a world by construction) can

@@ -614,7 +614,7 @@ object TextOps {
               org.apache.spark.sql.functions.col("state"))),
           org.apache.spark.sql.functions.lit(0L))).head()
       val (n, chars) = (g.getLong(0), g.getLong(1))
-      if (n <= localVocabMax && chars <= localVocabMax * 40L) {
+      if (n <= localVocabMax && chars / 40L <= localVocabMax) {
         val arr = words.collect().map(r => (r.getString(0), r.getLong(1)))
         org.apache.spark.sql.graftbridge.Bridge.releaseLocalCheckpoint(words)
         Some(arr)

@@ -117,6 +117,12 @@ object Cef {
       |         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
       |  FROM events)""".stripMargin
 
+  /** Deterministic late-arrival injection for the watermark gate
+    * (cef40): every 101st event id is held back one slice, so it
+    * ARRIVES a micro-batch after its event-time position. The rule is
+    * pure arithmetic over (ntile slice, event_id) ([[lateShift]]), so
+    * the DuckDB oracle replays the exact same arrival schedule.
+    */
   private val LateEveryId = 101
 
   /** Every [[Late2EveryId]]th event id is held back TWO slices. Spark
@@ -953,18 +959,12 @@ object Cef {
       // r17 (VERDICT r16 What's-wrong #1): the probe reads the s0
       // assignment OFF the cached base slice files — slice file i IS
       // ntile result i — and applies the shared [[lateShift]] rule,
-      // exactly how [[deriveLateFrom]] builds the late set the gate
-      // replays (LateSliceSpec pins derive ≡ direct file-for-file) —
+      // exactly how [[eventSlices]] derives the late set the gate
+      // replays (LateSliceSpec pins derived ≡ direct file-for-file) —
       // instead of re-running a single-partition ntile window over the
       // events table per run (the last per-run global-window site).
-      val evPath = java.nio.file.Paths.get(s"$dir/events.parquet")
-        .toAbsolutePath.normalize.toString
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val baseDir = eventSliceDir(s, evPath, late = false)
-      val probe = (1 to StreamSlices).map { i =>
-        s.read.parquet(baseDir.resolve(f"slice-$i%03d.parquet").toString)
-          .select(col("event_id"), col("ts"), lit(i).as("s0"))
-      }.reduce(_ unionAll _)
+      val probe = StreamScaffold.read(s, eventSlices(s, dir, late = false))
+        .select(col("event_id"), col("ts"), col(StreamScaffold.SliceCol).as("s0"))
         .withColumn("sl", lateShift(col("s0")))
         .withColumn("tsu", unix_micros(col("ts")))
         .withColumn("wend",
@@ -1043,7 +1043,7 @@ object Cef {
     // Stream.detections (flatMapGroupsWithState) → memory sink under
     // Trigger.AvailableNow — so the driver's DuckDB oracle checks the
     // streaming execution path itself, not just its batch twin.
-    // The scaffold slices the source into StreamSlices ordered files
+    // The scaffold slices the source into StreamScaffold.Slices ordered files
     // (maxFilesPerTrigger=1), so this gate covers cross-micro-batch
     // GroupState snapshot/restore, not just the single-batch pass;
     // cross-batch event-time order within a key is the slicing's
@@ -1374,8 +1374,8 @@ object Cef {
     // "Mergeable Summaries" rule (sum counterwise, subtract the
     // (k+1)-th largest count, drop non-positives) — a pure function of
     // the counts, so the DuckDB oracle replays the identical fold:
-    // slice assignment is ntile(StreamSlices) over (ts, event_id), the
-    // exact rule buildSlices uses, and one reduction CTE per
+    // slice assignment is ntile(StreamScaffold.Slices) over (ts, event_id), the
+    // exact rule StreamScaffold.slices uses, and one reduction CTE per
     // micro-batch. This gates that GroupState round-trips EVERY batch
     // boundary in sequence — a restore skipping batch 2 would shift
     // every surviving count.
@@ -1398,19 +1398,19 @@ object Cef {
            |              coalesce(m.c, 0) + coalesce(c.c, 0) AS c
            |       FROM $prev m FULL OUTER JOIN $cnts c
            |         ON m.user_id = c.user_id AND m.item = c.item)""".stripMargin
-      // the slice/merge/reduce chain is GENERATED from StreamSlices
+      // the slice/merge/reduce chain is GENERATED from StreamScaffold.Slices
       // (r10 advice): MG is order-dependent across batches, so a
       // hard-coded 3 would silently desynchronize this oracle from the
-      // stream the scaffold actually replays if StreamSlices changed
-      val slices = (1 to StreamSlices).map(i =>
+      // stream the scaffold actually replays if StreamScaffold.Slices changed
+      val slices = (1 to StreamScaffold.Slices).map(i =>
         s"c$i AS (SELECT user_id, item, count(*) AS c FROM e WHERE sl = $i GROUP BY user_id, item)")
         .mkString(",\n")
       val fold = (Seq(reduce("c1", "m1")) ++
-        (2 to StreamSlices).flatMap(i =>
+        (2 to StreamScaffold.Slices).flatMap(i =>
           Seq(merge(s"m${i - 1}", s"c$i", s"a$i"), reduce(s"a$i", s"m$i"))))
         .mkString(",\n")
       s"""WITH e AS (SELECT user_id, event_type AS item,
-         |                  ntile($StreamSlices) OVER (ORDER BY ts, event_id) AS sl
+         |                  ntile(${StreamScaffold.Slices}) OVER (ORDER BY ts, event_id) AS sl
          |           FROM events),
          |$slices,
          |$fold,
@@ -1419,7 +1419,7 @@ object Cef {
          |SELECT m.user_id, n.n_seen, m.item, CAST(m.c AS BIGINT) AS cnt,
          |       CAST(row_number() OVER (PARTITION BY m.user_id
          |                               ORDER BY m.c DESC, m.item) AS BIGINT) AS rk
-         |FROM m$StreamSlices m JOIN n USING (user_id)
+         |FROM m${StreamScaffold.Slices} m JOIN n USING (user_id)
          |ORDER BY user_id, rk""".stripMargin
     }) { (s, dir) =>
       import graft.ops.StatsOps
@@ -1586,7 +1586,7 @@ object Cef {
     // SEQUENCE (a skipped or reordered batch shifts every halving).
     // Decay fires only on batches where the key APPEARS (GroupState
     // invokes present groups only); the oracle's merge CTEs — one per
-    // micro-batch, generated from StreamSlices (the cef47 discipline)
+    // micro-batch, generated from StreamScaffold.Slices (the cef47 discipline)
     // — mirror that with a CASE on the slice side. All-integer
     // state; the value column is clamped at 0 on both sides so the
     // truncating halving agrees between the engines.
@@ -1599,16 +1599,16 @@ object Cef {
            |                   ELSE coalesce(p.ds, 0) // 2 + c.s END AS ds
            |       FROM $prev p FULL OUTER JOIN $cur c
            |         ON p.user_id = c.user_id)""".stripMargin
-      val slices = (1 to StreamSlices).map(i =>
+      val slices = (1 to StreamScaffold.Slices).map(i =>
         s"""c$i AS (SELECT user_id, count(*) AS n, sum(v_q) AS s
            |        FROM e WHERE sl = $i GROUP BY user_id)""".stripMargin)
         .mkString(",\n")
       val fold = (Seq("d1 AS (SELECT user_id, n AS dc, s AS ds FROM c1)") ++
-        (2 to StreamSlices).map(i => merge(s"d${i - 1}", s"c$i", s"d$i")))
+        (2 to StreamScaffold.Slices).map(i => merge(s"d${i - 1}", s"c$i", s"d$i")))
         .mkString(",\n")
       s"""WITH e AS (SELECT user_id,
          |                  GREATEST(CAST(floor(value * 10) AS BIGINT), 0) AS v_q,
-         |                  ntile($StreamSlices) OVER (ORDER BY ts, event_id) AS sl
+         |                  ntile(${StreamScaffold.Slices}) OVER (ORDER BY ts, event_id) AS sl
          |           FROM events),
          |$slices,
          |$fold,
@@ -1616,7 +1616,7 @@ object Cef {
          |      FROM e GROUP BY user_id)
          |SELECT d.user_id, n.n_seen, CAST(d.dc AS BIGINT) AS dec_cnt,
          |       CAST(d.ds AS BIGINT) AS dec_sum
-         |FROM d$StreamSlices d JOIN n USING (user_id)
+         |FROM d${StreamScaffold.Slices} d JOIN n USING (user_id)
          |ORDER BY user_id""".stripMargin
     }) { (s, dir) =>
       import graft.ops.StatsOps
@@ -1934,23 +1934,9 @@ object Cef {
     }
   )
 
-  /** Uniquifies streaming memory-sink names across invocations in one
-    * session (Verify runs once, Bench several times; memory sinks are
-    * session-global).
-    */
-  private val streamRuns = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Shared scaffold of the streaming CORRECTNESS queries (cef22/cef25):
-    * events.parquet as a file-source stream (symlinked into a temp
-    * directory — the source's per-batch partition inference requires a
-    * directory basePath; nanos→micros like Tables), the given stateful
-    * detection transform, a memory sink under Trigger.AvailableNow. The
-    * drained sink is copied into a local DataFrame so the memory-sink
-    * table, checkpoint and source directories can all be RELEASED per
-    * invocation — repeated bench runs in one session must not
-    * accumulate pinned result sets or temp dirs. (The result is a
-    * driver-checked detection set, bounded by the oracle-compare
-    * contract, so the copy is small by construction.)
+  /** The streaming detection gates (cef22/cef25 …): the event stream,
+    * narrowed to an EventStream, through a stateful detection runtime in
+    * the shared scaffold ([[runEventStream]]).
     */
   private def runDetectionStream(s: SparkSession, dir: String, tag: String)(
       detect: graft.cef.spark.EventStream =>
@@ -1962,16 +1948,6 @@ object Cef {
         idCol = "event_id", typeCol = "event_type", tsCol = "ts",
         partitionCol = "user_id", numAttrs = Seq("value"))).toDF()
     }
-
-  /** Micro-batches every streaming scaffold run replays (source slices ×
-    * maxFilesPerTrigger=1): >1 so the driver's oracle gates the
-    * cross-batch GroupState snapshot/restore path, not just a
-    * single-batch pass. A def, not a val: since r11 it is interpolated
-    * inside the `queries` val above (cef47's generated fold), which
-    * initializes first — as a val it would read 0 there (the CmSeeds /
-    * StreamKmvK trap).
-    */
-  private def StreamSlices = 3
 
   /** cef43 KMV size: small enough that the cap path (est from kth_min)
     * engages at sf0.01+ where per-user distinct value-buckets exceed it,
@@ -2023,171 +1999,44 @@ object Cef {
     */
   private def StreamQhBuckets = 64
 
-  /** Sliced-source directories, one per events table: the four streaming
-    * gates (cef22/25/28/33) replay the SAME slices, so the slice build —
-    * a global sort + one partitioned write — runs once per (session,
-    * table), not once per query (it dominated the scaffold's cost in
-    * Bench, which runs all four back to back).
+  /** The events table's cached slice set: `ntile` over (ts, event_id)
+    * with `ts` normalized at build time (nanos-as-long / TIMESTAMP_NTZ /
+    * micros — Tables.normalizeTs), so the slice files are always plain
+    * TIMESTAMP(MICROS) and the streaming read needs no per-encoding
+    * gate. `late = true` selects the [[LateEveryId]] hold-back variant,
+    * derived from the base files by [[lateShift]] (slice file i IS the
+    * ntile result i), not by a second global sort of the table.
     */
-  private val sliceCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  // the rewritten slices' schema, resolved once per (session, table) —
-  // the per-query parquet footer read was ~26 × 30 ms of pure plumbing
-  private val sliceSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-  StreamScaffold.registerCache(() => { sliceCache.clear(); sliceSchemaCache.clear() })
-
-  /** Deterministic late-arrival injection for the watermark gate
-    * (cef40): every 101st event id is held back one slice, so it
-    * ARRIVES a micro-batch after its event-time position — stragglers
-    * from the tail of the previous slice land inside the watermark,
-    * older ones beyond it. The rule is pure arithmetic over
-    * (ntile slice, event_id), so the DuckDB oracle replays the exact
-    * same arrival schedule.
-    */
-
-  /** Rewrite the events table as [[StreamSlices]] (ts, event_id)-ordered
-    * parquet files with strictly increasing mtimes (the file source
-    * processes oldest first). One partitioned single-task write; the
-    * single-partition window is test-scaffold-scale only (the sliced
-    * table is the gate's sf input, not a production path). With
-    * `late = true`, applies the [[LateEveryId]] hold-back AFTER the
-    * time-ordered ntile, making the slices deliberately out-of-order.
-    */
-  private[queries] def buildSlices(s: SparkSession, path: String, late: Boolean = false): java.nio.file.Path = {
-    // tracked: deleted (and the cache cleared) when the session stops —
-    // the r12 BENCH contamination fix (StreamScaffold's scaladoc)
-    val srcDir = StreamScaffold.track(s,
-      StreamScaffold.newScaffoldDir("graft-stream-src"))
-    val tmp = StreamScaffold.newScaffoldDir("graft-stream-slices")
-    // a failed build must not leak the half-populated source dir — the
-    // cache records nothing on throw, so the next call rebuilds cleanly
-    try buildInto(s, path, srcDir, tmp, late)
-    catch { case e: Throwable => rmSliceTree(srcDir); throw e }
-    finally rmSliceTree(tmp)
-  }
-
-  /** The cached slice dir for (session-cache, events table, variant).
-    * The late slice set derives from the non-late one (deriveLateFrom)
-    * — the base is materialized OUTSIDE the late computeIfAbsent (a
-    * nested computeIfAbsent on one ConcurrentHashMap is a recursive
-    * update).
-    */
-  private def eventSliceDir(
-      s: SparkSession, path: String, late: Boolean): java.nio.file.Path =
-    if (late) {
-      val baseDir = sliceCache.computeIfAbsent(path, _ => buildSlices(s, path))
-      sliceCache.computeIfAbsent(s"$path#late", _ => deriveLateFrom(s, path, baseDir))
-    } else sliceCache.computeIfAbsent(path, _ => buildSlices(s, path))
-
-  /** Populate the per-(session, events-table) slice caches without
-    * running any gate. Bench's UNTIMED warm-up region calls it so the
-    * per-session scaffold setup — the slice rewrites the r15 warm-up
-    * policy already keeps out of the timed region via the cef22/p120
-    * warm runs — also covers the LATE variant, which only cef40
-    * consumes and which would otherwise charge ~1.1 s of scaffold
-    * build to cef40's timed run (r17).
-    */
-  private[graft] def warmEventSlices(s: SparkSession, dir: String, late: Boolean): Unit = {
+  private[queries] def eventSlices(s: SparkSession, dir: String, late: Boolean): StreamScaffold.SliceSet = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = java.nio.file.Paths.get(s"$dir/events.parquet")
       .toAbsolutePath.normalize.toString
-    eventSliceDir(s, path, late)
+    val base = StreamScaffold.slices(s, path, col("ts"), col("event_id"))(
+      Tables.normalizeTs(s, s.read.parquet(path)))
+    if (!late) base
+    else StreamScaffold.cached(s, path, s"$path#late")(StreamScaffold.read(s, base)
+      .withColumn(StreamScaffold.SliceCol, lateShift(col(StreamScaffold.SliceCol))))
+  }
+
+  /** Populate the events slice sets without running any gate. Bench's
+    * UNTIMED warm-up region calls it so the per-session scaffold setup
+    * also covers the LATE variant, which only cef40 consumes and which
+    * would otherwise charge its build to cef40's timed run (r17).
+    */
+  private[graft] def warmEventSlices(s: SparkSession, dir: String, late: Boolean): Unit = {
+    eventSlices(s, dir, late)
     ()
   }
 
-  private def rmSliceTree(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-      .foreach(f => java.nio.file.Files.deleteIfExists(f))
-  }
-
-  private def buildInto(
-      s: SparkSession,
-      path: String,
-      srcDir: java.nio.file.Path,
-      tmp: java.nio.file.Path,
-      late: Boolean): java.nio.file.Path = {
-    // normalize ts at slice-build time (nanos-as-long / TIMESTAMP_NTZ /
-    // micros — Tables.normalizeTs) so the slice files are always plain
-    // TIMESTAMP(MICROS) and the streaming read needs no per-encoding gate
-    val ordered = Tables.normalizeTs(s, s.read.parquet(path))
-      .withColumn("__s0",
-        ntile(StreamSlices).over(Window.orderBy(col("ts"), col("event_id"))))
-    val sliced =
-      if (late) ordered.withColumn("__slice", lateShift(col("__s0"))).drop("__s0")
-      else ordered.withColumnRenamed("__s0", "__slice")
-    publishSlices(s, path, srcDir, tmp, sliced)
-  }
-
   /** The hold-back rule of the [[LateEveryId]] schedule: slice s0 plus
-    * 0/1/2 by event_id residue, capped at the last slice. One owner so
-    * the direct build and the derived-from-slices build (below) apply
-    * the IDENTICAL reassignment.
+    * 0/1/2 by event_id residue, capped at the last slice. One owner for
+    * the derived late slice set, cef40's schedule probe and the direct
+    * reference build LateSliceSpec compares against.
     */
-  private def lateShift(s0: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    least(lit(StreamSlices), s0 +
+  private[queries] def lateShift(s0: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    least(lit(StreamScaffold.Slices), s0 +
       when(col("event_id") % Late2EveryId === 0, 2)
         .when(col("event_id") % LateEveryId === 0, 1).otherwise(0))
-
-  /** Derive the LATE slice set from an already-built non-late slice dir
-    * (r17, guide §1.2 "don't compute twice"): slice file i IS the ntile
-    * assignment s0 = i, so the late variant needs only the per-row
-    * [[lateShift]] over the three tiny slice files — not a second
-    * global-window sort of the whole events table (~1 s of cef40's
-    * timed run; also one fewer single-partition Window at any scale).
-    * Row order is preserved: slice i's rows all (ts, event_id)-precede
-    * slice i+1's by ntile construction, so the ordered union re-reads
-    * the exact global order the direct build wrote.
-    */
-  private[queries] def deriveLateFrom(
-      s: SparkSession, path: String, baseDir: java.nio.file.Path): java.nio.file.Path = {
-    val srcDir = StreamScaffold.track(s,
-      StreamScaffold.newScaffoldDir("graft-stream-src"))
-    val tmp = StreamScaffold.newScaffoldDir("graft-stream-slices")
-    try {
-      val perSlice = (1 to StreamSlices).map { i =>
-        s.read.parquet(baseDir.resolve(f"slice-$i%03d.parquet").toString)
-          .withColumn("__slice", lateShift(lit(i)))
-      }
-      publishSlices(s, path, srcDir, tmp, perSlice.reduce(_ unionAll _))
-      srcDir
-    } catch { case e: Throwable => rmSliceTree(srcDir); throw e }
-    finally rmSliceTree(tmp)
-  }
-
-  /** Shared tail of every slice build: one single-task partitioned
-    * write into a CHILD of the marked tmp dir (overwriting the dir
-    * itself would destroy its .graft-owner.pid marker — during the
-    * build window a sibling JVM's sweepStale would fall back to the
-    * mtime rule and could delete the in-progress dir, r14 ADVICE),
-    * then move each slice part into `srcDir` with strictly increasing
-    * mtimes so the file source replays them oldest-first.
-    */
-  private def publishSlices(
-      s: SparkSession,
-      path: String,
-      srcDir: java.nio.file.Path,
-      tmp: java.nio.file.Path,
-      sliced: DataFrame): java.nio.file.Path = {
-    val out = tmp.resolve("out")
-    sliced
-      .coalesce(1)
-      .write.mode("overwrite").partitionBy("__slice").parquet(out.toString)
-    val base = java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(path)).toMillis
-    import scala.jdk.CollectionConverters._
-    for (i <- 1 to StreamSlices) {
-      val part = java.nio.file.Files.list(out.resolve(s"__slice=$i")).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(sys.error(s"slice $i wrote no parquet part"))
-      val dst = srcDir.resolve(f"slice-$i%03d.parquet")
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(base + i * 1000L))
-    }
-    srcDir
-  }
 
   /** Shared discipline of the streaming sketch/reservoir gates
     * (cef43/45/46/47): the gate is vacuous unless some key emitted
@@ -2220,123 +2069,18 @@ object Cef {
     snaps.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
   }
 
-  /** The generic half of the scaffold: the raw streaming events DataFrame
-    * (ts already nanos→micros) through any transform into the drained,
-    * released memory sink. `mode` is "append" for the stateful detection
-    * runtimes and "complete" for windowed aggregations (under
-    * AvailableNow a final open window would otherwise be withheld by the
-    * watermark).
-    *
-    * The source is REWRITTEN as [[StreamSlices]] event-time-ordered
-    * parquet slices consumed one file per trigger, so every run exercises
-    * ≥3 micro-batches: slice i holds the (ts, event_id)-contiguous range
-    * before slice i+1, which restricted to any key is exactly the per-key
-    * order the runtimes sort to within a batch — cross-batch replay is
-    * therefore the same total order as the single-batch path, with the
-    * hyper-state round-tripping through GroupState at each boundary
-    * (asserted: ≥[[StreamSlices]] non-empty batches per run).
+  /** The events table through `transform` in the shared scaffold
+    * ([[StreamScaffold.run]]). Slice i holds the (ts, event_id)-contiguous
+    * range before slice i+1, which restricted to any key is exactly the
+    * per-key order the runtimes sort to within a batch — cross-batch
+    * replay is therefore the same total order as the single-batch path,
+    * with the hyper-state round-tripping through GroupState at each
+    * boundary.
     */
   private def runEventStream(s: SparkSession, dir: String, tag: String, mode: String,
       late: Boolean = false, noDataBatches: Boolean = false)(
-      transform: DataFrame => DataFrame): DataFrame = {
-    // opt-in wrapper-segment stderr timing (GRAFT_STREAM_DIAG=1): the
-    // r17 wrapper harvest needed to know where the ~0.6 s/gate OUTSIDE
-    // the micro-batches goes — keep the probe so the next round can
-    // re-measure without re-instrumenting
-    val diag = sys.env.contains("GRAFT_STREAM_DIAG")
-    var tPrev = System.nanoTime()
-    def stamp(label: String): Unit = if (diag) {
-      val t = System.nanoTime()
-      System.err.println(f"[sdiag] $tag $label ${(t - tPrev) / 1e6}%.1f ms")
-      tPrev = t
-    }
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = java.nio.file.Paths.get(s"$dir/events.parquet")
-      .toAbsolutePath.normalize.toString
-    val cacheKey = if (late) s"$path#late" else path
-    val srcDir = eventSliceDir(s, path, late)
-    // schema of the REWRITTEN slices (ts already normalized to
-    // TIMESTAMP(MICROS) by buildInto), not of the driver's raw table
-    val schema = sliceSchemaCache.computeIfAbsent(cacheKey,
-      _ => s.read.parquet(srcDir.toString).schema)
-    stamp("slices+schema")
-    val ckptDir = StreamScaffold.newCheckpointDir(s, tag)
-    val sinkName = s"${tag}_sink_${streamRuns.incrementAndGet()}"
-    def rmTree(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-    }
-    // scaffold resources must not leak when transform/start/await throws
-    // — repeated bench runs in one session share the temp dir and the
-    // session-global memory-sink namespace (srcDir is cache-owned)
-    val spKey = "spark.sql.shuffle.partitions"
-    val spPrev = s.conf.getOption(spKey)
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ndPrev = s.conf.getOption(ndKey)
-    try {
-      // scope the state-partition count to the gate: each micro-batch
-      // commits one state store PER shuffle partition (FOUR per
-      // partition for the stream-stream join gate), so 32 partitions
-      // × ≥3 batches is ~100+ store commits of fixed overhead for a
-      // test-SF keyed stream; 4 keeps the distributed shape — a real
-      // multi-partition shuffle, several independent stores, results
-      // partition-count-independent — at an eighth of the plumbing
-      // (measured ~0.3 s/query over partitions=8 across the 20+ gate
-      // family, ScaffoldCostMain grid). Production sizing belongs to
-      // the caller, not this scaffold.
-      s.conf.set(spKey, "4")
-      // the trailing no-data micro-batch exists to advance the watermark
-      // once more and flush/evict; its output matters ONLY to the
-      // append-mode watermarked aggregation gate (cef40 — the final
-      // window is emitted by exactly that batch, and its oracle models
-      // it). Every other gate emits in-batch (flatMapGroupsWithState
-      // NoTimeout, dropDuplicates, stream-stream INNER join) or re-emits
-      // everything per batch (complete mode), so the extra batch is a
-      // pure fixed cost — one more full commit round (~0.2 s/query,
-      // ScaffoldCostMain r16 grid) times the 20+ gate family per sweep
-      s.conf.set(ndKey, noDataBatches.toString)
-      val raw = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      val plan = transform(raw)
-      stamp("transform")
-      val q = plan
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode(mode)
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      stamp("start")
-      q.awaitTermination()
-      stamp("await")
-      val fed = q.recentProgress.count(_.numInputRows > 0)
-      require(fed >= StreamSlices,
-        s"streaming scaffold expected >=$StreamSlices micro-batches, got $fed")
-      // r17: drain the sink at the InternalRow layer (Bridge.localCopy)
-      // — collect()+createDataFrame was a double Row conversion, ~0.4 s
-      // on the 13k-row inference gate. Ownership contract unchanged:
-      // the copy is self-contained, the sink/view is dropped below.
-      val out = org.apache.spark.sql.graftbridge.Bridge.localCopy(s.table(sinkName))
-      stamp("collect")
-      out
-    } finally {
-      spPrev match {
-        case Some(v) => s.conf.set(spKey, v)
-        case None    => s.conf.unset(spKey)
-      }
-      ndPrev match {
-        case Some(v) => s.conf.set(ndKey, v)
-        case None    => s.conf.unset(ndKey)
-      }
-      try s.catalog.dropTempView(sinkName) catch { case _: Exception => }
-      rmTree(ckptDir)
-      StreamScaffold.untrack(ckptDir)
-      // srcDir is NOT removed here: the slice cache owns it for the
-      // session (deleting it under the cache strands every later
-      // streaming gate on a dead path); StreamScaffold deletes it when
-      // the session stops
-    }
-  }
+      transform: DataFrame => DataFrame): DataFrame =
+    StreamScaffold.run(s, eventSlices(s, dir, late), tag, mode, noDataBatches)(transform)
 
   /** DuckDB oracle for the order-CV query (cef23): restates
     * [[graft.cef.spark.Train.orderCv]] end-to-end in SQL. Train-region

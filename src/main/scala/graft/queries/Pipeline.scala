@@ -458,133 +458,27 @@ object Pipeline {
   }
 
   // ---------------------------------------------------------------------
-  // Documents-stream scaffold (the p50 ingestion gate): the documents
-  // table rewritten as DocStreamSlices id-ordered parquet slices consumed
-  // one file per trigger — the same ≥N-micro-batch discipline as the cef
-  // event-stream scaffold, minus the event-time machinery (ingestion
-  // order IS doc_id order, which is what makes the streaming salt chunks
-  // line up with the batch row_number salt).
-  private val DocStreamSlices = 3
-  private val docSliceCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  // slice schema resolved once per (session, table), like the cef
-  // event-slice scaffold — drops a per-query parquet footer read
-  private val docSliceSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-  StreamScaffold.registerCache(() => { docSliceCache.clear(); docSliceSchemaCache.clear() })
-  private val docStreamRuns = new java.util.concurrent.atomic.AtomicLong()
-
-  private def rmTree(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-      .foreach(f => java.nio.file.Files.deleteIfExists(f))
-  }
-
-  private def buildDocSlices(s: SparkSession, path: String): java.nio.file.Path = {
-    val srcDir = StreamScaffold.track(s,
-      StreamScaffold.newScaffoldDir("graft-docstream-src"))
-    val tmp = StreamScaffold.newScaffoldDir("graft-docstream-tmp")
-    try {
-      val w = org.apache.spark.sql.expressions.Window.orderBy(col("doc_id"))
-      // write into a CHILD of the marked tmp dir: mode("overwrite") on
-      // the dir itself would delete and recreate it, destroying the
-      // .graft-owner.pid marker — during the build window a sibling
-      // JVM's sweepStale would fall back to the mtime rule and could
-      // delete this in-progress dir out from under us (r14 ADVICE)
-      val out = tmp.resolve("out")
-      s.read.parquet(path)
-        .withColumn("__slice", ntile(DocStreamSlices).over(w))
-        .coalesce(1)
-        .write.mode("overwrite").partitionBy("__slice").parquet(out.toString)
-      val base = java.nio.file.Files.getLastModifiedTime(
-        java.nio.file.Paths.get(path)).toMillis
-      import scala.jdk.CollectionConverters._
-      for (i <- 1 to DocStreamSlices) {
-        val part = java.nio.file.Files.list(out.resolve(s"__slice=$i")).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet"))
-          .getOrElse(sys.error(s"doc slice $i wrote no parquet part"))
-        val dst = srcDir.resolve(f"slice-$i%03d.parquet")
-        java.nio.file.Files.move(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(base + i * 1000L))
-      }
-      srcDir
-    } catch { case e: Throwable => rmTree(srcDir); throw e }
-    finally rmTree(tmp)
+  // Documents-stream gates (p50/p105/p108/p120): the documents table
+  // replayed through the shared scaffold (StreamScaffold) as doc_id-ordered
+  // slices — ingestion order IS doc_id order, which is what makes the
+  // streaming salt chunks line up with the batch row_number salt.
+  private[queries] def docSlices(s: SparkSession, dir: String): StreamScaffold.SliceSet = {
+    val path = java.nio.file.Paths.get(s"$dir/documents.parquet")
+      .toAbsolutePath.normalize.toString
+    StreamScaffold.slices(s, path, col("doc_id"))(s.read.parquet(path))
   }
 
   private def runDocStream(s: SparkSession, dir: String, tag: String)(
-      transform: DataFrame => DataFrame): DataFrame = {
-    val path = java.nio.file.Paths.get(s"$dir/documents.parquet")
-      .toAbsolutePath.normalize.toString
-    val srcDir = docSliceCache.computeIfAbsent(path, _ => buildDocSlices(s, path))
-    val schema = docSliceSchemaCache.computeIfAbsent(path,
-      _ => s.read.parquet(srcDir.toString).schema)
-    val ckptDir = StreamScaffold.newCheckpointDir(s, tag)
-    val sinkName = s"${tag}_sink_${docStreamRuns.incrementAndGet()}"
-    val spKey = "spark.sql.shuffle.partitions"
-    val spPrev = s.conf.getOption(spKey)
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ndPrev = s.conf.getOption(ndKey)
-    try {
-      // 4 state partitions: same rationale (and the same measured
-      // ~0.3 s/query constant) as the event-stream scaffold's setting
-      // in Cef.runEventStream — distributed shape at minimum plumbing
-      s.conf.set(spKey, "4")
-      // no doc-stream gate uses watermarks or timeouts: every one emits
-      // in-batch, so the trailing no-data micro-batch is a pure fixed
-      // commit-round cost (same rationale as Cef.runEventStream)
-      s.conf.set(ndKey, "false")
-      val raw = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      val q = transform(raw)
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode("append")
-        .option("checkpointLocation", ckptDir.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val fed = q.recentProgress.count(_.numInputRows > 0)
-      require(fed >= DocStreamSlices,
-        s"doc-stream scaffold expected >=$DocStreamSlices micro-batches, got $fed")
-      // r17: InternalRow-layer sink drain — same double-conversion cut
-      // as Cef.runEventStream (Bridge.localCopy scaladoc)
-      org.apache.spark.sql.graftbridge.Bridge.localCopy(s.table(sinkName))
-    } finally {
-      spPrev match {
-        case Some(v) => s.conf.set(spKey, v)
-        case None    => s.conf.unset(spKey)
-      }
-      ndPrev match {
-        case Some(v) => s.conf.set(ndKey, v)
-        case None    => s.conf.unset(ndKey)
-      }
-      try s.catalog.dropTempView(sinkName) catch { case _: Exception => }
-      rmTree(ckptDir)
-      StreamScaffold.untrack(ckptDir)
-      // srcDir is cache-owned for the session, like the cef slice cache;
-      // StreamScaffold deletes both when the session stops
-    }
-  }
+      transform: DataFrame => DataFrame): DataFrame =
+    StreamScaffold.run(s, docSlices(s, dir), tag)(transform)
 
   /** The scaffold's (doc_id, slice) assignment, read OFF the cached
     * slice files (slice file i IS the build-time ntile result) instead
-    * of re-running a single-partition ntile window over the corpus —
-    * r17, VERDICT r16 What's-wrong #1 / guide §2.4: the per-run global
-    * window was a total-order sort onto one task at any scale, and the
-    * files already hold its answer. Caller must have run the doc
-    * stream for `dir` first (the cache is populated by runDocStream).
+    * of re-running a single-partition ntile window over the corpus.
     */
-  private def docSliceAssignment(s: SparkSession, dir: String): DataFrame = {
-    val path = java.nio.file.Paths.get(s"$dir/documents.parquet")
-      .toAbsolutePath.normalize.toString
-    val srcDir = docSliceCache.get(path)
-    require(srcDir != null, s"doc slices for $path not built yet")
-    (1 to DocStreamSlices).map { i =>
-      s.read.parquet(srcDir.resolve(f"slice-$i%03d.parquet").toString)
-        .select(col("doc_id"), lit(i).as("sl"))
-    }.reduce(_ unionAll _)
-  }
+  private def docSliceAssignment(s: SparkSession, dir: String): DataFrame =
+    StreamScaffold.read(s, docSlices(s, dir))
+      .select(col("doc_id"), col(StreamScaffold.SliceCol).as("sl"))
 
   val queries: Seq[Q] = Seq(
 

@@ -32,8 +32,8 @@ object Bridge {
   }
 
   /** Copy a SMALL result into a self-contained LocalRelation Dataset
-    * without the external-Row round trip. The streaming scaffolds drain
-    * their memory sinks with `collect()` + `createDataFrame(rows,
+    * without the external-Row round trip. The streaming scaffold's sink
+    * drain (StreamScaffold.run) was `collect()` + `createDataFrame(rows,
     * schema)`, which converts every value InternalRow→Row on collect
     * and then re-encodes Row→InternalRow (with per-field validation)
     * on re-creation — measured ~0.4 s for the 13k-row inference gate

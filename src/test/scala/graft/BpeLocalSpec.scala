@@ -83,4 +83,35 @@ class BpeLocalSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     // and the winner must be the UTF-8-smaller symbol, FULLWIDTH !
     local.head._2 shouldBe "！"
   }
+
+  it should "take the local path for an unbounded localVocabMax (no budget overflow)" in {
+    // `chars <= localVocabMax * 40` wrapped negative at Long.MaxValue and
+    // silently forced the distributed path; the local loop runs no Spark
+    // job per merge round, so it must show up as far fewer jobs
+    val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf[T](f: => T): (T, Int) = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      val r = f
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (r, jobs.get)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (local, localJobs) =
+        jobsOf(rows(TextOps.bpeMerges(docs, "text", 12, localVocabMax = Long.MaxValue)))
+      val (dist, distJobs) =
+        jobsOf(rows(TextOps.bpeMerges(docs, "text", 12, localVocabMax = 0)))
+      local should have size 12
+      local shouldBe dist
+      withClue(s"jobs local $localJobs vs distributed $distJobs: ") {
+        localJobs should be < distJobs / 2
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

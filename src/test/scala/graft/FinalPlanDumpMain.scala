@@ -10,6 +10,11 @@ package graft
   * `Test/runMain graft.FinalPlanDumpMain <sfDir> <outDir> <name>...`
   */
 object FinalPlanDumpMain {
+  /** One AQE `+- == Initial Plan ==` header (at any indent) and every
+    * following line indented deeper than it.
+    */
+  private[graft] val InitialPlan = "(?m)^( *)\\+- == Initial Plan ==\\n(?:\\1 {3}.*(?:\\n|$))*".r
+
   def main(args: Array[String]): Unit = {
     graft.queries.StreamScaffold.sweepStale()
     val sfDir = args(0)
@@ -31,9 +36,11 @@ object FinalPlanDumpMain {
       val plan = df.queryExecution.executedPlan.toString
       graft.ops.Release.queryFinished(spark, n)
       java.nio.file.Files.writeString(outDir.resolve(s"$n.txt"), plan)
-      // count join nodes in the FINAL section only (the AQE string
-      // prints "== Final Plan ==" then "== Initial Plan ==")
-      val finalPart = plan.split("== Initial Plan ==").head
+      // count join nodes in the FINAL sections only: every
+      // AdaptiveSparkPlan (the root, each subquery) prints "== Final
+      // Plan ==" then "== Initial Plan ==", so drop each Initial Plan
+      // header with the lines indented under it
+      val finalPart = InitialPlan.replaceAllIn(plan, "")
       val smj = "SortMergeJoin".r.findAllIn(finalPart).size
       val bhj = "BroadcastHashJoin".r.findAllIn(finalPart).size
       val shj = "ShuffledHashJoin".r.findAllIn(finalPart).size

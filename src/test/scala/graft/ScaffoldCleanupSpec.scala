@@ -13,7 +13,8 @@ import java.nio.file.{Files, Path, Paths}
   * the official BENCH_r12 (445.5 s vs a true 247.2 s).
   *
   * Asserted here against the REAL session-stop path: run a cef event
-  * stream and the p50 doc stream, record the scaffold dirs on disk,
+  * stream and the p50 doc stream, record the scaffold dirs on disk (an
+  * events and a documents slice set among them),
   * `spark.stop()`, and require every one gone — then require a fresh
   * session rebuilds cleanly (the slice caches were invalidated, not
   * stranded on dead paths).
@@ -44,8 +45,9 @@ class ScaffoldCleanupSpec extends AnyFlatSpec with Matchers {
     SparkEntry.queries("cef22_streaming")(s1, sfDir).count() should be > 0L
     SparkEntry.queries("p50_dd_stream_neardup")(s1, sfDir).count() should be > 0L
     val live = scaffoldDirs()
-    live.count(_.getFileName.toString.startsWith("graft-stream-src")) should be >= 1
-    live.count(_.getFileName.toString.startsWith("graft-docstream-src")) should be >= 1
+    // one slice set per table, named after it (StreamScaffold.cached)
+    live.count(_.getFileName.toString.startsWith("graft-stream-src-events-")) should be >= 1
+    live.count(_.getFileName.toString.startsWith("graft-stream-src-documents-")) should be >= 1
     s1.stop()
     // the listener bus drains on stop(), but allow a short grace window
     val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
@@ -62,7 +64,7 @@ class ScaffoldCleanupSpec extends AnyFlatSpec with Matchers {
     try {
       SparkEntry.queries("cef22_streaming")(s2, sfDir).count() should be > 0L
       scaffoldDirs().count(
-        _.getFileName.toString.startsWith("graft-stream-src")) should be >= 1
+        _.getFileName.toString.startsWith("graft-stream-src-events-")) should be >= 1
     } finally s2.stop()
   }
 

@@ -40,7 +40,7 @@ object ScaffoldCostMain {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
-    // ---- slice build: same shape as Cef.buildSlices (3 ts-ordered
+    // ---- slice build: same shape as StreamScaffold.slices (3 ts-ordered
     // files with increasing mtimes), built once and reused by every cell
     val srcDir = graft.queries.StreamScaffold.track(spark,
       graft.queries.StreamScaffold.newScaffoldDir("graft-stream-src"))
