@@ -1,6 +1,32 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+
+  sealed trait WarmDir
+  case object Tiny extends WarmDir
+  case object BenchSf extends WarmDir
+
+  /** Every query Bench runs before the timed sweep, with the dir it runs
+    * on. `Tiny` entries run on the sibling sf0.001 and warm the JIT /
+    * codegen / engine init of a machinery-heavy path, so the first timed
+    * query of each family isn't charged for it (cef01 was absorbing the
+    * automaton runtime warm-up, p06 the LSH expression codegen, cef22 the
+    * streaming query plumbing; p24/p26 the fused text-expression codegen
+    * — their cold first run is ~4-5x the steady state, all one-time
+    * JIT/codegen, not data work). `BenchSf` entries run on the bench SF
+    * itself and exist only to build its per-(session, table) slice
+    * scaffolding (cef22 owns the event slices, p120 — the cheapest
+    * doc-stream gate — the document slices). The bench SF's late event
+    * slices (cef40's set) are warmed by `Cef.warmEventSlices`, which
+    * builds the cached slice files and runs no gate. A new entry must be
+    * of one of these two kinds and say why; BenchSpec pins the list.
+    */
+  val WarmUps: Seq[(String, WarmDir)] = Seq(
+    "cef01_seq2_strict" -> Tiny, "p06_dd_minhash_pairs" -> Tiny,
+    "cef22_streaming" -> Tiny, "p24_filter_compose" -> Tiny,
+    "p26_txt_lm_quality" -> Tiny, "p27_dd_dupspans" -> Tiny,
+    "cef22_streaming" -> BenchSf, "p120_src_cusum_stream" -> BenchSf)
+
   def main(args: Array[String]): Unit = {
     // stale streaming-scaffold dirs from crashed earlier JVMs poison the
     // bench (the r12 contamination: ~30 leftover slice dirs uniformly
@@ -23,10 +49,6 @@ object Bench {
     spark.range(1000).selectExpr("sum(id)").collect()
     SparkEntry.entry(spark).count()
     Tables(spark, sfDir, "events").limit(64).collect()
-    // warm the three machinery-heavy paths on the TINY sf so their JIT /
-    // codegen / streaming-engine init isn't charged to the first query of
-    // each family (cef01 was absorbing the automaton runtime warm-up,
-    // p06 the LSH expression codegen, cef22 the streaming query plumbing)
     val warmSf = {
       val sibling = java.nio.file.Paths.get(sfDir).toAbsolutePath.getParent.resolve("sf0.001")
       if (java.nio.file.Files.isDirectory(sibling)) sibling.toString
@@ -35,22 +57,10 @@ object Bench {
         sfDir
       }
     }
-    // p24/p26 warm the fused text-expression codegen (CharBigrams, the
-    // composed cleaning chain) — their cold first run is ~4-5x the
-    // steady state, all in one-time JIT/codegen, not data work
-    for (w <- Seq("cef01_seq2_strict", "p06_dd_minhash_pairs", "cef22_streaming",
-        "p24_filter_compose", "p26_txt_lm_quality", "p27_dd_dupspans"))
+    for ((w, where) <- WarmUps)
       // a failed warm-up costs only warm-up — never the bench JSON
-      try SparkEntry.queries(w)(spark, warmSf).count()
+      try SparkEntry.queries(w)(spark, if (where == Tiny) warmSf else sfDir).count()
       catch { case e: Throwable => System.err.println(s"[bench] warm-up $w: ${e.getMessage}") }
-    // warm the bench SF's sliced streaming sources too: the slice builds
-    // are per-(session, table) scaffolding (memoized), and charging them
-    // to the first timed streaming query of each family would
-    // misattribute ~2s of setup (cef22 owns the event slices, p120 —
-    // the cheapest doc-stream gate — the document slices)
-    for (w <- Seq("cef22_streaming", "p120_src_cusum_stream"))
-      try SparkEntry.queries(w)(spark, sfDir).count()
-      catch { case e: Throwable => System.err.println(s"[bench] warm-up slices $w: ${e.getMessage}") }
     // r17: the LATE slice variant (cef40's out-of-order schedule) is the
     // same class of per-(session, table) scaffolding as the two slice
     // sets above — warm its CACHE only (no gate runs: cef40's own JIT
@@ -59,7 +69,7 @@ object Bench {
     catch { case e: Throwable => System.err.println(s"[bench] warm-up late slices: ${e.getMessage}") }
     // timed queries start from a clean storage slate (the p06 warm-up
     // memoizes a tiny sf0.001 pair table; dropping the cache is safe —
-    // memoized DataFrames recompute from lineage)
+    // a memo entry whose cache is gone is rebuilt on its next lookup)
     spark.sqlContext.clearCache()
     // ---- self-calibration probe (VERDICT r15 Next #2): a fixed seeded
     // local aggregate + small shuffle, timed at sweep start/middle/end,
@@ -84,16 +94,14 @@ object Bench {
     def calibProbe(): Double = (1 to 3).map(_ => calibProbeOnce()).min
     calibProbeOnce() // its own codegen/JIT warm-up is not a box signal
     val calibStart = calibProbe()
-    // sweep boundary for the consumer-registered memos: names finished
-    // before this point (warm-ups) must not count toward release
+    // sweep boundary: the session memo starts cold, so every shared
+    // value is built once inside the timed sweep, by its first consumer
     graft.ops.Release.sweepStart(spark)
     val errors = scala.collection.mutable.ListBuffer.empty[String]
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     var calibMid = 0.0
     val results = ordered.zipWithIndex.map { case ((name, fn), i) =>
       if (i == ordered.size / 2) calibMid = calibProbe()
-      // declare the running query for the memo-consumer registry guard
-      graft.ops.Release.beginQuery(name)
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch {
         case e: Throwable =>
@@ -101,24 +109,21 @@ object Bench {
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
       }
       val elapsed = (System.nanoTime() - t0) / 1e9
-      // deterministic shared-memo release (the r13 p75 incident): each
-      // consumer-registered memo drops when its LAST consumer finishes
-      // — after the timestamp, so eviction cost isn't charged to the
-      // closing consumer's number
-      graft.ops.Release.queryFinished(spark, name)
       // stderr progress (never the JSON contract): lets a stalled sweep
       // be aligned with external monitors without rerunning
       System.err.println(f"[bench] $name%-28s $elapsed%7.2f s")
       name -> elapsed
     }
     val calibEnd = calibProbe()
+    // a number, or a string for a non-numeric master spec such as "*"
+    val cpusJson = if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else "\"" + cpus + "\""
     val calib = f"""{"start":$calibStart%.3f,"mid":$calibMid%.3f,"end":$calibEnd%.3f}"""
     val ok = results.filterNot { case (k, _) => errors.contains(k) }
     val qs = ok.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val errJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = ok.map(_._2).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"calib":$calib,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"calib":$calib,"sf":"$sfDir","cpus":$cpusJson}""")
     // the full per-query line above outgrows the driver's tail capture at
     // 70+ queries — emit a compact per-family subtotal LAST so a truncated
     // capture still parses (same value, families in place of queries; the
@@ -128,7 +133,7 @@ object Bench {
       .toSeq.sortBy(_._1)
       .map { case (f, rs) => s"\"" + f + "\":" + rs.map(_._2).sum }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total_by_family","value":$total,"unit":"sec","queries":$fams,"errors":$errJson,"calib":$calib,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total_by_family","value":$total,"unit":"sec","queries":$fams,"errors":$errJson,"calib":$calib,"sf":"$sfDir","cpus":$cpusJson}""")
     if (errors.nonEmpty) { spark.stop(); sys.exit(1) }
     spark.stop()
   }

@@ -13,9 +13,6 @@ object SoloBench {
     spark.range(1000).selectExpr("sum(id)").collect()
     graft.ops.Release.sweepStart(spark)
     for (n <- names) {
-      // declare the running query for the memo-consumer registry guard
-      // (stays set through the warm reps; queryFinished clears it)
-      graft.ops.Release.beginQuery(n)
       val t0 = System.nanoTime()
       SparkEntry.queries(n)(spark, sfDir).count()
       val cold = (System.nanoTime() - t0) / 1e9
@@ -24,9 +21,6 @@ object SoloBench {
         SparkEntry.queries(n)(spark, sfDir).count()
         (System.nanoTime() - t1) / 1e9
       }
-      // notify AFTER the warm reps: a solo run of a memo's last
-      // consumer should measure the warm path, not a per-rep rebuild
-      graft.ops.Release.queryFinished(spark, n)
       println(f"SOLO $n%-24s cold $cold%8.2f s, warm ${ts.min}%8.2f s")
     }
     spark.stop()

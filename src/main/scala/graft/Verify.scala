@@ -20,23 +20,16 @@ object Verify {
     // local-iteration filter: regex over query names (the driver never
     // sets it, so the driver's gate always dumps the full surface)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    // sorted like Bench's sweep: the consumer-registered memos release
-    // after their lexicographically-last consumer, so an unsorted Map
-    // walk could release one before an earlier-named consumer ran
+    // sorted like Bench's sweep, so runs write their output and log in
+    // one deterministic order
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
       .foreach { case (name, fn) =>
-      // declare the running query so the memo-consumer registry guard
-      // can verify it (an unregistered memo read fails HERE, loudly,
-      // instead of silently paying a cold rebuild in the bench)
-      graft.ops.Release.beginQuery(name)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // deterministic shared-memo release (see Release.afterConsumers)
-      graft.ops.Release.queryFinished(spark, name)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -122,15 +122,17 @@ object Sources {
     * pass for the per-partition offsets, and a broadcast join to add
     * offset + local + 1. Ids are identical to the Window form whenever
     * `ordering` is a total order (ties were arbitrary under the Window
-    * sort too). The sorted input is persisted across the two passes and
-    * released via the idle watcher.
+    * sort too). The sorted, locally-numbered input is an eager
+    * `localCheckpoint()`: the counting pass and the id pass read one
+    * materialization, so a recompute (a re-sampled range partitioning, a
+    * nondeterministic upstream) can never renumber rows between them.
     */
   private def orderedIds(df: DataFrame, idName: String, ordering: Column*): DataFrame = {
     val localMask = (1L << 33) - 1
-    val sorted = graft.ops.Release.afterIdle(
-      df.repartitionByRange(ordering: _*)
-        .sortWithinPartitions(ordering: _*)
-        .withColumn("__mono", monotonically_increasing_id()), 16)
+    val sorted = df.repartitionByRange(ordering: _*)
+      .sortWithinPartitions(ordering: _*)
+      .withColumn("__mono", monotonically_increasing_id())
+      .localCheckpoint()
     val cnts = sorted.groupBy(shiftright(col("__mono"), 33).as("__pid"))
       .agg(count(lit(1)).as("__n"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)

@@ -1,10 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Storage discipline for single-consumer cached intermediates.
+/** Storage discipline for single-consumer cached intermediates, plus the
+  * runners' sweep boundary.
   *
   * A signature table that feeds several joins of ONE query wants to be
   * persisted for that query's duration and released the moment the query
@@ -12,12 +13,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * (at 100 TB a leaked corpus-sized cache is a scale-killer), while
   * unpersisting before the action would recompute the whole chain per
   * consumer. `Dataset.unpersist` has no "when the query is done" hook, so
-  * this helper watches the session's execution listener bus: the first
-  * completed execution whose analyzed plan contains the cached table's
-  * plan as a subtree is, by construction, the consuming query — release
-  * the cache and deregister. A released DataFrame executed again later
-  * silently recomputes from lineage (the same contract the shared
-  * near-dup pair memo pins in PlanSpec).
+  * [[afterFirstUse]] watches the session's execution listener bus: the
+  * first completed execution whose analyzed plan contains the cached
+  * table's plan as a subtree is, by construction, the consuming query —
+  * release the cache and deregister. A released DataFrame executed again
+  * later silently recomputes from lineage.
+  *
+  * Values shared ACROSS queries live in [[SessionMemo]] instead.
   */
 object Release {
 
@@ -31,237 +33,57 @@ object Release {
   val MaxMisses = 64
 
   // live listeners, observable by tests (listenerManager has no size
-  // API). A listener whose session has STOPPED can never fire again —
-  // its bus is dead — so keeping it "live" would leak its captured plan
-  // and cache reference for the JVM's lifetime in a server that cycles
-  // sessions (the same hazard Pipeline's pairCache prunes for its map
-  // keys). Every registration and every count observation reaps them.
+  // API). A listener whose session has STOPPED can never fire again, so
+  // every registration and every count observation reaps them.
   private val live =
     java.util.concurrent.ConcurrentHashMap.newKeySet[WatchedListener]()
 
   def activeListeners: Int = { reapStopped(); live.size }
 
-  /** The registered query name the current runner thread is executing,
-    * declared via [[beginQuery]] by Bench / Verify / SoloBench (and any
-    * sweep-like spec) before invoking the query function and cleared by
-    * the matching [[queryFinished]]. Memo owners consult it to REQUIRE
-    * that every reader of a consumer-registered memo is in the memo's
-    * registered set — the set is what makes the release deterministic,
-    * and an unregistered consumer would find the memo already released
-    * in a sorted sweep and silently pay the cold rebuild in the
-    * official bench (the BENCH_r13 p75 class). Thread-local: concurrent
-    * runner threads in one JVM each see their own query.
-    */
-  private val currentQuery = new ThreadLocal[Option[String]] {
-    override def initialValue(): Option[String] = None
-  }
-
-  /** Declare the query this thread is about to execute. */
-  def beginQuery(name: String): Unit = currentQuery.set(Some(name))
-
-  /** Clear the declaration (runners rarely need it directly — the
-    * matching [[queryFinished]] clears it when the names agree).
-    */
-  def endQuery(): Unit = currentQuery.remove()
-
-  def currentQueryName: Option[String] = currentQuery.get()
-
-  private def reapStopped(): Unit = {
+  private def reapStopped(): Unit =
     live.forEach(w => if (w.spark.sparkContext.isStopped) w.release())
-    finishedNames.keySet.removeIf(_.sparkContext.isStopped)
-  }
 
   /** Persist `df` and unpersist it automatically after the first
     * completed (or failed) execution that consumed it, or after
     * [[MaxMisses]] unrelated executions (whichever comes first).
     */
-  def afterFirstUse(df: DataFrame): DataFrame =
-    watched(df, releaseOnHit = true, idleBudget = MaxMisses)
-
-  /** Persist `df` for MULTIPLE consumers and unpersist it once
-    * `idleBudget` consecutive executions pass without any of them
-    * touching it (each hit resets the countdown). A released DataFrame
-    * executed again later silently recomputes from lineage.
-    *
-    * Prefer [[afterConsumers]] when the consumer set is known: idle
-    * counting rides Spark's ASYNCHRONOUS execution-listener bus, so hit
-    * detection can be delayed or dropped under load and the miss
-    * counter ticks on every unrelated execution — the release point is
-    * nondeterministic across environments (the BENCH_r13 p75 incident:
-    * the pair memo went cold mid-sweep and p75 paid an 11× rebuild).
-    */
-  def afterIdle(df: DataFrame, idleBudget: Int): DataFrame =
-    watched(df, releaseOnHit = false, idleBudget = idleBudget)
-
-  /** Executions a consumer-registered memo survives with NO consumer
-    * touching it before the crash backstop fires. Deliberately far
-    * above any sweep's execution count between two consumers — the
-    * DETERMINISTIC release is [[queryFinished]] after the last
-    * registered consumer; this budget only exists so a server that
-    * never runs the remaining consumers cannot pin the cache forever.
-    */
-  val ConsumerBackstopBudget = 4096
-
-  /** Persist `df` for a KNOWN set of consumer queries and unpersist it
-    * deterministically when the LAST registered consumer reports
-    * completion via [[queryFinished]] — the runner (Bench / Verify /
-    * SoloBench / a test sweep) calls `queryFinished(name)` after each
-    * query's action finishes. Unlike [[afterIdle]] this does not depend
-    * on the async listener bus for the release decision, so the memo's
-    * lifetime is identical in every environment that replays the same
-    * query order. [[ConsumerBackstopBudget]] idle executions remain as
-    * a crash backstop (a partial sweep never notifies the last
-    * consumer). `onRelease` runs exactly once at release — the memo
-    * owner evicts its map entry there so a LATER sweep in the same
-    * session re-persists instead of recomputing per consumer.
-    */
-  def afterConsumers(df: DataFrame, consumers: Set[String],
-      onRelease: () => Unit = () => ()): DataFrame =
-    afterConsumersPending(df, consumers, onRelease).getOrElse(df)
-
-  /** Like [[afterConsumers]] but distinguishes the BORN-RELEASED case:
-    * returns `None` when every registered consumer already reported
-    * completion this sweep — nothing can ever notify again, so the
-    * input is returned to the caller UNPERSISTED (compute from
-    * lineage) and, critically, the caller must NOT memoize it. The old
-    * shape (persist, then release synchronously, then hand the dead
-    * DataFrame back) fired `onRelease` BEFORE the caller could store
-    * its map entry, so the eviction was a no-op and the unpersisted
-    * DataFrame stayed memoized for the session — every later demand
-    * silently recomputed the full chain once per consumer, the exact
-    * cliff this machinery exists to prevent (r14 ADVICE, medium).
-    */
-  def afterConsumersPending(df: DataFrame, consumers: Set[String],
-      onRelease: () => Unit = () => ()): Option[DataFrame] = {
-    require(consumers.nonEmpty, "afterConsumers: empty consumer set")
-    reapStopped()
-    val remaining = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    consumers.foreach(remaining.add)
-    // consumers that ALREADY completed this sweep can never notify
-    // again — prune them now, or a consumer that failed (or ran)
-    // before the memo existed would pin it for the session (its name
-    // would wait in `remaining` forever while the backstop budget is
-    // deliberately sized above a full sweep)
-    Option(finishedNames.get(df.sparkSession))
-      .foreach(f => f.forEach { n => remaining.remove(n); () })
-    if (remaining.isEmpty) return None
-    val cached = df.persist()
-    val listener = new WatchedListener(df.sparkSession, cached,
-      releaseOnHit = false, idleBudget = ConsumerBackstopBudget,
-      remaining = Some(remaining), onRelease = onRelease)
-    live.add(listener)
-    df.sparkSession.listenerManager.register(listener)
-    // close the registration race (r14 ADVICE, low): a
-    // queryFinished(spark, name) on another thread between the prune
-    // snapshot above and live.add records the name but scans `live`
-    // without seeing this listener — the notification is lost and the
-    // memo stays pinned until the execution backstop. Re-reading the
-    // finished set AFTER registration drains any such name;
-    // consumerDone is idempotent and release fires at most once.
-    Option(finishedNames.get(df.sparkSession))
-      .foreach(f => f.forEach { n => listener.consumerDone(n); () })
-    // the re-drain (or a concurrent notification) may have emptied the
-    // set: the listener already released and onRelease already ran, so
-    // handing back the now-unpersisted DataFrame as a live memo would
-    // recreate the born-released defect — report it as such instead
-    if (listener.isReleased) None else Some(cached)
-  }
-
-  /** Names that completed since the session's last [[sweepStart]] —
-    * consulted by [[afterConsumers]] so late-created memos don't wait
-    * on consumers that already ran (or failed) earlier in the sweep.
-    */
-  private val finishedNames =
-    new java.util.concurrent.ConcurrentHashMap[
-      org.apache.spark.sql.SparkSession, java.util.Set[String]]()
-
-  /** Mark the start of a sweep for `spark`: clears the session's
-    * finished-name history so memos built in THIS sweep wait for this
-    * sweep's consumers (a second sweep in one session must not see the
-    * first sweep's completions). Runners call it once, before their
-    * query loop.
-    */
-  def sweepStart(spark: org.apache.spark.sql.SparkSession): Unit = {
-    finishedNames.keySet.removeIf(_.sparkContext.isStopped)
-    finishedNames.remove(spark)
-  }
-
-  /** Runner notification: the registered query `name` finished its
-    * action in `spark`. Every consumer-registered memo OF THAT SESSION
-    * drops `name` from its remaining set; a memo whose set empties
-    * releases NOW, on the runner's thread — deterministic, not
-    * bus-delivered. Unknown names are no-ops, so runners notify
-    * unconditionally for every query. Scoped by session so concurrent
-    * sweeps in one JVM cannot drain each other's memos; two DIRS swept
-    * by ONE session share notifications by design (both memos' last
-    * consumer is the same sweep position).
-    */
-  def queryFinished(spark: org.apache.spark.sql.SparkSession, name: String): Unit = {
-    reapStopped()
-    if (currentQuery.get().contains(name)) currentQuery.remove()
-    finishedNames.computeIfAbsent(spark,
-      _ => java.util.concurrent.ConcurrentHashMap.newKeySet[String]()).add(name)
-    live.forEach(w => if (w.spark eq spark) w.consumerDone(name))
-  }
-
-  /** Session-blind variant: notifies every live listener and records
-    * nothing. For drain/cleanup paths (tests) that just want any
-    * consumer-registered memo of any session released.
-    */
-  def queryFinished(name: String): Unit = {
-    reapStopped()
-    if (currentQuery.get().contains(name)) currentQuery.remove()
-    live.forEach(_.consumerDone(name))
-  }
-
-  private def watched(df: DataFrame, releaseOnHit: Boolean, idleBudget: Int): DataFrame = {
+  def afterFirstUse(df: DataFrame): DataFrame = {
     reapStopped()
     val cached = df.persist()
-    val listener = new WatchedListener(df.sparkSession, cached, releaseOnHit, idleBudget)
+    val listener = new WatchedListener(df.sparkSession, cached)
     live.add(listener)
     df.sparkSession.listenerManager.register(listener)
     cached
   }
 
-  private final class WatchedListener(
-      val spark: org.apache.spark.sql.SparkSession,
-      cached: DataFrame,
-      releaseOnHit: Boolean,
-      idleBudget: Int,
-      remaining: Option[java.util.Set[String]] = None,
-      onRelease: () => Unit = () => ()) extends QueryExecutionListener {
+  /** Mark the start of a sweep for `spark`: drops the session's
+    * [[SessionMemo]] entries, so every sweep builds each shared value
+    * once, from cold. Runners call it once, before their query loop.
+    */
+  def sweepStart(spark: SparkSession): Unit = SessionMemo.dropSession(spark)
+
+  /** No-ops: shared values no longer depend on which query runs. Kept
+    * as signatures for sweep loops built against the older API.
+    */
+  def beginQuery(name: String): Unit = ()
+  def queryFinished(spark: SparkSession, name: String): Unit = ()
+
+  private final class WatchedListener(val spark: SparkSession, cached: DataFrame)
+      extends QueryExecutionListener {
     private val target = cached.queryExecution.analyzed
     private val misses = new java.util.concurrent.atomic.AtomicInteger(0)
     private val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def isReleased: Boolean = done.get()
     def release(): Unit =
       if (done.compareAndSet(false, true)) {
         // on a stopped session both calls are dead-context cleanup —
         // failure must not keep the listener in the live set
         try cached.unpersist(false) catch { case _: Exception => () }
         try spark.listenerManager.unregister(this) catch { case _: Exception => () }
-        try onRelease() catch { case _: Exception => () }
         live.remove(this)
       }
-    /** Deterministic path: drop `name` from the registered consumer
-      * set; release when the last one completes. No-op for idle-only
-      * listeners and unknown names.
-      */
-    def consumerDone(name: String): Unit = remaining.foreach { r =>
-      if (r.remove(name) && r.isEmpty) release()
-    }
     private def maybeRelease(qe: QueryExecution): Unit =
-      // consumer-registered listeners don't plan-match: their release is
-      // queryFinished (runner thread), and the crash backstop only needs
-      // an execution COUNT — walking every execution's analyzed plan
-      // with sameResult for the whole sweep would be pure bus overhead
-      // (hits may legitimately tick the counter; the budget is sized so
-      // only an abandoned memo ever reaches it)
-      if (remaining.isDefined) {
-        if (misses.incrementAndGet() >= idleBudget) release()
-      } else if (qe.analyzed.exists(_.sameResult(target))) {
-        if (releaseOnHit) release() else misses.set(0)
-      } else if (misses.incrementAndGet() >= idleBudget) release()
+      if (qe.analyzed.exists(_.sameResult(target)) || misses.incrementAndGet() >= MaxMisses)
+        release()
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
       maybeRelease(qe)
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =

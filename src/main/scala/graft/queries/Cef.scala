@@ -80,25 +80,19 @@ object Cef {
       idCol = "event_id", typeCol = "event_type", tsCol = "ts",
       partitionCol = "user_id", numAttrs = Seq("value", "k"))
 
-  /** Trained-model memo ([[graft.ops.ModelMemo]]): nine cef queries
-    * train the IDENTICAL order-2 SPST over `dir`/events
-    * (cef11/12/26/27/29/30 and the streaming trio cef33/38/39), and
-    * cef32/cef41 share the time-windowed SPSTm — in a Bench sweep that
-    * was nine copies of the same distributed n-gram aggregation for one
-    * KB-sized driver-side model.
+  /** The shared order-2 skip-any SPST: nine cef queries train the
+    * IDENTICAL model over `dir`/events (cef11/12/26/27/29/30 and the
+    * streaming trio cef33/38/39) — in a Bench sweep that was nine copies
+    * of the same distributed n-gram aggregation for one KB-sized
+    * driver-side model, so it is a [[graft.ops.SessionMemo]] model.
     */
-  private def cachedModel[T <: AnyRef](
-      s: SparkSession, dir: String, kind: String)(train: => T): T =
-    graft.ops.ModelMemo.cached(s, dir, kind)(train)
-
-  /** The shared order-2 skip-any SPST (cef11/12/26/27/29/30/33/38/39). */
   private def spstSkipAny(s: SparkSession, dir: String): graft.cef.Spst =
-    cachedModel(s, dir, "spst-skipany-o2")(
+    graft.ops.SessionMemo.model(s, dir, "spst-skipany-o2")(
       Train.learnSpst(events(s, dir), pSkipAny, order = 2))
 
-  /** The shared time-windowed SPSTm (cef32/cef41). */
+  /** The shared time-windowed SPSTm (cef32/cef41), memoized likewise. */
   private def spstmTime(s: SparkSession, dir: String): graft.cef.SpstM =
-    cachedModel(s, dir, "spstm-time-o2")(
+    graft.ops.SessionMemo.model(s, dir, "spstm-time-o2")(
       Train.learnSpstm(events(s, dir), pSremoTime, order = 2,
         grid = SpstmTimeOracle.GridMicros))
 
@@ -2007,7 +2001,7 @@ object Cef {
     * derived from the base files by [[lateShift]] (slice file i IS the
     * ntile result i), not by a second global sort of the table.
     */
-  private[queries] def eventSlices(s: SparkSession, dir: String, late: Boolean): StreamScaffold.SliceSet = {
+  private[graft] def eventSlices(s: SparkSession, dir: String, late: Boolean): StreamScaffold.SliceSet = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = java.nio.file.Paths.get(s"$dir/events.parquet")
       .toAbsolutePath.normalize.toString

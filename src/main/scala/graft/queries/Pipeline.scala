@@ -30,12 +30,12 @@ object Pipeline {
     * distributed learning per sweep; p48's ADAPTIVE path deliberately
     * relearns, because batched≡sequential on real data is its claim).
     * Driver-side rows, model-sized, deterministic in (documents table,
-    * col, steps) — memoized per (application, dir) via
-    * [[graft.ops.ModelMemo]], exactly like Cef's trained SPSTs.
+    * col, steps) — a [[graft.ops.SessionMemo]] model per (session, dir),
+    * exactly like Cef's trained SPSTs.
     */
   private def bpeMergeRows(
       s: SparkSession, dir: String): Seq[(Long, String, String, String, Long)] =
-    graft.ops.ModelMemo.cached(s, dir, s"bpe-merges-$BpeSteps")(
+    graft.ops.SessionMemo.model(s, dir, s"bpe-merges-$BpeSteps")(
       TextOps.bpeMerges(t(s, dir, "documents"), "text", BpeSteps)
         .orderBy(col("step")).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2),
@@ -44,11 +44,11 @@ object Pipeline {
   /** Shared perceptron weight trajectory (p55/p73/p96 each ran the
     * identical [[PerceptronEpochs]]-epoch driver loop — one persisted
     * corpus pass per epoch — over the same feature table). Epochs × 6
-    * integers; [[graft.ops.ModelMemo]] discipline.
+    * integers; a [[graft.ops.SessionMemo]] model.
     */
   private def perceptronRows(
       s: SparkSession, dir: String): Seq[(Int, Long, Long, Long, Long, Long)] =
-    graft.ops.ModelMemo.cached(s, dir, s"perceptron-$PerceptronEpochs")(
+    graft.ops.SessionMemo.model(s, dir, s"perceptron-$PerceptronEpochs")(
       graft.ops.ClassifierOps
         .perceptronEpochs(s, perceptronFeats(s, dir), PerceptronEpochs)
         .orderBy(col("epoch")).collect()
@@ -61,173 +61,58 @@ object Pipeline {
     perceptronRows(s, dir).toDF("epoch", "w0", "w1", "w2", "w3", "n_mis")
   }
 
-  /** Shared ≥0.9 near-dup pair set (p06/p15). Spark side: signatures
-    * persisted (explode + two candidate joins — at real scale a
-    * materialized signature table); hashes sorted once per doc so pair
-    * verification is a two-pointer merge; no forced broadcast (the
-    * signature table scales with the corpus, AQE picks broadcast at
-    * small SF on its own).
+  /** Shared ≥0.9 near-dup pair set. Spark side: signatures persisted
+    * (explode + two candidate joins — at real scale a materialized
+    * signature table, released after the memo's materialization);
+    * hashes sorted once per doc so pair verification is a two-pointer
+    * merge; no forced broadcast (the signature table scales with the
+    * corpus, AQE picks broadcast at small SF on its own).
     *
-    * The materialized pair table is memoized per (session, dir): a dedup
-    * pipeline materializes it once and EVERY consumer (p06's pair
-    * query, p15's grouping, p51's leakage-safe split, p75's canonical
-    * keep, p97/p107/p119's audits) shares it — recomputing the whole
-    * LSH chain per query would multiply the dominant cost by the
-    * consumer count. It is a PERSISTED DataFrame (not a
-    * lineage-truncated checkpoint) released DETERMINISTICALLY when the
-    * last registered consumer reports completion
-    * ([[graft.ops.Release.afterConsumers]] — see [[PairConsumers]]); a
-    * stale pair DataFrame executed after the release silently
-    * recomputes from lineage instead of failing on missing checkpoint
-    * blocks.
+    * The pair table is a [[graft.ops.SessionMemo]] frame per (session,
+    * dir): a dedup pipeline materializes it once and EVERY consumer
+    * (p06's pair query, p15's grouping, p51's leakage-safe split, p75's
+    * canonical keep, p97/p107/p119's audits) shares it — recomputing the
+    * whole LSH chain per query would multiply the dominant cost by the
+    * consumer count.
     */
-  private val pairCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  /** Registered consumer sets for the four session memos. The memo
-    * releases when the LAST listed query reports completion via
-    * [[graft.ops.Release.queryFinished]] — which Bench / Verify /
-    * SoloBench call after every query's action — instead of riding the
-    * async idle-count heuristic whose nondeterministic release let the
-    * pair memo go cold mid-sweep in the official BENCH_r13 (p75 paid
-    * an 11× cold rebuild: 18.8 s vs a true 1.75 s). On release the
-    * memo's map entry is evicted too, so a LATER sweep in the same
-    * session re-builds and re-persists instead of recomputing from
-    * lineage once per consumer.
-    * `Release.ConsumerBackstopBudget` idle executions remain as the
-    * crash backstop for partial sweeps that never run the last
-    * consumer. MemoLifetimeSpec replays the sorted sweep order of each
-    * set and pins warm-through-last-consumer + release-after.
-    */
-  private[graft] val PairConsumers: Set[String] = Set(
-    "p06_dd_minhash_pairs", "p107_split_leakage_rate",
-    "p119_dd_edit_verify", "p15_dd_neardup_groups",
-    "p51_split_leakage_safe", "p75_dd_canonical", "p97_dd_source_matrix")
-
-  private[graft] val GraphConsumers: Set[String] = Set(
-    "p67_sim_cluster_stats", "p83_graph_pagerank", "p84_graph_kcore",
-    "p85_graph_walks", "p86_graph_triangles")
-
-  private[graft] val WcConsumers: Set[String] = Set(
-    "p100_corpus_health", "p102_txt_simpson", "p104_txt_zipf_ranks",
-    "p122_txt_good_turing", "p88_txt_word_lift", "p94_txt_hapax_tail")
-
-  private[graft] val CalibConsumers: Set[String] = Set(
-    "p106_dd_bbit_minhash", "p69_dd_minhash_calibration",
-    "p89_dd_threshold_sweep")
-
-  /** Drop `key` from `cache` iff it still holds exactly the released
-    * DataFrame — a backstop release racing a rebuilt entry must not
-    * evict the fresh one. (`Release.afterConsumers` returns its input
-    * persisted in place, so identity comparison with the DataFrame the
-    * creation block built is exact.)
-    */
-  /** ONE monitor guards all four memo maps: a release callback fired
-    * from inside another memo's creation (Release.reapStopped reaping a
-    * stopped session mid-registration) then locks the SAME monitor the
-    * caller already holds — reentrant, never the ABBA ordering two
-    * per-map monitors would allow across threads of a multi-session
-    * server.
-    */
-  private val memoLock = new Object
-
-  private def evictOnRelease(
-      cache: scala.collection.mutable.Map[(SparkSession, String), DataFrame],
-      key: (SparkSession, String), released: DataFrame): Unit =
-    memoLock.synchronized {
-      cache.get(key).foreach(v => if (v eq released) cache.remove(key))
+  private def nearDupPairs(s: SparkSession, dir: String): DataFrame =
+    graft.ops.SessionMemo.frame(s, dir, "near-dup-pairs") {
+      // examined r16: fanning the signature scan out (tw) measured the
+      // cold build 3.2 → 8.4 s — the downstream band self-join and the
+      // two hash join-backs lose their tiny-side broadcasts once the
+      // cached signature table is 32 partitions. The one-task signature
+      // pass is cheaper than what wider inputs cost the joins; left as-is.
+      // Re-examined r17: tw + repartition(1) before the persist (parallel
+      // sig pass, downstream joins keep the single-partition cached
+      // shape) measured cold 6.3 → 6.5-7.0 s solo — the build cost is the
+      // self-join chain, not the tokenize+minhash pass; reverted.
+      val sigs = graft.ops.Release.afterFirstUse(t(s, dir, "documents")
+        .select(col("doc_id"), sort_array(tokenHashes(col("text"))).as("hashes"))
+        .withColumn("bands", bandKeys(minHashSig(col("hashes")), PairBands)))
+      val exploded = saltedBands(sigs, "doc_id")
+      val cand = exploded.as("a")
+        .join(exploded.as("b"),
+          col("a.key") === col("b.key") && col("a.band") === col("b.band")
+            && col("a.salt") === col("b.salt") && col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+        .distinct()
+      cand
+        .join(sigs.select(col("doc_id").as("id_a"), col("hashes").as("ha")), "id_a")
+        .join(sigs.select(col("doc_id").as("id_b"), col("hashes").as("hb")), "id_b")
+        .withColumn("jaccard",
+          org.apache.spark.sql.graftexpr.VectorExprs.jaccardSortedSim(col("ha"), col("hb")))
+        .filter(col("jaccard") >= 0.9)
+        .select(col("id_a"), col("id_b"), col("jaccard"))
     }
 
-  /** Structural guard for the consumer registries (the one door left
-    * open after r14): the registered sets are what make the memo
-    * release deterministic, and they are hand-maintained — a future
-    * query that reads a memo WITHOUT being added to its set would find
-    * the memo already released in a sorted sweep (its name never
-    * notifies) and silently pay the full cold rebuild in the official
-    * bench while every test stays green (the BENCH_r13 p75 class).
-    * Runners (Bench / Verify / SoloBench, and sweep-like specs) declare
-    * the demanding query via [[graft.ops.Release.beginQuery]]; this
-    * guard turns the unregistered read into a LOUD correctness-gate
-    * failure at plan-construction time. Outside a runner no name is
-    * declared and no sweep is at stake — the guard skips.
+  /** Shared symmetric mutual-kNN edge list (p67/p83/p84/p85/p86): p60's
+    * exact salted-LSH top-k chain, mutuality-filtered, emitted once per
+    * direction. A [[graft.ops.SessionMemo]] frame like the near-dup pair
+    * table, so the LSH chain (the dominant cost) runs once per sweep,
+    * not once per consumer.
     */
-  private def requireRegistered(memo: String, consumers: Set[String]): Unit =
-    graft.ops.Release.currentQueryName.foreach { q =>
-      require(consumers.contains(q),
-        s"query '$q' reads the $memo memo but is not in its registered consumer set — " +
-          s"add it to the set in Pipeline.scala (and to MemoLifetimeSpec's sweep), or in a " +
-          s"sorted sweep the memo releases before '$q' runs and it pays the cold rebuild")
-    }
-
-  /** Memoize-or-build for the four session memos: an existing live
-    * entry wins; otherwise `build` runs and returns (df, memoize) —
-    * the df is stored ONLY when the release machinery reported a
-    * pending (not born-released) memo. A born-released DataFrame is
-    * unpersisted and must compute from lineage, never sit in the map
-    * masquerading as a memo where every later demand would silently
-    * recompute the full chain once per consumer (r14 ADVICE, medium).
-    * All under [[memoLock]], which [[evictOnRelease]] also takes, so a
-    * concurrent release cannot interleave between the build and the
-    * put.
-    */
-  private def memoized(
-      cache: scala.collection.mutable.Map[(SparkSession, String), DataFrame],
-      key: (SparkSession, String))(build: => (DataFrame, Boolean)): DataFrame =
-    memoLock.synchronized {
-      // drop entries pinned to stopped sessions so a long-lived server
-      // cycling sessions can't accumulate them (a WeakHashMap would not
-      // work here: the cached DataFrame strongly references its session,
-      // so a weak key could never be collected anyway)
-      cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      cache.get(key).getOrElse {
-        val (df, memoize) = build
-        if (memoize) cache.put(key, df)
-        df
-      }
-    }
-
-  /** Test hook (MemoLifetimeSpec): whether the named memo ("pair",
-    * "graph", "wc", "calib") holds a still-PERSISTED entry for
-    * (s, dir). Released-and-evicted and never-built both read false.
-    */
-  private def memoMap(which: String) = which match {
-    case "pair"  => pairCache
-    case "graph" => graphCache
-    case "wc"    => wordCountCache
-    case "calib" => calibCache
-  }
-
-  private[graft] def memoLive(which: String, s: SparkSession, dir: String): Boolean =
-    memoLock.synchronized(memoMap(which).get((s, dir)))
-      .exists(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-
-  /** Test hook: whether the named memo map holds ANY entry for (s, dir)
-    * — live or dead. `memoEntryExists && !memoLive` is exactly the
-    * born-released defect shape (an unpersisted DataFrame masquerading
-    * as a memo, silently recomputing per consumer); MemoLifetimeSpec
-    * pins that it can no longer occur.
-    */
-  private[graft] def memoEntryExists(which: String, s: SparkSession, dir: String): Boolean =
-    memoLock.synchronized(memoMap(which).contains((s, dir)))
-
-  private def nearDupPairs(s: SparkSession, dir: String): DataFrame = {
-    requireRegistered("near-dup pair", PairConsumers)
-    memoized(pairCache, (s, dir))(nearDupPairsUncached(s, dir))
-  }
-
-  /** Shared symmetric mutual-kNN edge list (p83/p84): p60's exact
-    * salted-LSH top-k chain, mutuality-filtered, emitted once per
-    * direction. Memoized per (session, dir) like the near-dup pair
-    * table — the graph family's queries are adjacent in a sorted
-    * sweep, so one idle-released persist serves them all and the LSH
-    * chain (the dominant cost) runs once, not once per consumer.
-    */
-  private val graphCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  private def mutualEdges(s: SparkSession, dir: String): DataFrame = {
-    requireRegistered("mutual-kNN edge", GraphConsumers)
-    memoized(graphCache, (s, dir)) {
+  private def mutualEdges(s: SparkSession, dir: String): DataFrame =
+    graft.ops.SessionMemo.frame(s, dir, "mutual-knn-edges") {
       val e = SimilarityOps.lshTopKSalted(t(s, dir, "embeddings"), KnnK)
         .select(col("query_id").as("vec_id"), col("neighbor_id").as("nn_id"))
       val rev = e.select(col("vec_id").as("r_vec"), col("nn_id").as("r_nn"))
@@ -235,120 +120,82 @@ object Pipeline {
         .join(rev, col("r_vec") === col("nn_id") && col("r_nn") === col("vec_id"))
         .filter(col("vec_id") < col("nn_id"))
         .select(col("vec_id").as("a"), col("nn_id").as("b"))
-      val sym = mut.union(mut.select(col("b").as("a"), col("a").as("b")))
-      graft.ops.Release.afterConsumersPending(sym, GraphConsumers,
-        () => evictOnRelease(graphCache, (s, dir), sym)) match {
-        case Some(memo) => (memo, true)
-        case None => (sym, false)
-      }
+      mut.union(mut.select(col("b").as("a"), col("a").as("b")))
     }
-  }
 
   /** Shared per-(source, word) token count table — the corpus explode
-    * every text audit starts from. Five registered audits reduce it
-    * differently (p88 lift, p94 hapax tail, p100 health report, p102
-    * Simpson, p104 Zipf), so in a sweep the ONE corpus explode+agg —
-    * the dominant cost of each — runs once and the memo serves them
-    * all. The cached table is vocabulary-bounded (|sources| × |vocab|
-    * rows, corpus-size-independent), which is what makes it cacheable
-    * at 100 TB where the corpus itself is not. Memoized per (session,
-    * dir) with deterministic last-consumer release ([[WcConsumers]]);
-    * a released DataFrame recomputes from lineage.
+    * every text audit starts from. Six audits reduce it differently (p88
+    * lift, p94 hapax tail, p100 health report, p102 Simpson, p104 Zipf,
+    * p122 Good-Turing), so in a sweep the ONE corpus explode+agg — the
+    * dominant cost of each — runs once and the memo serves them all. The
+    * cached table is vocabulary-bounded (|sources| × |vocab| rows,
+    * corpus-size-independent), which is what makes it cacheable at
+    * 100 TB where the corpus itself is not. A [[graft.ops.SessionMemo]]
+    * frame per (session, dir).
     */
-  private val wordCountCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  private def sourceWordCounts(s: SparkSession, dir: String): DataFrame = {
-    requireRegistered("(source, word) count", WcConsumers)
-    memoized(wordCountCache, (s, dir)) {
-      val wc = t(s, dir, "documents")
+  private def sourceWordCounts(s: SparkSession, dir: String): DataFrame =
+    graft.ops.SessionMemo.frame(s, dir, "source-word-counts")(
+      t(s, dir, "documents")
         .select(col("source"), explode(tokens(col("text"))).as("word"))
-        .groupBy(col("source"), col("word")).agg(count(lit(1)).as("c"))
-      graft.ops.Release.afterConsumersPending(wc, WcConsumers,
-        () => evictOnRelease(wordCountCache, (s, dir), wc)) match {
-        case Some(memo) => (memo, true)
-        case None => (wc, false)
-      }
-    }
-  }
+        .groupBy(col("source"), col("word")).agg(count(lit(1)).as("c")))
 
-  /** Shared SAMPLED calibration pair table (p69's decile audit and
-    * p89's threshold-yield sweep): 1-in-CalibDocMod documents enter the
-    * recall-leaning NnBands salted band join, 1-in-CalibSampleMod of
-    * the surviving candidate pairs are kept, and each kept pair carries
-    * its exact quantized Jaccard plus the MinHash-signature estimate.
-    * Memoized per (session, dir) like the near-dup pair memo — both
-    * consumers are audit queries over the SAME sampled population, so
-    * one idle-released persist serves them and the band join (the
-    * dominant cost) runs once. Sampled semantics are part of the
-    * registered contract (both oracles restate the same predicates);
-    * the sample hashes are deterministic functions of (id, seed).
+  /** Shared SAMPLED calibration pair table (p69's decile audit, p89's
+    * threshold-yield sweep and p106's b-bit audit): 1-in-CalibDocMod
+    * documents enter the recall-leaning NnBands salted band join,
+    * 1-in-CalibSampleMod of the surviving candidate pairs are kept, and
+    * each kept pair carries its exact quantized Jaccard plus the
+    * MinHash-signature estimate. A [[graft.ops.SessionMemo]] frame like
+    * the near-dup pair memo — the consumers audit the SAME sampled
+    * population, so the band join (the dominant cost) runs once. Sampled
+    * semantics are part of the registered contract (the oracles restate
+    * the same predicates); the sample hashes are deterministic functions
+    * of (id, seed).
     */
-  private val calibCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  private def calibPairs(s: SparkSession, dir: String): DataFrame = {
-    requireRegistered("calibration pair", CalibConsumers)
-    memoized(calibCache, (s, dir)) {
-      {
-        // one signature table feeds the band explode and both join-backs;
-        // the doc-sample predicate runs in the scan stage — dropped docs
-        // never pay for signatures
-        val sh = t(s, dir, "documents")
-          .filter(pmod(
-            TextOps.polyHash(concat(col("doc_id").cast("string"), lit("#graft-calib-9"))),
-            lit(CalibDocMod.toLong)) === 0)
-          .select(col("doc_id"), TextOps.tokenHashes(col("text")).as("hs"))
-          .withColumn("sig", DedupOps.minHashSig(col("hs")))
-          .withColumn("bands", DedupOps.bandKeys(col("sig"), DedupOps.NnBands))
-          .persist()
-        val exploded = DedupOps.saltedBands(sh, "doc_id")
-        val cand = exploded.as("x")
-          .join(exploded.as("y"),
-            col("x.key") === col("y.key") && col("x.band") === col("y.band")
-              && col("x.salt") === col("y.salt") && col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-          // ids are reduced mod p BEFORE the multiply (r10 advice): the
-          // raw product overflows int64 for ids beyond ~9·10¹², where
-          // Spark wraps silently but DuckDB errors — reduced, the product
-          // is bounded by p·1000003 ≈ 10¹⁵ on both engines
-          .filter(expr(
-            s"(((id_a % 1000000007) * 1000003 + (id_b % 1000000007) * 31 + 7)" +
-              s" % 1000000007) % $CalibSampleMod = 0"))
-          .distinct()
-        val pairs = cand
-          .join(sh.select(col("doc_id").as("id_a"), col("hs").as("ha"), col("sig").as("sa")),
-            "id_a")
-          .join(sh.select(col("doc_id").as("id_b"), col("hs").as("hb"), col("sig").as("sb")),
-            "id_b")
-          .withColumn("inter", size(array_intersect(col("ha"), col("hb"))).cast("long"))
-          .withColumn("uni",
-            size(col("ha")).cast("long") + size(col("hb")).cast("long") - col("inter"))
-          .withColumn("jacc_q", expr("(inter * 1000000) div greatest(uni, 1)"))
-          .withColumn("matches", expr(
-            s"aggregate(zip_with(sa, sb, (x, y) -> IF(x = y, 1L, 0L)), 0L, (a, x) -> a + x)"))
-          .withColumn("est_q", col("matches") * 15625L)
-          // b=1 lowest-bit agreement (p106): E[agree] = (1+J)/2, so the
-          // unbiased estimate is 2·m/k − 1 — ×10⁶: m·2·(10⁶/k) − 10⁶
-          .withColumn("m1", expr(
-            s"aggregate(zip_with(sa, sb, (x, y) -> IF(x % 2 = y % 2, 1L, 0L)), 0L, (a, x) -> a + x)"))
-          .withColumn("bit1_q", col("m1") * 31250L - 1000000L)
-          .select(col("id_a"), col("id_b"), col("jacc_q"), col("est_q"), col("bit1_q"))
-        graft.ops.Release.afterConsumersPending(pairs, CalibConsumers,
-          () => evictOnRelease(calibCache, (s, dir), pairs)) match {
-          case Some(memo) =>
-            memo.count()
-            sh.unpersist()
-            (memo, true)
-          case None =>
-            // born released: skip the eager materialization too — the
-            // demand that triggered this build computes from lineage
-            sh.unpersist()
-            (pairs, false)
-        }
-      }
+  private def calibPairs(s: SparkSession, dir: String): DataFrame =
+    graft.ops.SessionMemo.frame(s, dir, "calibration-pairs") {
+      // one signature table feeds the band explode and both join-backs;
+      // the doc-sample predicate runs in the scan stage — dropped docs
+      // never pay for signatures
+      val sh = graft.ops.Release.afterFirstUse(t(s, dir, "documents")
+        .filter(pmod(
+          TextOps.polyHash(concat(col("doc_id").cast("string"), lit("#graft-calib-9"))),
+          lit(CalibDocMod.toLong)) === 0)
+        .select(col("doc_id"), TextOps.tokenHashes(col("text")).as("hs"))
+        .withColumn("sig", DedupOps.minHashSig(col("hs")))
+        .withColumn("bands", DedupOps.bandKeys(col("sig"), DedupOps.NnBands)))
+      val exploded = DedupOps.saltedBands(sh, "doc_id")
+      val cand = exploded.as("x")
+        .join(exploded.as("y"),
+          col("x.key") === col("y.key") && col("x.band") === col("y.band")
+            && col("x.salt") === col("y.salt") && col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
+        // ids are reduced mod p BEFORE the multiply (r10 advice): the
+        // raw product overflows int64 for ids beyond ~9·10¹², where
+        // Spark wraps silently but DuckDB errors — reduced, the product
+        // is bounded by p·1000003 ≈ 10¹⁵ on both engines
+        .filter(expr(
+          s"(((id_a % 1000000007) * 1000003 + (id_b % 1000000007) * 31 + 7)" +
+            s" % 1000000007) % $CalibSampleMod = 0"))
+        .distinct()
+      cand
+        .join(sh.select(col("doc_id").as("id_a"), col("hs").as("ha"), col("sig").as("sa")),
+          "id_a")
+        .join(sh.select(col("doc_id").as("id_b"), col("hs").as("hb"), col("sig").as("sb")),
+          "id_b")
+        .withColumn("inter", size(array_intersect(col("ha"), col("hb"))).cast("long"))
+        .withColumn("uni",
+          size(col("ha")).cast("long") + size(col("hb")).cast("long") - col("inter"))
+        .withColumn("jacc_q", expr("(inter * 1000000) div greatest(uni, 1)"))
+        .withColumn("matches", expr(
+          s"aggregate(zip_with(sa, sb, (x, y) -> IF(x = y, 1L, 0L)), 0L, (a, x) -> a + x)"))
+        .withColumn("est_q", col("matches") * 15625L)
+        // b=1 lowest-bit agreement (p106): E[agree] = (1+J)/2, so the
+        // unbiased estimate is 2·m/k − 1 — ×10⁶: m·2·(10⁶/k) − 10⁶
+        .withColumn("m1", expr(
+          s"aggregate(zip_with(sa, sb, (x, y) -> IF(x % 2 = y % 2, 1L, 0L)), 0L, (a, x) -> a + x)"))
+        .withColumn("bit1_q", col("m1") * 31250L - 1000000L)
+        .select(col("id_a"), col("id_b"), col("jacc_q"), col("est_q"), col("bit1_q"))
     }
-  }
 
   /** DuckDB twin of [[calibPairs]] ending at `pe(id_a, id_b, jacc_q,
     * est_q)` — shared verbatim by the p69 and p89 oracles so the two
@@ -387,50 +234,6 @@ object Pipeline {
        |                               i -> a.sig[i + 1] % 2 = b.sig[i + 1] % 2)) AS m1
        |        FROM cand JOIN sh a ON a.doc_id = id_a JOIN sh b ON b.doc_id = id_b))"""
       .stripMargin
-  }
-
-  private def nearDupPairsUncached(s: SparkSession, dir: String): (DataFrame, Boolean) = {
-    // examined r16: fanning the signature scan out (tw) measured the
-    // cold build 3.2 → 8.4 s — the downstream band self-join and the
-    // two hash join-backs lose their tiny-side broadcasts once the
-    // cached signature table is 32 partitions. The one-task signature
-    // pass is cheaper than what wider inputs cost the joins; left as-is.
-    // Re-examined r17: tw + repartition(1) before the persist (parallel
-    // sig pass, downstream joins keep the single-partition cached
-    // shape) measured cold 6.3 → 6.5-7.0 s solo — the build cost is the
-    // self-join chain, not the tokenize+minhash pass; reverted.
-    val sigs = t(s, dir, "documents")
-      .select(col("doc_id"), sort_array(tokenHashes(col("text"))).as("hashes"))
-      .withColumn("bands", bandKeys(minHashSig(col("hashes")), PairBands))
-      .persist()
-    val exploded = saltedBands(sigs, "doc_id")
-    val cand = exploded.as("a")
-      .join(exploded.as("b"),
-        col("a.key") === col("b.key") && col("a.band") === col("b.band")
-          && col("a.salt") === col("b.salt") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    val pairs = cand
-      .join(sigs.select(col("doc_id").as("id_a"), col("hashes").as("ha")), "id_a")
-      .join(sigs.select(col("doc_id").as("id_b"), col("hashes").as("hb")), "id_b")
-      .withColumn("jaccard",
-        org.apache.spark.sql.graftexpr.VectorExprs.jaccardSortedSim(col("ha"), col("hb")))
-      .filter(col("jaccard") >= 0.9)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    graft.ops.Release.afterConsumersPending(pairs, PairConsumers,
-      () => evictOnRelease(pairCache, (s, dir), pairs)) match {
-      case Some(memo) =>
-        // materialize eagerly (reading the cached signatures three times)
-        // so the sigs cache can be RELEASED here instead of pinning
-        // executor storage for the session (p06, p15 and p51 all consume
-        // the memo)
-        memo.count()
-        sigs.unpersist()
-        (memo, true)
-      case None =>
-        sigs.unpersist()
-        (pairs, false)
-    }
   }
 
   /** DuckDB twin ending at `prs(id_a, id_b, jaccard)`. */
@@ -805,9 +608,9 @@ object Pipeline {
       // (the checkpoint's one-node plan is what keeps rounds cheap). It
       // is created from the cache in one pass, owned solely by this
       // query, and released the moment grouping materializes; the shared
-      // memo stays warm for later consumers (p51) and auto-releases on
-      // idleness — a stale pair DataFrame simply recomputes from
-      // lineage (PlanSpec pins that interleaving).
+      // memo stays warm for later consumers (p51) — a stale pair
+      // DataFrame simply recomputes from lineage (PlanSpec pins that
+      // interleaving).
       val prsCp = nearDupPairs(s, dir).localCheckpoint(true)
       val grouped = DedupOps.neardupGroups(
         t(s, dir, "documents"), "doc_id", prsCp, "id_a", "id_b")
@@ -3066,8 +2869,8 @@ object Pipeline {
          |FROM mem m JOIN ec USING (grp) ORDER BY group_id""".stripMargin
     }) { (s, dir) =>
       // r16: p67's edge build was the SAME lshTopKSalted + mutual-join
-      // chain mutualEdges memoizes for p83–p86 — one more registered
-      // consumer shares the one build per sweep instead of repeating
+      // chain mutualEdges memoizes for p83–p86 — one more consumer
+      // shares the one build per sweep instead of repeating
       // the dominant LSH cost. sym = mut ∪ reverse(mut), so filtering
       // a < b recovers exactly the one-direction mutual pair list the
       // query used before (oracle unchanged).
@@ -6501,9 +6304,7 @@ object Pipeline {
 
   /** Graph-family (p83/p84) geometry: PageRank iteration count, the
     * ×10¹² integer rank scale, the 85/100 damping rational, the k-core
-    * threshold and peel-round bound, and the shared edge memo's idle
-    * budget (p83 and p84 are adjacent in a sorted sweep; 128 spans the
-    * handful of executions each runs). Defs (queries-val init order).
+    * threshold and peel-round bound. Defs (queries-val init order).
     */
   private def PrIters: Int = 3
   private def PrScale: Long = 1000000000000L

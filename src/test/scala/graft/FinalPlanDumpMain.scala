@@ -28,13 +28,11 @@ object FinalPlanDumpMain {
     spark.sparkContext.setLogLevel("ERROR")
     graft.ops.Release.sweepStart(spark)
     for (n <- names) {
-      graft.ops.Release.beginQuery(n)
       val df = SparkEntry.queries(n)(spark, sfDir)
       // collect(), NOT count(): count() builds its own QueryExecution and
       // leaves df's plan unexecuted (isFinalPlan stays false)
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
-      graft.ops.Release.queryFinished(spark, n)
       java.nio.file.Files.writeString(outDir.resolve(s"$n.txt"), plan)
       // count join nodes in the FINAL sections only: every
       // AdaptiveSparkPlan (the root, each subquery) prints "== Final

@@ -108,10 +108,11 @@ class PlanSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
   }
 
   "the shared near-dup pair table" should "survive a stale pair DataFrame executed after the grouping query" in {
-    // p06's DataFrame wraps the memoized pair table, which auto-releases
-    // on idleness (Release.afterIdle). A persisted table recomputes from
-    // lineage after unpersist — build p06 first, run p15, THEN execute
-    // p06 (which must work whether the memo is still warm or released).
+    // p06's DataFrame wraps the memoized pair table, whose cache may be
+    // dropped under it (an LRU eviction, clearCache, a sweepStart). A
+    // persisted table recomputes from lineage after unpersist — build p06
+    // first, run p15, THEN execute p06 (which must work whether the memo
+    // is still warm or released).
     val p06 = SparkEntry.queries("p06_dd_minhash_pairs")(spark, sfDir)
     SparkEntry.queries("p15_dd_neardup_groups")(spark, sfDir).count() should be > 0L
     p06.count() should be > 0L
@@ -154,13 +155,6 @@ class PlanSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
         Thread.sleep(20)
       }
     }
-    // consumer-registered memos built by earlier tests in this suite
-    // release on queryFinished, not on idle misses (their backstop
-    // budget is deliberately too large to drain here) — notify every
-    // registered consumer set so only idle-droppable listeners remain
-    (queries.Pipeline.PairConsumers ++ queries.Pipeline.GraphConsumers ++
-      queries.Pipeline.WcConsumers ++ queries.Pipeline.CalibConsumers)
-      .foreach(ops.Release.queryFinished)
     drainTo(0)
     ops.Release.activeListeners shouldBe 0
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
@@ -941,10 +935,10 @@ class PlanSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     val plan = planOf("p119_dd_edit_verify")
     plan should not include "CartesianProduct"
     plan should not include "BroadcastNestedLoopJoin"
-    // the candidate set is the shared ≥0.9 memo (the persist/idle-release
-    // lifecycle is pinned by "the shared near-dup pair table" test above;
-    // by this point in a full suite run the memo may legitimately have
-    // idle-released, so the pin here is the join SHAPE, not the cache);
+    // the candidate set is the shared ≥0.9 memo (its lifecycle is pinned
+    // by SessionMemoSpec; by this point in a full suite run the memo may
+    // legitimately have been dropped, so the pin here is the join SHAPE,
+    // not the cache);
     // texts join in by id, the DP runs per candidate row (r14: the
     // banded exact kernel replaced functions.levenshtein — value-
     // identical, ExprSpec-pinned, O(k·len) on the ≥0.9 candidates)

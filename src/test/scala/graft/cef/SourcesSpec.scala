@@ -148,6 +148,36 @@ class SourcesSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     events(1).id should be > events.head.id // arrival-order counter
   }
 
+  it should "number a multi-partition input 1..n in (ts, partition) order" in {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, row_number}
+    // (ts, user) is a total order: 20 users, each ts once per user; the
+    // lines are shuffled so no file split is already sorted
+    val n = 2000
+    val lines = new scala.util.Random(7).shuffle((0 until n).map { i =>
+      s"""{"type": "t${i % 3}", "ts": ${i / 20}, "user": "u${i % 20}", "v": $i}"""
+    })
+    val path = tmpFile(".jsonl", lines)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "8192")
+    try {
+      val df = spark.read.json(path)
+      df.rdd.getNumPartitions should be > 1
+      val got = Sources.jsonToEvents(df, "type", "ts", "user", idField = None)
+        .collect().map(e => (e.timestamp, e.partition) -> e.id).toMap
+      val want = df.withColumn("rn", row_number().over(Window.orderBy(col("ts"), col("user"))))
+        .collect().map(r => (r.getAs[Long]("ts"), r.getAs[String]("user")) -> r.getAs[Int]("rn").toLong)
+        .toMap
+      got.size shouldBe n
+      got.values.toSeq.sorted shouldBe (1L to n.toLong)
+      got shouldBe want
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   // S13: the JDBC match sink (reference db/DBConnector.scala, off by
   // default) — full write → read-back round trip against an embedded
   // in-memory Derby database (the JDBC stack Spark ships for its own

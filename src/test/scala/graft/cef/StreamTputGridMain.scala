@@ -1,22 +1,29 @@
 package graft.cef
 
 import graft.cef.spark.{Detect, Stream}
+import graft.queries.StreamScaffold
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQueryListener, StreamingQueryProgress}
 import scala.util.Random
 
 /** Structured-streaming throughput grid (VERDICT r12 item 2): where do
   * the microseconds go between the ~14 M ev/s in-JVM engine loop
   * (ThroughputSpec) and the ~0.35 M ev/s steady state the real SS path
   * sustains (StreamEngineThroughputSpec)? Measures, per config, the
-  * steady-state rate of ONE large micro-batch after a warm-up batch:
+  * steady-state rate of ONE large micro-batch after two warm-up batches,
+  * replayed through the gates' own scaffold (`StreamScaffold.cached`
+  * slice files, `StreamScaffold.run` with its conf scoping — 4 shuffle
+  * partitions — memory sink and sink drain):
   *
-  *   stage ladder (attribution): scan-only → +CEvent encode →
-  *     +shuffle+state commit (no-op engine) → full detections
+  *   stage ladder (attribution): no-op state (narrow tuple) → +CEvent
+  *     encode → full detections (Dataset[CEvent], then EventStream)
   *   store grid: HDFS-backed vs RocksDB vs RocksDB+changelog
-  *   sizing grid: shuffle partitions {8,32} × batch rows {1M,4M}
+  *   sizing grid: batch rows {1M,4M} × scan splits {default,16MB}
   *
-  * Results land in SCALE.md's round-13 table. Usage:
+  * SCALE.md's round-13 table was measured with hand-built slices at 8 and
+  * 32 shuffle partitions, before this probe ran on the scaffold. Usage:
   *   sbt "Test/runMain graft.cef.StreamTputGridMain local[8] 1000000"
   */
 object StreamTputGridMain {
@@ -47,49 +54,35 @@ object StreamTputGridMain {
       }.toDF("event_id", "event_type", "ts", "user_id", "value")
     }
 
-    def writeSlices(slices: Seq[DataFrame]): java.nio.file.Path = {
-      val srcDir = graft.queries.StreamScaffold.newScaffoldDir("graft-stream-src")
-      val tmp = graft.queries.StreamScaffold.newScaffoldDir("graft-stream-slices")
-      import scala.jdk.CollectionConverters._
-      // child dir keeps tmp's owner-PID marker intact across overwrites
-      val out = tmp.resolve("out")
-      slices.zipWithIndex.foreach { case (df, i) =>
-        df.coalesce(1).write.mode("overwrite").parquet(out.toString)
-        val part = java.nio.file.Files.list(out).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        val dst = srcDir.resolve(f"slice-${i + 1}%03d.parquet")
-        java.nio.file.Files.move(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 1000L))
-      }
-      java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      srcDir
+    /** Two warm-up slices of WarmRows, then one of `rows`: the slice
+      * set is built by the scaffold's own publish, keyed per size.
+      */
+    def slices(rows: Int): StreamScaffold.SliceSet = {
+      val base = StreamScaffold.track(spark, StreamScaffold.newScaffoldDir("graft-stream-src"))
+      StreamScaffold.cached(spark, base.toString, s"tput-grid-$rows")(
+        eventsDf(0, 2 * WarmRows + rows).withColumn(StreamScaffold.SliceCol,
+          when(col("event_id") < WarmRows, lit(1))
+            .when(col("event_id") < 2 * WarmRows, lit(2)).otherwise(lit(3))))
     }
 
-    def runOnce(srcDir: java.nio.file.Path, confs: Map[String, String])(
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.add(e.progress)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    })
+
+    def runOnce(set: StreamScaffold.SliceSet, confs: Map[String, String])(
         transform: DataFrame => DataFrame): (Long, Double) = {
       val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
-        val schema = spark.read.parquet(srcDir.toString).schema
-        val ckpt = graft.queries.StreamScaffold.newScaffoldDir("graft-ckpt-grid")
-        val sink = s"grid_${System.nanoTime()}"
-        val q = transform(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val batches = q.recentProgress.toSeq.filter(_.numInputRows > 0)
-        spark.catalog.dropTempView(sink)
+        progress.clear()
+        StreamScaffold.run(spark, set, "grid")(transform)
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
         import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        val last = batches.last
+        val last = progress.asScala.toSeq.filter(_.numInputRows > 0).last
         if (sys.env.contains("GRID_DURATIONS")) {
           val dm = last.durationMs.asScala.toSeq.sortBy(-_._2.toLong)
             .map { case (k, v) => s"$k=${v}ms" }.mkString(" ")
@@ -102,12 +95,12 @@ object StreamTputGridMain {
       }
     }
 
-    def best(label: String, srcDir: java.nio.file.Path,
+    def best(label: String, set: StreamScaffold.SliceSet,
         confs: Map[String, String], attempts: Int = 2)(
         transform: DataFrame => DataFrame): Double = {
       var bestRate = 0.0
       for (_ <- 1 to attempts) {
-        val (rows, secs) = runOnce(srcDir, confs)(transform)
+        val (rows, secs) = runOnce(set, confs)(transform)
         bestRate = math.max(bestRate, rows / secs)
       }
       println(f"GRID $label%-42s ${bestRate / 1e6}%6.2f M ev/s")
@@ -189,20 +182,18 @@ object StreamTputGridMain {
         }
     }
 
-    val src1m = writeSlices(Seq(eventsDf(0, WarmRows), eventsDf(WarmRows, mainRows)))
+    val src1m = slices(mainRows)
     val hdfs = Map.empty[String, String]
     val rocks = Map("spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val rocksCl = rocks + ("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-    val sp32 = Map("spark.sql.shuffle.partitions" -> "32")
-
     val split16m = Map("spark.sql.files.maxPartitionBytes" -> (16L * 1024 * 1024).toString)
 
     def toES(df: DataFrame) =
       Detect.toEventStream(df, idCol = "event_id", typeCol = "event_type",
         tsCol = "ts", partitionCol = "user_id", numAttrs = Seq("value"))
 
-    println(s"=== stage ladder ($master, ${mainRows / 1000000}M batch, hdfs store, 8 partitions; all stages emit tiny output)")
+    println(s"=== stage ladder ($master, ${mainRows / 1000000}M batch, hdfs store; all stages emit tiny output)")
     best("noop stateful, narrow tuple (no maps)", src1m, hdfs)(df => noopNarrow(df).toDF())
     best("noop stateful, CEvent (attr maps)", src1m, hdfs)(df => noopStateful(df).toDF())
     best("full detections (Dataset[CEvent] compat)", src1m, hdfs)(df => Stream.detections(toEvents(df), cp).toDF())
@@ -213,14 +204,13 @@ object StreamTputGridMain {
     best("detections / rocksdb+changelog", src1m, rocksCl)(df => Stream.detections(toES(df), cp).toDF())
 
     println(s"=== sizing grid (detections, EventStream)")
-    best("detections / 32 shuffle partitions", src1m, sp32)(df => Stream.detections(toES(df), cp).toDF())
     best("detections / 16MB scan splits", src1m, split16m)(df => Stream.detections(toES(df), cp).toDF())
-    val src4m = writeSlices(Seq(eventsDf(0, WarmRows), eventsDf(WarmRows, 4 * mainRows)))
+    val src4m = slices(4 * mainRows)
     best("detections / 4M batch", src4m, hdfs)(df => Stream.detections(toES(df), cp).toDF())
-    best("detections / 4M batch + 32p + 16MB splits", src4m, sp32 ++ split16m)(df => Stream.detections(toES(df), cp).toDF())
-    best("detections CEvent / 4M + 32p + 16MB splits", src4m, sp32 ++ split16m)(df => Stream.detections(toEvents(df), cp).toDF())
-    best("noop narrow / 4M + 32p + 16MB splits", src4m, sp32 ++ split16m)(df => noopNarrow(df).toDF())
-    best("noop narrow LONG key / 4M + 32p + 16MB", src4m, sp32 ++ split16m)(df => noopNarrowLongKey(df).toDF())
+    best("detections / 4M batch + 16MB splits", src4m, split16m)(df => Stream.detections(toES(df), cp).toDF())
+    best("detections CEvent / 4M + 16MB splits", src4m, split16m)(df => Stream.detections(toEvents(df), cp).toDF())
+    best("noop narrow / 4M + 16MB splits", src4m, split16m)(df => noopNarrow(df).toDF())
+    best("noop narrow LONG key / 4M + 16MB", src4m, split16m)(df => noopNarrowLongKey(df).toDF())
 
     spark.stop()
   }
