@@ -1,25 +1,20 @@
 package graft
 
-import graft.queries.Pipeline
-import org.apache.spark.sql.SparkSession
+import graft.ops.{Release, SessionMemo}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
-/** The BENCH_r13 p75 incident (VERDICT r13 item 1): the shared near-dup
-  * pair memo released NONDETERMINISTICALLY mid-sweep — idle-count
-  * release rides Spark's async execution-listener bus, where hit
-  * detection can be delayed/dropped and every unrelated execution ticks
-  * the miss counter — so the official bench paid an 11× cold rebuild on
-  * p75 (18.8 s vs a true 1.75 s) that a quiet rerun didn't.
+/** The lifetime of each shared DataFrame memo through a sweep, in the
+  * sorted order the runners use (the BENCH_r13 p75 incident: the pair
+  * memo went cold mid-sweep and p75 paid an 11× rebuild).
   *
-  * The fix is `Release.afterConsumers`: each session memo registers its
-  * consumer query names and releases when the LAST one reports
-  * completion via `Release.queryFinished` (called by Bench / Verify /
-  * SoloBench after every query). This spec replays the full sorted
-  * sweep order of the pair memo's consumers — exactly the order the
-  * driver's bench uses — interleaving unrelated queries between them,
-  * and pins: warm through the last consumer, released + evicted right
-  * after it, rebuilt on next demand.
+  * A shared frame is built by its first consumer, stays cached through
+  * every later consumer however many unrelated queries run in between,
+  * and is released at the sweep boundary that follows its last consumer
+  * (`Release.sweepStart`, which runners call before each sweep). The next
+  * demand after that boundary rebuilds it once.
   */
 class MemoLifetimeSpec extends AnyFlatSpec with Matchers {
 
@@ -32,157 +27,55 @@ class MemoLifetimeSpec extends AnyFlatSpec with Matchers {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def run(name: String): Unit = {
-    // declare the name like the real runners do, so this spec also
-    // exercises the memo-consumer registry guard on every read
-    graft.ops.Release.beginQuery(name)
-    SparkEntry.queries(name)(spark, sfDir).count()
-    graft.ops.Release.queryFinished(spark, name)
+  private val noise = Seq("p01_txt_tokens", "p03_txt_langid", "p29_split_assign")
+
+  private def run(name: String): Unit = SparkEntry.queries(name)(spark, sfDir).count()
+
+  private def entry(kind: String): DataFrame =
+    SessionMemo.frame(spark, sfDir, kind)(fail(s"no memo entry for $kind"))
+
+  /** Sweep `kind`'s consumers in sorted order with unrelated queries
+    * between them; the frame must be built once (the first consumer's
+    * entry is the one every later consumer reads) and stay cached through
+    * the last consumer, then release at the next sweep boundary.
+    */
+  private def sweepLifetime(kind: String, lastConsumer: String): Unit = {
+    Release.sweepStart(spark)
+    val sweep = SessionMemoSpec.FrameConsumers(kind).sorted
+    sweep.last shouldBe lastConsumer
+    run(sweep.head)
+    val first = entry(kind)
+    sweep.zipWithIndex.foreach { case (name, i) =>
+      if (i > 0) run(name)
+      run(noise(i % noise.size))
+      withClue(s"$kind rebuilt or cold after consumer $name: ") {
+        (entry(kind) eq first) shouldBe true
+        first.storageLevel should not be StorageLevel.NONE
+      }
+    }
+    Release.sweepStart(spark)
+    withClue(s"$kind still cached after the sweep boundary: ") {
+      first.storageLevel shouldBe StorageLevel.NONE
+    }
+    // the next sweep rebuilds it on first demand
+    run(sweep.head)
+    val rebuilt = entry(kind)
+    (rebuilt eq first) shouldBe false
+    rebuilt.storageLevel should not be StorageLevel.NONE
+    Release.sweepStart(spark)
   }
 
   "the shared near-dup pair memo" should
       "stay warm through its lexicographically-last consumer, then release" in {
-    graft.ops.Release.sweepStart(spark)
-    val sweep = Pipeline.PairConsumers.toSeq.sorted
-    sweep.last shouldBe "p97_dd_source_matrix" // the release point Bench hits
-
-    // unrelated registered queries interleaved between consumers — in
-    // the old idle-count design these ticked the miss counter; here
-    // they must not move the release point at all
-    val noise = Seq("p01_txt_tokens", "p03_txt_langid", "p29_split_assign")
-
-    sweep.init.zipWithIndex.foreach { case (name, i) =>
-      run(name)
-      run(noise(i % noise.size))
-      withClue(s"pair memo dead after consumer $name (before the last consumer ran): ") {
-        Pipeline.memoLive("pair", spark, sfDir) shouldBe true
-      }
-    }
-
-    run(sweep.last)
-    withClue("pair memo survived past its last registered consumer: ") {
-      Pipeline.memoLive("pair", spark, sfDir) shouldBe false
-    }
-
-    // BORN-RELEASED re-demand (r14 ADVICE, medium): every registered
-    // consumer already reported this sweep, so a re-demand WITHOUT an
-    // intervening sweepStart gets a lineage-computing DataFrame that
-    // must NOT be memoized — the old shape cached the already-released
-    // DataFrame for the rest of the session, and every later demand
-    // silently recomputed the full LSH chain once per consumer
-    graft.ops.Release.beginQuery("p06_dd_minhash_pairs")
-    SparkEntry.queries("p06_dd_minhash_pairs")(spark, sfDir).count()
-    graft.ops.Release.endQuery()
-    withClue("born-released pair DataFrame was memoized (dead entry in the map): ") {
-      Pipeline.memoEntryExists("pair", spark, sfDir) shouldBe false
-    }
-
-    // a LATER sweep re-demands it: the map entry was evicted on
-    // release, so the memo rebuilds and re-persists (not a per-consumer
-    // lineage recompute against a dead cache entry); the sweep boundary
-    // resets the finished-name history or the rebuilt memo would see
-    // every consumer as already done and release at registration
-    graft.ops.Release.sweepStart(spark)
-    SparkEntry.queries("p06_dd_minhash_pairs")(spark, sfDir).count()
-    Pipeline.memoLive("pair", spark, sfDir) shouldBe true
-    // leave no persisted state behind for later suites
-    Pipeline.PairConsumers.toSeq.sorted.foreach(graft.ops.Release.queryFinished(spark, _))
-    Pipeline.memoLive("pair", spark, sfDir) shouldBe false
+    sweepLifetime("near-dup-pairs", "p97_dd_source_matrix")
   }
 
   "the shared (source, word) count memo" should
       "follow the same deterministic lifetime" in {
-    graft.ops.Release.sweepStart(spark)
-    val sweep = Pipeline.WcConsumers.toSeq.sorted
-    sweep.last shouldBe "p94_txt_hapax_tail"
-    sweep.init.foreach { name =>
-      run(name)
-      withClue(s"wc memo dead after consumer $name: ") {
-        Pipeline.memoLive("wc", spark, sfDir) shouldBe true
-      }
-    }
-    run(sweep.last)
-    Pipeline.memoLive("wc", spark, sfDir) shouldBe false
+    sweepLifetime("source-word-counts", "p94_txt_hapax_tail")
   }
 
   "the shared mutual-kNN edge memo" should "release exactly after p86" in {
-    graft.ops.Release.sweepStart(spark)
-    val sweep = Pipeline.GraphConsumers.toSeq.sorted
-    sweep.last shouldBe "p86_graph_triangles"
-    sweep.init.foreach { name =>
-      run(name)
-      withClue(s"graph memo dead after consumer $name: ") {
-        Pipeline.memoLive("graph", spark, sfDir) shouldBe true
-      }
-    }
-    run(sweep.last)
-    Pipeline.memoLive("graph", spark, sfDir) shouldBe false
-  }
-
-  "a partial sweep" should "leave the crash backstop as the only release path" in {
-    graft.ops.Release.sweepStart(spark)
-    // run ONE consumer of the calibration memo and never the rest: the
-    // memo must stay warm (no idle-count eviction within a handful of
-    // unrelated executions — the r13 failure mode) …
-    run("p69_dd_minhash_calibration")
-    (1 to 8).foreach(_ => run("p01_txt_tokens"))
-    Pipeline.memoLive("calib", spark, sfDir) shouldBe true
-    // … until the remaining consumers finish, however a runner orders them
-    Seq("p106_dd_bbit_minhash", "p89_dd_threshold_sweep")
-      .foreach(graft.ops.Release.queryFinished(spark, _))
-    Pipeline.memoLive("calib", spark, sfDir) shouldBe false
-  }
-
-  "a consumer that finished BEFORE the memo existed" should "not pin it" in {
-    // the failed-consumer scenario: p06 reports completion (success or
-    // failure — Bench notifies either way) while no pair memo exists;
-    // p107 then creates the memo, which must NOT wait on p06 — its
-    // name can never be notified again this sweep
-    graft.ops.Release.sweepStart(spark)
-    graft.ops.Release.queryFinished(spark, "p06_dd_minhash_pairs")
-    val rest = Pipeline.PairConsumers.toSeq.sorted.filterNot(_ == "p06_dd_minhash_pairs")
-    rest.init.foreach { name =>
-      run(name)
-      withClue(s"pair memo dead after consumer $name: ") {
-        Pipeline.memoLive("pair", spark, sfDir) shouldBe true
-      }
-    }
-    run(rest.last) // p97 — last LIVE consumer; p06 was pre-pruned
-    withClue("memo pinned by a consumer that completed before creation: ") {
-      Pipeline.memoLive("pair", spark, sfDir) shouldBe false
-    }
-  }
-
-  "an UNREGISTERED consumer of a session memo" should
-      "fail loudly at plan construction, not silently pay a cold rebuild" in {
-    // the one door left open after r14 (VERDICT item 1): the consumer
-    // sets are hand-maintained constants, and a future query reading a
-    // memo without joining its set would find the memo released before
-    // it runs in a sorted sweep — a silent bench regression with every
-    // test green. The registry guard turns it into a correctness-gate
-    // failure: under a runner-declared name outside the set, the memo
-    // getter refuses at plan-construction time.
-    graft.ops.Release.sweepStart(spark)
-    graft.ops.Release.beginQuery("p999_synthetic_unregistered")
-    try {
-      // reuse a registered query's BODY under the unregistered name —
-      // exactly what a copy-pasted new query reading nearDupPairs does
-      val e = intercept[IllegalArgumentException] {
-        SparkEntry.queries("p06_dd_minhash_pairs")(spark, sfDir)
-      }
-      e.getMessage should include("p999_synthetic_unregistered")
-      e.getMessage should include("registered consumer set")
-      // same guard on the other three memos
-      for (q <- Seq("p83_graph_pagerank", "p94_txt_hapax_tail",
-          "p69_dd_minhash_calibration"))
-        intercept[IllegalArgumentException] {
-          SparkEntry.queries(q)(spark, sfDir)
-        }
-    } finally graft.ops.Release.endQuery()
-    // with no name declared (ad-hoc / notebook use) the guard skips —
-    // plan construction succeeds and nothing is left pinned
-    SparkEntry.queries("p06_dd_minhash_pairs")(spark, sfDir).count()
-    Pipeline.PairConsumers.foreach(graft.ops.Release.queryFinished(spark, _))
-    Pipeline.memoLive("pair", spark, sfDir) shouldBe false
+    sweepLifetime("mutual-knn-edges", "p86_graph_triangles")
   }
 }

@@ -24,6 +24,7 @@ import scala.jdk.CollectionConverters._
   *    session leaves no memo RDD behind.
   */
 class SessionMemoSpec extends AnyFlatSpec with Matchers {
+  import SessionMemoSpec.FrameConsumers
 
   private val d1 = "/root/testdata/sf0.001"
   private val d2 = "/root/testdata/sf0.01"
@@ -34,19 +35,6 @@ class SessionMemoSpec extends AnyFlatSpec with Matchers {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
-
-  /** Every query that reads a shared DataFrame, by memo kind. */
-  private val FrameConsumers: Map[String, Seq[String]] = Map(
-    "near-dup-pairs" -> Seq("p06_dd_minhash_pairs", "p107_split_leakage_rate",
-      "p119_dd_edit_verify", "p15_dd_neardup_groups", "p51_split_leakage_safe",
-      "p75_dd_canonical", "p97_dd_source_matrix"),
-    "mutual-knn-edges" -> Seq("p67_sim_cluster_stats", "p83_graph_pagerank",
-      "p84_graph_kcore", "p85_graph_walks", "p86_graph_triangles"),
-    "source-word-counts" -> Seq("p100_corpus_health", "p102_txt_simpson",
-      "p104_txt_zipf_ranks", "p122_txt_good_turing", "p88_txt_word_lift",
-      "p94_txt_hapax_tail"),
-    "calibration-pairs" -> Seq("p106_dd_bbit_minhash", "p69_dd_minhash_calibration",
-      "p89_dd_threshold_sweep"))
 
   private def builds = SessionMemo.builds.get()
 
@@ -269,4 +257,20 @@ class SessionMemoSpec extends AnyFlatSpec with Matchers {
     (memoRdds.toSet intersect sc.getPersistentRDDs.keySet) shouldBe empty
     SessionMemo.entryCount shouldBe 0
   }
+}
+
+object SessionMemoSpec {
+
+  /** Every query that reads a shared DataFrame, by memo kind. */
+  val FrameConsumers: Map[String, Seq[String]] = Map(
+    "near-dup-pairs" -> Seq("p06_dd_minhash_pairs", "p107_split_leakage_rate",
+      "p119_dd_edit_verify", "p15_dd_neardup_groups", "p51_split_leakage_safe",
+      "p75_dd_canonical", "p97_dd_source_matrix"),
+    "mutual-knn-edges" -> Seq("p67_sim_cluster_stats", "p83_graph_pagerank",
+      "p84_graph_kcore", "p85_graph_walks", "p86_graph_triangles"),
+    "source-word-counts" -> Seq("p100_corpus_health", "p102_txt_simpson",
+      "p104_txt_zipf_ranks", "p122_txt_good_turing", "p88_txt_word_lift",
+      "p94_txt_hapax_tail"),
+    "calibration-pairs" -> Seq("p106_dd_bbit_minhash", "p69_dd_minhash_calibration",
+      "p89_dd_threshold_sweep"))
 }
