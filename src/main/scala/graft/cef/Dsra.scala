@@ -45,7 +45,7 @@ package graft.cef
 final class DsraRun(
     cp: CompiledPattern,
     val partition: String,
-    maxConfigs: Int = DsraRun.DefaultMaxConfigs) extends Serializable {
+    maxConfigs: Int = DsraRun.DefaultMaxConfigs) extends KeyedRuntime[DsraRunState, Detection] {
   require(cp.window > 0,
     "the DSRA path needs a window ({window:N}{windowType:count|time}) — an unwindowed " +
       "register pattern keeps every taken configuration alive forever; use the " +
@@ -330,8 +330,7 @@ final class DsraRun(
 
   /** Whether the last `step` fired a first-TAKE transition, i.e. created
     * (or re-anchored) a taken configuration whose window anchor is THIS
-    * step — the explicit arming signal [[graft.cef.spark.Detect.dsraTrace]]
-    * keys SymA on. Timestamp equality against [[newestTakenAnchor]] cannot
+    * step — the explicit arming signal [[DsraSymbolizer]] keys SymA on. Timestamp equality against [[newestTakenAnchor]] cannot
     * express this: a non-arming event whose event time ties an earlier
     * same-ts anchor would misclassify as arming.
     */
@@ -343,7 +342,7 @@ final class DsraRun(
     * event time for time windows. This is the deterministic observable
     * the SPSTm-style forecaster keys its state abstraction on: together
     * with the per-event symbol it summarizes the hyper-state's window
-    * debt (see [[graft.cef.spark.Detect.dsraTrace]]).
+    * debt (see [[DsraSymbolizer]]).
     */
   def newestTakenAnchor: Long = {
     var m = -1L
@@ -503,6 +502,8 @@ final class DsraRun(
     enforceCap()
     detected
   }
+
+  def feed(e: CEvent, out: Detection => Unit): Unit = step(e).foreach(out)
 }
 
 object DsraRun {
@@ -514,10 +515,109 @@ object DsraRun {
   val DefaultMaxConfigs: Int = 10000
 }
 
+/** SPSTm symbolization of a [[DsraRun]] (T1/F2 for register patterns):
+  * each event maps to the runtime's deterministic observables — the
+  * 3-letter symbol (detection [[SpstM.SymD]] / new window anchor
+  * [[SpstM.SymA]] / other [[SpstM.SymO]]) and the anchor-age abstract
+  * state (age of the newest live taken anchor, capped at the window; the
+  * cap value = idle). The reference symbolizes dSRA transitions
+  * (model/vmm/mapper/SymbolExtractorFromDSRA.scala) and is
+  * window-kind-agnostic (workflow/task/fsmTask/SPSTmTask.scala); the lazy
+  * config-set runtime symbolizes its observable trace instead — both are
+  * deterministic per-event functions, which is what VMM training needs.
+  *
+  * Count windows measure age in events (exact). TIME windows measure age
+  * in event time bucketed to `grid` (micros per cell): the abstract state
+  * is `min((ts − newest anchor) / grid, window/grid)` — `grid` must tile
+  * the window, giving ≥2 cells, so the abstraction keeps the small state
+  * space the wt recursion needs while the window itself stays exact in
+  * the runtime. Batch trace: `Detect.dsraTrace`; streaming forecasts:
+  * [[SpstmRun]].
+  */
+final class DsraSymbolizer private (
+    cp: CompiledPattern, val partition: String, grid: Long, cells: Long) extends Serializable {
+  private val timeWindowed = cp.windowKind == WindowKind.Time
+  val run = new DsraRun(cp, partition)
+
+  /** Step one event; None for a reset event. */
+  def step(e: CEvent): Option[DsraStep] =
+    if (e.isReset) { run.step(e); None }
+    else {
+      val det = run.step(e)
+      val counter = run.eventCounter
+      val anchor = run.newestTakenAnchor
+      // arming = the runtime fired a first-TAKE at this step (explicit
+      // signal — anchor/timestamp equality would misclassify a non-arming
+      // event whose event time ties an earlier same-ts anchor)
+      val sym =
+        if (det.isDefined) SpstM.SymD
+        else if (run.tookAnchorThisStep) SpstM.SymA
+        else SpstM.SymO
+      val state =
+        if (anchor < 0) cells
+        else if (timeWindowed) math.min((e.timestamp - anchor) / grid, cells)
+        else math.min(counter - anchor, cells)
+      Some(DsraStep(partition, counter, e.id, sym, state.toInt))
+    }
+}
+
+object DsraSymbolizer {
+  /** Check `grid` against the pattern's window (here, on the caller's
+    * thread) and return the per-key symbolizer factory. */
+  def apply(cp: CompiledPattern, grid: Long): String => DsraSymbolizer = {
+    val cells: Long =
+      if (cp.windowKind != WindowKind.Time) {
+        require(grid == 0L, "grid applies to time-windowed patterns (count age is exact)")
+        cp.window
+      } else {
+        require(grid > 0L, "time-windowed symbolization needs a positive age grid (micros)")
+        require(cp.window % grid == 0L,
+          s"grid $grid must tile the window ${cp.window} exactly")
+        cp.window / grid
+      }
+    require(cells >= 2, s"anchor-age abstraction needs >=2 cells, got $cells")
+    key => new DsraSymbolizer(cp, key, grid, cells)
+  }
+}
+
 /** One symbolized step of the DSRA runtime's observable trace (symbol +
-  * anchor-age state, see [[graft.cef.spark.Detect.dsraTrace]]). */
+  * anchor-age state, see [[DsraSymbolizer]]). */
 final case class DsraStep(
     partition: String, counter: Long, eventId: Long, symbol: Int, state: Int)
+
+/** F5 for REGISTER patterns (C10×F2): a [[DsraSymbolizer]] plus the SPSTm
+  * symbol buffer; the (PST label, anchor-age state) pair of every event
+  * indexes the precomputed SPSTm forecast table — the register-pattern
+  * face of [[SpstRun]].
+  */
+final class SpstmRun(
+    sym: DsraSymbolizer,
+    m: SpstM,
+    table: Map[(List[Int], Int), ForecastInterval])
+    extends KeyedRuntime[SpstmStreamState, ForecastOut] {
+  private val buffer = new SymbolBuffer(math.max(1, m.order))
+
+  def snapshot: SpstmStreamState = SpstmStreamState(sym.run.snapshot, buffer.snapshot)
+  def restore(s: SpstmStreamState): Unit = { sym.run.restore(s.dsra); buffer.restore(s.buffer) }
+
+  def feed(e: CEvent, out: ForecastOut => Unit): Unit = sym.step(e) match {
+    case None => buffer.clear()
+    case Some(st) =>
+      buffer.push(st.symbol)
+      if (buffer.isFull) {
+        val label = m.pst.nodeFor(buffer.pop).label
+        table.get((label, st.state)).filter(_.isValid).foreach { fi =>
+          out(ForecastOut(sym.partition, st.counter, e.id, e.timestamp,
+            st.counter + fi.start, st.counter + fi.end, fi.prob, fi.positive))
+        }
+      }
+  }
+}
+
+/** Serializable snapshot of a [[SpstmRun]]: the DSRA hyper-state + the
+  * most-recent-first SPSTm symbol buffer.
+  */
+final case class SpstmStreamState(dsra: DsraRunState, buffer: Seq[Int])
 
 /** One serialized DSRA configuration (state + registers + window anchor). */
 final case class DsraConfigState(

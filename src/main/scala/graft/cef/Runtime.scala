@@ -2,6 +2,21 @@ package graft.cef
 
 import scala.collection.mutable
 
+/** The contract of a per-key runtime, the keyed operator of the reference
+  * engine (InferenceJob.java:215-216 keyBy → WayebEngine): the whole run
+  * state of one key is a value `S` (snapshot/restore, the reference's
+  * ValueState payload, WayebEngine.java:276-287), and `feed` steps one
+  * event, passing every output it completes to `out`. The batch scan and
+  * the keyed stream in `graft.cef.spark.Keyed` run any runtime through
+  * this trait; each runtime also keeps its own typed `step` for direct
+  * callers.
+  */
+trait KeyedRuntime[S, O] extends Serializable {
+  def snapshot: S
+  def restore(s: S): Unit
+  def feed(e: CEvent, out: O => Unit): Unit
+}
+
 /** A completed detection: the point in the stream where the deterministic
   * run reached a final state.
   */
@@ -29,10 +44,11 @@ final case class MatchOut(
   * "nowhere to go" branch, Run.scala:221-238). Reset events return the run to
   * its start state and clear the match (Run.scala:305-327).
   *
-  * Mutable by design: one instance per partition key lives inside
-  * mapPartitions / flatMapGroupsWithState state.
+  * Mutable by design: one instance per partition key lives inside the
+  * batch scan or, snapshotted, in the keyed stream's GroupState.
   */
-final class DetRun(cp: CompiledPattern, val partition: String) extends Serializable {
+final class DetRun(cp: CompiledPattern, val partition: String)
+    extends KeyedRuntime[DetRunState, Detection] {
   private val sdfa = cp.sdfa
   private var state: Int = sdfa.start
   private var counter: Long = 0L
@@ -84,6 +100,8 @@ final class DetRun(cp: CompiledPattern, val partition: String) extends Serializa
       Some(d)
     } else None
   }
+
+  def feed(e: CEvent, out: Detection => Unit): Unit = step(e).foreach(out)
 }
 
 /** Serializable snapshot of a [[DetRun]] — the streaming GroupState payload. */
@@ -104,7 +122,7 @@ final case class DetRunState(state: Int, counter: Long, minCounter: Long, minTs:
 final class MatchRun(
     cp: CompiledPattern,
     val partition: String,
-    maxThreads: Int = MatchRun.DefaultMaxThreads) extends Serializable {
+    maxThreads: Int = MatchRun.DefaultMaxThreads) extends KeyedRuntime[MatchRunState, MatchOut] {
   private val nfa = cp.snfa
   private var threads: List[MatchRun.Thread] = Nil
   private var counter: Long = 0L
@@ -215,6 +233,8 @@ final class MatchRun(
     }
     out.toList.distinct
   }
+
+  def feed(e: CEvent, out: MatchOut => Unit): Unit = step(e).foreach(out)
 }
 
 object MatchRun {

@@ -6,15 +6,11 @@ import org.apache.spark.sql.functions._
 
 /** Batch pattern detection over DataFrames — the Spark-native face of the
   * CEF engine (reference wiring: InferenceJob.java:215-216 keyBy(mmsi) →
-  * WayebEngine; SURVEY.md §2.3 K1/K5, §2.5 R1).
-  *
-  * Scale design: ONE hash shuffle on the partition attribute, then an
-  * external (spillable) sort within partitions on (partition, ts, id), then
-  * a single streaming pass with `mapPartitions` that keeps O(1) state per
-  * key (the secondary-sort pattern). No per-group materialization — a key
-  * with millions of events never lives in memory at once; at 1000 executors
-  * the keys spread across tasks and the compiled automaton rides along in
-  * the task closure (it is a small immutable value).
+  * WayebEngine; SURVEY.md §2.3 K1/K5, §2.5 R1). Every per-key operation
+  * is the one batch scan ([[Keyed.scan]]: one shuffle, an external sort,
+  * one pass) over [[KeyedEvents]]; at 1000 executors the keys spread
+  * across tasks and the compiled automaton rides along in the task
+  * closure (it is a small immutable value).
   */
 object Detect {
 
@@ -62,14 +58,11 @@ object Detect {
       case _ => col(tsCol).cast("long")
     }
 
-  /** Narrow streaming ingest (the Stream hot path): rows carry only the
-    * attr VALUE arrays; the names — constants of the dataset, not of
-    * the row — ride in the operator closure. `Dataset[CEvent]` pays
-    * Catalyst's generic Map codec per row on both sides of the keyed
-    * shuffle, measured at ~2.4x the whole streaming steady state
-    * (SCALE.md round-13 table); this shape shuffles two primitive-ish
-    * arrays instead and rebuilds the CEvent exactly once, post-shuffle.
-    * Same normalization rules as [[toEvents]] (shared `tsExpr`).
+  /** Narrow ingest (the hot path of every keyed operation): rows carry
+    * only the attr VALUE arrays; the names — constants of the dataset, not
+    * of the row — ride in the operator closure and the CEvent is rebuilt
+    * exactly once, post-shuffle ([[KeyedEvents]]). Same normalization
+    * rules as [[toEvents]] (shared `tsExpr`).
     */
   def toEventStream(
       df: DataFrame,
@@ -92,15 +85,8 @@ object Detect {
   }
 
   /** Detection points from the deterministic streaming-SDFA runtime. */
-  def detections(events: Dataset[CEvent], cp: CompiledPattern): Dataset[Detection] =
-    perKeyScan(events)(key => new DetRun(cp, key))((run, e) => run.step(e).iterator)
-
-  /** Narrow-ingest face of [[detections]] — the batch scan pays the
-    * generic Map decode once per row, and dropping it measures 1.5x
-    * (2.28 → 3.37 M ev/s over 4M events, SCALE.md round-13).
-    */
-  def detections(events: EventStream, cp: CompiledPattern): Dataset[Detection] =
-    perKeyScanNarrow(events)(key => new DetRun(cp, key))((run, e) => run.step(e).iterator)
+  def detections(events: KeyedEvents, cp: CompiledPattern): Dataset[Detection] =
+    Keyed.scan(events)(key => new DetRun(cp, key))((run, e) => run.step(e).iterator)
 
   /** Multi-pattern detection (a `&`-separated pattern file, docs/lang.md):
     * one pass over the data drives ALL automata per key — the reference's
@@ -108,24 +94,11 @@ object Detect {
     * (ERFEngine.scala:230-266). Output rows carry the pattern index.
     */
   def detectionsMulti(
-      events: Dataset[CEvent],
+      events: KeyedEvents,
       cps: Seq[CompiledPattern]): Dataset[(Int, Detection)] = {
     implicit val enc: Encoder[(Int, Detection)] =
       Encoders.tuple(Encoders.scalaInt, detEnc)
-    perKeyScan(events)(key => cps.map(cp => new DetRun(cp, key)).toArray) {
-      (runs, e) => runs.iterator.zipWithIndex.flatMap {
-        case (run, fsmId) => run.step(e).map(fsmId -> _)
-      }
-    }
-  }
-
-  /** Narrow-ingest face of [[detectionsMulti]]. */
-  def detectionsMulti(
-      events: EventStream,
-      cps: Seq[CompiledPattern]): Dataset[(Int, Detection)] = {
-    implicit val enc: Encoder[(Int, Detection)] =
-      Encoders.tuple(Encoders.scalaInt, detEnc)
-    perKeyScanNarrow(events)(key => cps.map(cp => new DetRun(cp, key)).toArray) {
+    Keyed.scan(events)(key => cps.map(cp => new DetRun(cp, key)).toArray) {
       (runs, e) => runs.iterator.zipWithIndex.flatMap {
         case (run, fsmId) => run.step(e).map(fsmId -> _)
       }
@@ -137,100 +110,29 @@ object Detect {
     * detection points with a bounded per-key configuration population —
     * the forecast-ready alternative to match enumeration.
     */
-  def detectionsDsra(events: Dataset[CEvent], cp: CompiledPattern): Dataset[Detection] =
-    perKeyScan(events)(key => new DsraRun(cp, key))((run, e) => run.step(e).iterator)
+  def detectionsDsra(events: KeyedEvents, cp: CompiledPattern): Dataset[Detection] =
+    Keyed.scan(events)(key => new DsraRun(cp, key))((run, e) => run.step(e).iterator)
 
-  /** Narrow-ingest face of [[detectionsDsra]]. */
-  def detectionsDsra(events: EventStream, cp: CompiledPattern): Dataset[Detection] =
-    perKeyScanNarrow(events)(key => new DsraRun(cp, key))((run, e) => run.step(e).iterator)
-
-  /** SPSTm symbolization of the DSRA runtime (T1/F2 for register
-    * patterns): one row per event carrying the runtime's deterministic
-    * observables — the 3-letter symbol (detection [[SpstM.SymD]] / new
-    * window anchor [[SpstM.SymA]] / other [[SpstM.SymO]]) and the
-    * anchor-age abstract state (age of the newest live taken anchor,
-    * capped at the window; the cap value = idle). The reference
-    * symbolizes dSRA transitions
-    * (model/vmm/mapper/SymbolExtractorFromDSRA.scala) and is
-    * window-kind-agnostic (workflow/task/fsmTask/SPSTmTask.scala); the
-    * lazy config-set runtime symbolizes its observable trace instead —
-    * both are deterministic per-event functions, which is what VMM
-    * training needs.
-    *
-    * Count windows measure age in events (exact). TIME windows measure
-    * age in event time bucketed to `grid` (micros per cell): the
-    * abstract state is `min((ts − newest anchor) / grid, window/grid)` —
-    * `grid` must tile the window, giving ≥2 cells, so the abstraction
-    * keeps the small state space the wt recursion needs while the
-    * window itself stays exact in the runtime.
+  /** SPSTm symbolization of the DSRA runtime: one row per event with its
+    * symbol and anchor-age state ([[graft.cef.DsraSymbolizer]]; `grid`,
+    * in micros per cell, only for TIME windows).
     */
   def dsraTrace(
-      events: Dataset[CEvent],
+      events: KeyedEvents,
       cp: CompiledPattern,
       grid: Long = 0L): Dataset[DsraStep] = {
     implicit val stepEnc: Encoder[DsraStep] = Encoders.product[DsraStep]
-    perKeyScan(events)(key => new DsraRun(cp, key))(dsraStepFn(cp, grid))
-  }
-
-  /** Narrow-ingest face of [[dsraTrace]]. */
-  def dsraTrace(events: EventStream, cp: CompiledPattern): Dataset[DsraStep] =
-    dsraTrace(events, cp, 0L)
-  def dsraTrace(events: EventStream, cp: CompiledPattern, grid: Long): Dataset[DsraStep] = {
-    implicit val stepEnc: Encoder[DsraStep] = Encoders.product[DsraStep]
-    perKeyScanNarrow(events)(key => new DsraRun(cp, key))(dsraStepFn(cp, grid))
-  }
-
-  /** One owner for the per-event symbolization rule (both scan shapes). */
-  private def dsraStepFn(
-      cp: CompiledPattern, grid: Long): (DsraRun, CEvent) => Iterator[DsraStep] = {
-    val timeWindowed = cp.windowKind == WindowKind.Time
-    val cells: Long =
-      if (!timeWindowed) {
-        require(grid == 0L, "grid applies to time-windowed patterns (count age is exact)")
-        cp.window
-      } else {
-        require(grid > 0L, "time-windowed symbolization needs a positive age grid (micros)")
-        require(cp.window % grid == 0L,
-          s"grid $grid must tile the window ${cp.window} exactly")
-        cp.window / grid
-      }
-    require(cells >= 2, s"anchor-age abstraction needs >=2 cells, got $cells")
-    (run, e) =>
-      if (e.isReset) { run.step(e); Iterator.empty }
-      else {
-        val det = run.step(e)
-        val counter = run.eventCounter
-        val anchor = run.newestTakenAnchor
-        // arming = the runtime fired a first-TAKE at this step (explicit
-        // signal — anchor/timestamp equality would misclassify a non-arming
-        // event whose event time ties an earlier same-ts anchor)
-        val fresh = run.tookAnchorThisStep
-        val sym =
-          if (det.isDefined) SpstM.SymD
-          else if (fresh) SpstM.SymA
-          else SpstM.SymO
-        val state =
-          if (anchor < 0) cells
-          else if (timeWindowed) math.min((e.timestamp - anchor) / grid, cells)
-          else math.min(counter - anchor, cells)
-        Iterator.single(DsraStep(run.partition, counter, e.id, sym, state.toInt))
-      }
+    Keyed.scan(events)(DsraSymbolizer(cp, grid))((sym, e) => sym.step(e).iterator)
   }
 
   /** Full match enumeration from the nondeterministic runtime.
     * `maxThreads` caps the per-key thread pool (MatchRun population guard).
     */
   def matches(
-      events: Dataset[CEvent],
+      events: KeyedEvents,
       cp: CompiledPattern,
       maxThreads: Int = MatchRun.DefaultMaxThreads): Dataset[MatchOut] =
-    perKeyScan(events)(key => new MatchRun(cp, key, maxThreads))((run, e) => run.step(e).iterator)
-
-  /** Narrow-ingest face of [[matches]]. */
-  def matches(events: EventStream, cp: CompiledPattern): Dataset[MatchOut] =
-    matches(events, cp, MatchRun.DefaultMaxThreads)
-  def matches(events: EventStream, cp: CompiledPattern, maxThreads: Int): Dataset[MatchOut] =
-    perKeyScanNarrow(events)(key => new MatchRun(cp, key, maxThreads))((run, e) => run.step(e).iterator)
+    Keyed.scan(events)(key => new MatchRun(cp, key, maxThreads))((run, e) => run.step(e).iterator)
 
   /** MonoRun fast path for the reference opt engine's regime
     * (ERFOptEngine.scala:91-287): a SINGLE pattern with NO partition
@@ -250,109 +152,19 @@ object Detect {
     * exists for parity with the reference's single-run throughput mode.
     */
   def matchesMono(
-      events: Dataset[CEvent],
+      events: KeyedEvents,
       cp: CompiledPattern,
-      maxThreads: Int = MatchRun.DefaultMaxThreads): Dataset[MatchOut] =
-    events.coalesce(1)
+      maxThreads: Int = MatchRun.DefaultMaxThreads): Dataset[MatchOut] = {
+    val rebuild = events.rebuild
+    events.rows.coalesce(1)
       .sortWithinPartitions(col("timestamp"), col("id"))
       .mapPartitions { rows =>
-        if (MonoRun.eligible(cp)) MonoRun.run(cp, rows, maxThreads)
-        else {
-          val run = new MatchRun(cp, "", maxThreads)
-          rows.flatMap(run.step)
-        }
-      }
-
-  /** Narrow-ingest face of [[matchesMono]]. */
-  def matchesMono(events: EventStream, cp: CompiledPattern): Dataset[MatchOut] =
-    matchesMono(events, cp, MatchRun.DefaultMaxThreads)
-  def matchesMono(events: EventStream, cp: CompiledPattern, maxThreads: Int): Dataset[MatchOut] =
-    events.ds.coalesce(1)
-      .sortWithinPartitions(col("timestamp"), col("id"))
-      .mapPartitions { rows =>
-        val evs = rows.map(events.rebuild)
+        val evs = rows.map(rebuild)
         if (MonoRun.eligible(cp)) MonoRun.run(cp, evs, maxThreads)
         else {
           val run = new MatchRun(cp, "", maxThreads)
           evs.flatMap(run.step)
         }
       }
-
-  /** Shuffle by key, external-sort by (key, ts, id), stream per-key runs. */
-  private def perKeyScan[R, O: Encoder](events: Dataset[CEvent])(
-      mkRun: String => R)(stepFn: (R, CEvent) => Iterator[O]): Dataset[O] = {
-    events
-      .repartition(col("partition"))
-      .sortWithinPartitions(col("partition"), col("timestamp"), col("id"))
-      .mapPartitions { rows =>
-        var currentKey: String = null
-        var run: R = null.asInstanceOf[R]
-        rows.flatMap { e =>
-          if (e.partition != currentKey) {
-            currentKey = e.partition
-            run = mkRun(currentKey)
-          }
-          stepFn(run, e)
-        }
-      }
-  }
-
-  /** The same shuffle-once + external-sort + single-pass scan over the
-    * narrow ingest: the Catalyst sort keys are identical, and the CEvent
-    * is rebuilt exactly once per row inside the pass (the batch path
-    * paid the generic Map decode once per row — dropping it measures
-    * 1.5x end-to-end; the streaming path paid it 2-3x, see
-    * [[Stream.narrowByKey]]).
-    */
-  private def perKeyScanNarrow[R, O: Encoder](es: EventStream)(
-      mkRun: String => R)(stepFn: (R, CEvent) => Iterator[O]): Dataset[O] = {
-    es.ds
-      .repartition(col("partition"))
-      .sortWithinPartitions(col("partition"), col("timestamp"), col("id"))
-      .mapPartitions { rows =>
-        var currentKey: String = null
-        var run: R = null.asInstanceOf[R]
-        rows.flatMap { ne =>
-          val e = es.rebuild(ne)
-          if (e.partition != currentKey) {
-            currentKey = e.partition
-            run = mkRun(currentKey)
-          }
-          stepFn(run, e)
-        }
-      }
-  }
-}
-
-/** Row shape of [[EventStream]]: attr values only, positionally aligned
-  * with the stream's attr-name lists. Primitive/flat fields keep the
-  * Catalyst codec out of generic-Map territory on the keyed shuffle.
-  */
-final case class NEvent(
-    id: Long,
-    eventType: String,
-    timestamp: Long,
-    partition: String,
-    numV: Array[Double],
-    strV: Array[String])
-
-/** Narrow streaming ingest handle ([[Detect.toEventStream]]): the typed
-  * event rows plus their dataset-constant attr names. The names arrays
-  * serialize once into each task closure; [[rebuild]] reassembles the
-  * engine's CEvent once per row, after the shuffle.
-  */
-final case class EventStream(
-    ds: Dataset[NEvent],
-    numNames: Array[String],
-    strNames: Array[String]) {
-
-  def rebuild(n: NEvent): CEvent = {
-    var num = Map.empty[String, Double]
-    var i = 0
-    while (i < numNames.length) { num = num.updated(numNames(i), n.numV(i)); i += 1 }
-    var str = Map.empty[String, String]
-    i = 0
-    while (i < strNames.length) { str = str.updated(strNames(i), n.strV(i)); i += 1 }
-    CEvent(n.id, n.eventType, n.timestamp, n.partition, num, str)
   }
 }

@@ -2,9 +2,8 @@ package graft.cef.spark
 
 import graft.cef._
 import graft.cef.adapt._
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import java.util.concurrent.atomic.AtomicReference
 
 /** The full live-inference topology (SURVEY.md §3.1, reference
@@ -90,150 +89,147 @@ object Inference {
   final case class PendingForecast(positive: Boolean, start: Long, end: Long)
 
   implicit private val outEnc: Encoder[Out] = Encoders.product[Out]
-  implicit private val stringEnc: Encoder[String] = Encoders.STRING
   implicit private val snapEnc: Encoder[EngineSnapshot] = Encoders.product[EngineSnapshot]
 
-  /** Build the streaming inference Dataset. `controls` is read at planning
-    * time of each micro-batch (driver), applied before the batch's events.
+  /** Build the streaming inference Dataset: one [[EngineRun]] per key on
+    * the keyed stream ([[Keyed.stream]]). `controls` is captured when each
+    * micro-batch is planned and applied per key before the batch's events.
     *
     * @param loadModel modelId → (spst, forecast table); must be
     *                  deterministic and serializable (executors call it)
     */
   def engine(
-      events: Dataset[CEvent],
+      events: KeyedEvents,
       cp: CompiledPattern,
       loadModel: Int => (Spst, Map[(List[Int], Int), ForecastInterval]),
       controls: ControlHandle,
       initialModelId: Int = 0,
       swapDelay: Long = 0L,
       reportingDistance: Long = 3600L): Dataset[Out] =
-    engineImpl(Stream.narrowByKey(events), NarrowEvent.rebuild _, cp, loadModel,
-      controls, initialModelId, swapDelay, reportingDistance)
+    Keyed.stream(events)(key => new EngineRun(key, cp, loadModel, controls,
+      initialModelId, swapDelay, reportingDistance))
 
-  /** [[EventStream]] (narrow-ingest) face of [[engine]]. */
-  def engine(
-      events: EventStream,
+  /** The keyed forecasting engine of one key for one micro-batch: a
+    * [[SpstRun]] with pause/play, the event-time gated model swap, online
+    * forecast resolution and periodic reports. It starts at its first
+    * `feed` (or `snapshot`): the restored snapshot, then the control
+    * summary (read once per key per batch), then the current model.
+    */
+  private final class EngineRun(
+      key: String,
       cp: CompiledPattern,
       loadModel: Int => (Spst, Map[(List[Int], Int), ForecastInterval]),
       controls: ControlHandle,
       initialModelId: Int,
       swapDelay: Long,
-      reportingDistance: Long): Dataset[Out] = {
-    implicit val nEnc: Encoder[NEvent] = Encoders.product[NEvent]
-    engineImpl(events.ds.groupByKey(_.partition), events.rebuild _, cp, loadModel,
-      controls, initialModelId, swapDelay, reportingDistance)
-  }
+      reportingDistance: Long) extends KeyedRuntime[EngineSnapshot, Out] {
 
-  private def engineImpl[E](
-      grouped: org.apache.spark.sql.KeyValueGroupedDataset[String, E],
-      rebuild: E => CEvent,
-      cp: CompiledPattern,
-      loadModel: Int => (Spst, Map[(List[Int], Int), ForecastInterval]),
-      controls: ControlHandle,
-      initialModelId: Int,
-      swapDelay: Long,
-      reportingDistance: Long): Dataset[Out] = {
+    private var snap: Option[EngineSnapshot] = None
+    def restore(s: EngineSnapshot): Unit = snap = Some(s)
 
-    // narrow shuffle (Stream.narrowByKey's rationale): attr maps ride as
-    // array columns; CEvent rebuilt once per row post-shuffle
-    grouped
-      .flatMapGroupsWithState[EngineSnapshot, Out](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, nrows: Iterator[E], state: GroupState[EngineSnapshot]) =>
-          val rows: Iterator[CEvent] = nrows.map(rebuild)
-          // restore or create the keyed engine
-          val snap = state.getOption
-          var paused = snap.map(_.paused).getOrElse(false)
-          var currentId = snap.map(_.currentModelId).getOrElse(initialModelId)
-          var latestId = snap.map(_.latestModelId).getOrElse(initialModelId)
-          var pendingAt = snap.map(_.pendingSwapAt).getOrElse(-1L)
+    private var started = false
+    private var paused = false
+    private var currentId = initialModelId
+    private var latestId = initialModelId
+    private var pendingAt = -1L
+    private var engineRun: SpstRun = _
+    // A1 reporting state: pending forecasts resolve online against
+    // detections (tp/fn) or expiry (fp/tn); cumulative + delta counts
+    // emitted every reportingDistance event-time units. Min-end heap:
+    // expiry pops exactly the expired entries (amortized O(log n))
+    // instead of scanning every pending on every event — bounded work
+    // under forecast storms (detections still drain the heap, but
+    // they are rare relative to events).
+    private val pending = scala.collection.mutable.PriorityQueue.empty[PendingForecast](
+      Ordering.by((p: PendingForecast) => -p.end))
+    private var cum = ClassStats(0, 0, 0, 0)
+    private var prev = ClassStats(0, 0, 0, 0)
+    private var nextReportTime = -1L
 
-          // apply the consolidated control state decided since the last batch;
-          // an opinion-less handle (fresh after restart) leaves the
-          // checkpointed paused state untouched
-          val ctl = controls.current
-          ctl.paused.foreach(paused = _)
-          if (ctl.latestModelId >= 0) latestId = ctl.latestModelId
-
-          var (spst, table) = loadModel(currentId)
-          val engineRun = new RestorableSpstRun(cp, spst, table, key)
-          snap.foreach(s => engineRun.restore(s.det, s.buffer))
-
-          // A1 reporting state: pending forecasts resolve online against
-          // detections (tp/fn) or expiry (fp/tn); cumulative + delta counts
-          // emitted every reportingDistance event-time units. Min-end heap:
-          // expiry pops exactly the expired entries (amortized O(log n))
-          // instead of scanning every pending on every event — bounded work
-          // under forecast storms (detections still drain the heap, but
-          // they are rare relative to events).
-          val pending = scala.collection.mutable.PriorityQueue.empty[PendingForecast](
-            Ordering.by((p: PendingForecast) => -p.end))
-          snap.foreach(s => pending ++= s.pendingForecasts)
-          var cum = snap.map(s => ClassStats(s.cum(0), s.cum(1), s.cum(2), s.cum(3)))
-            .getOrElse(ClassStats(0, 0, 0, 0))
-          var prev = snap.map(s => ClassStats(s.prev(0), s.prev(1), s.prev(2), s.prev(3)))
-            .getOrElse(ClassStats(0, 0, 0, 0))
-          var nextReportTime = snap.map(_.nextReportTime).getOrElse(-1L)
-
-          val out = scala.collection.mutable.ListBuffer.empty[Out]
-          rows.toSeq.sortBy(e => (e.timestamp, e.id)).foreach { e =>
-            if (!paused) {
-              if (latestId != currentId) {
-                if (pendingAt == -1L) pendingAt = e.timestamp + swapDelay
-                if (e.timestamp >= pendingAt) {
-                  val loaded = loadModel(latestId)
-                  spst = loaded._1; table = loaded._2
-                  engineRun.swapModel(spst, table)
-                  currentId = latestId
-                  pendingAt = -1L
-                  // model swap clears stats history (WayebEngine.java:300-315)
-                  cum = ClassStats(0, 0, 0, 0); prev = ClassStats(0, 0, 0, 0)
-                }
-              }
-              val (d, f) = engineRun.step(e)
-              d.foreach(x => out += Out("detection", key, x.counter, x.eventId,
-                x.timestamp, 0, 0, 1.0, positive = true, ""))
-              f.foreach { x =>
-                out += Out("forecast", key, x.counter, x.eventId,
-                  x.timestamp, x.startCounter, x.endCounter, x.prob, x.positive, "")
-                pending += PendingForecast(x.positive, x.startCounter, x.endCounter)
-              }
-              // resolve pending forecasts
-              d.foreach { det =>
-                val kept = pending.dequeueAll.filter { p =>
-                  if (p.start <= det.counter && det.counter <= p.end) {
-                    cum += (if (p.positive) ClassStats(1, 0, 0, 0) else ClassStats(0, 0, 0, 1))
-                    false
-                  } else true
-                }
-                pending ++= kept
-              }
-              val counter = engineRun.eventCounter
-              while (pending.nonEmpty && pending.head.end < counter) {
-                val p = pending.dequeue()
-                cum += (if (p.positive) ClassStats(0, 0, 1, 0) else ClassStats(0, 1, 0, 0))
-              }
-              // periodic report (event-time schedule, WayebEngine.java:370-430)
-              if (nextReportTime == -1L) nextReportTime = e.timestamp + reportingDistance
-              else if (e.timestamp >= nextReportTime) {
-                val batch = ClassStats(cum.tp - prev.tp, cum.tn - prev.tn,
-                  cum.fp - prev.fp, cum.fn - prev.fn)
-                val report = adapt.Report(e.timestamp, key,
-                  adapt.MetricGroup.of(cum), adapt.MetricGroup.ofBatch(batch))
-                out += Out("report", key, counter, e.id, e.timestamp,
-                  batch.tp, batch.fp, report.batch.mcc, positive = batch.tp + batch.fp + batch.fn > 0,
-                  payload = reportJson(report))
-                prev = cum
-                nextReportTime = e.timestamp + reportingDistance
-              }
-            }
-          }
-          state.update(EngineSnapshot(engineRun.detSnapshot, engineRun.bufferSnapshot,
-            paused, currentId, latestId, pendingAt,
-            pending.toSeq, Seq(cum.tp, cum.tn, cum.fp, cum.fn),
-            Seq(prev.tp, prev.tn, prev.fp, prev.fn), nextReportTime))
-          out.iterator
+    private def start(): Unit = {
+      started = true
+      snap.foreach { s =>
+        paused = s.paused; currentId = s.currentModelId; latestId = s.latestModelId
+        pendingAt = s.pendingSwapAt
       }
+      // apply the consolidated control state decided since the last batch;
+      // an opinion-less handle (fresh after restart) leaves the
+      // checkpointed paused state untouched
+      val ctl = controls.current
+      ctl.paused.foreach(paused = _)
+      if (ctl.latestModelId >= 0) latestId = ctl.latestModelId
+
+      val (spst, table) = loadModel(currentId)
+      engineRun = new SpstRun(cp, spst, table, key)
+      snap.foreach { s =>
+        engineRun.restore(SpstStreamState(s.det, s.buffer))
+        pending ++= s.pendingForecasts
+        cum = ClassStats(s.cum(0), s.cum(1), s.cum(2), s.cum(3))
+        prev = ClassStats(s.prev(0), s.prev(1), s.prev(2), s.prev(3))
+        nextReportTime = s.nextReportTime
+      }
+    }
+
+    def feed(e: CEvent, out: Out => Unit): Unit = {
+      if (!started) start()
+      if (!paused) {
+        if (latestId != currentId) {
+          if (pendingAt == -1L) pendingAt = e.timestamp + swapDelay
+          if (e.timestamp >= pendingAt) {
+            val (spst, table) = loadModel(latestId)
+            engineRun.swapModel(spst, table)
+            currentId = latestId
+            pendingAt = -1L
+            // model swap clears stats history (WayebEngine.java:300-315)
+            cum = ClassStats(0, 0, 0, 0); prev = ClassStats(0, 0, 0, 0)
+          }
+        }
+        val (d, f) = engineRun.step(e)
+        d.foreach(x => out(Out("detection", key, x.counter, x.eventId,
+          x.timestamp, 0, 0, 1.0, positive = true, "")))
+        f.foreach { x =>
+          out(Out("forecast", key, x.counter, x.eventId,
+            x.timestamp, x.startCounter, x.endCounter, x.prob, x.positive, ""))
+          pending += PendingForecast(x.positive, x.startCounter, x.endCounter)
+        }
+        // resolve pending forecasts
+        d.foreach { det =>
+          val kept = pending.dequeueAll.filter { p =>
+            if (p.start <= det.counter && det.counter <= p.end) {
+              cum += (if (p.positive) ClassStats(1, 0, 0, 0) else ClassStats(0, 0, 0, 1))
+              false
+            } else true
+          }
+          pending ++= kept
+        }
+        val counter = engineRun.eventCounter
+        while (pending.nonEmpty && pending.head.end < counter) {
+          val p = pending.dequeue()
+          cum += (if (p.positive) ClassStats(0, 0, 1, 0) else ClassStats(0, 1, 0, 0))
+        }
+        // periodic report (event-time schedule, WayebEngine.java:370-430)
+        if (nextReportTime == -1L) nextReportTime = e.timestamp + reportingDistance
+        else if (e.timestamp >= nextReportTime) {
+          val batch = ClassStats(cum.tp - prev.tp, cum.tn - prev.tn,
+            cum.fp - prev.fp, cum.fn - prev.fn)
+          val report = adapt.Report(e.timestamp, key,
+            adapt.MetricGroup.of(cum), adapt.MetricGroup.ofBatch(batch))
+          out(Out("report", key, counter, e.id, e.timestamp,
+            batch.tp, batch.fp, report.batch.mcc, positive = batch.tp + batch.fp + batch.fn > 0,
+            payload = reportJson(report)))
+          prev = cum
+          nextReportTime = e.timestamp + reportingDistance
+        }
+      }
+    }
+
+    def snapshot: EngineSnapshot = {
+      if (!started) start()
+      val run = engineRun.snapshot
+      EngineSnapshot(run.det, run.buffer, paused, currentId, latestId, pendingAt,
+        pending.toSeq, Seq(cum.tp, cum.tn, cum.fp, cum.fn),
+        Seq(prev.tp, prev.tn, prev.fp, prev.fn), nextReportTime)
+    }
   }
 
   private def reportJson(r: adapt.Report): String = adapt.Json.render(
@@ -249,52 +245,4 @@ object Inference {
     out.filter(col("kind") === "detection"),
     out.filter(col("kind") === "forecast"),
     out.filter(col("kind") === "report"))
-}
-
-/** SpstRun variant whose internal state (DetRun 4-tuple + symbol buffer)
-  * can be snapshotted/restored and whose model can be swapped in place —
-  * what GroupState needs (reference snapshot: WayebEngine.java:276-287).
-  */
-final class RestorableSpstRun(
-    cp: CompiledPattern,
-    private var spst: Spst,
-    private var table: Map[(List[Int], Int), ForecastInterval],
-    val partition: String) extends Serializable {
-
-  private val det = new DetRun(cp, partition)
-  private var buffer = new SymbolBuffer(math.max(1, spst.order))
-
-  def detSnapshot: DetRunState = det.snapshot
-  def bufferSnapshot: Seq[Int] = buffer.snapshot
-  def eventCounter: Long = det.eventCounter
-  def restore(d: DetRunState, buf: Seq[Int]): Unit = { det.restore(d); buffer.restore(buf) }
-
-  /** Swap the model; the symbol buffer survives (SPST warm-up across swaps,
-    * reference Run.scala:305-460 + SURVEY.md §7.4). The snapshot is
-    * most-recent-first; SymbolBuffer.restore keeps the newest `size`
-    * symbols on overflow, so it is passed unchanged.
-    */
-  def swapModel(newSpst: Spst, newTable: Map[(List[Int], Int), ForecastInterval]): Unit = {
-    val keep = buffer.snapshot
-    spst = newSpst
-    table = newTable
-    buffer = new SymbolBuffer(math.max(1, newSpst.order))
-    buffer.restore(keep)
-  }
-
-  def step(e: CEvent): (Option[Detection], Option[ForecastOut]) = {
-    if (e.isReset) { det.reset(); buffer.clear(); return (None, None) }
-    val sym = cp.iso.evaluate(e)
-    if (sym >= 0) buffer.push(sym)
-    val d = det.step(e, sym) // symbol already evaluated for the buffer
-    val f =
-      if (buffer.isFull) {
-        val label = spst.pst.nodeFor(buffer.pop).label
-        table.get((label, det.currentState)).filter(_.isValid).map { fi =>
-          ForecastOut(partition, det.eventCounter, e.id, e.timestamp,
-            det.eventCounter + fi.start, det.eventCounter + fi.end, fi.prob, fi.positive)
-        }
-      } else None
-    (d, f)
-  }
 }

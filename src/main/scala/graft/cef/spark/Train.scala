@@ -1,7 +1,7 @@
 package graft.cef.spark
 
 import graft.cef._
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Distributed model training (reference SURVEY.md §2.7 T1-T3).
@@ -30,22 +30,14 @@ object Train {
   /** Count symbol windows of length ≤ maxLen per partition key. */
   def countWindows(events: Dataset[CEvent], cp: CompiledPattern, maxLen: Int): Dataset[WindowCount] = {
     val iso = cp.iso
-    events
-      .repartition(col("partition"))
-      .sortWithinPartitions(col("partition"), col("timestamp"), col("id"))
-      .mapPartitions { rows =>
-        var key: String = null
-        var buf: SymbolBuffer = null
-        rows.flatMap { e =>
-          if (e.partition != key) { key = e.partition; buf = new SymbolBuffer(maxLen) }
-          if (e.isReset) { buf.clear(); Iterator.empty }
-          else {
-            val sym = iso.evaluate(e)
-            if (sym < 0) Iterator.empty
-            else { buf.push(sym); Iterator.single(SymbolWindow(buf.pop)) }
-          }
-        }
+    Keyed.scan(events)(_ => new SymbolBuffer(maxLen)) { (buf, e) =>
+      if (e.isReset) { buf.clear(); Iterator.empty }
+      else {
+        val sym = iso.evaluate(e)
+        if (sym < 0) Iterator.empty
+        else { buf.push(sym); Iterator.single(SymbolWindow(buf.pop)) }
       }
+    }
       .groupBy(col("word"))
       .agg(count(lit(1)).as("n"))
       .as[WindowCount]
@@ -207,32 +199,21 @@ object Train {
 
   /** Transition counting over any SDFA — pass a disambiguated automaton
     * (Disambiguator, order m) to estimate a full-order-m chain. */
-  def countTransitions(events: Dataset[CEvent], sdfa: Sdfa): Dataset[((Int, Int), Long)] = {
-    implicit val kvEnc: Encoder[((Int, Int), Long)] =
-      Encoders.tuple(pairEnc, Encoders.scalaLong)
-    events
-      .repartition(col("partition"))
-      .sortWithinPartitions(col("partition"), col("timestamp"), col("id"))
-      .mapPartitions { rows =>
-        var key: String = null
-        var state = sdfa.start
-        rows.flatMap { e =>
-          if (e.partition != key) { key = e.partition; state = sdfa.start }
-          if (e.isReset) { state = sdfa.start; Iterator.empty }
-          else {
-            val sym = sdfa.iso.evaluate(e)
-            if (sym < 0) Iterator.empty
-            else {
-              val prev = state
-              state = sdfa.delta(prev)(sym)
-              Iterator.single((prev, state))
-            }
-          }
+  def countTransitions(events: Dataset[CEvent], sdfa: Sdfa): Dataset[((Int, Int), Long)] =
+    Keyed.scan(events)(_ => new SdfaTrail(sdfa, 0)) { (run, e) =>
+      if (e.isReset) { run.clear(); Iterator.empty }
+      else {
+        val sym = sdfa.iso.evaluate(e)
+        if (sym < 0) Iterator.empty
+        else {
+          val prev = run.state
+          run.advance(sym)
+          Iterator.single((prev, run.state))
         }
       }
+    }
       .groupByKey(identity)
       .count()
-  }
 
   /** T6: supervised FSM-state HMM estimator (reference estimator/
     * HMMEstimator/FSMStateEstimator.scala:34-140) as a distributed count
@@ -253,50 +234,28 @@ object Train {
     val depth = (if (reachable.isEmpty) 1 else reachable.max + 1).max(1)
     implicit val tripleEnc: Encoder[(Int, Int, Int)] =
       Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt, Encoders.scalaInt)
-    val counts = events
-      .repartition(col("partition"))
-      .sortWithinPartitions(col("partition"), col("timestamp"), col("id"))
-      .mapPartitions { rows =>
-        var key: String = null
-        var state = sdfa.start
-        var symBuf: Array[Int] = null
-        var stBuf: Array[Int] = null
-        var len = 0
-        def clear(): Unit = { state = sdfa.start; len = 0 }
-        rows.flatMap { e =>
-          if (e.partition != key) {
-            key = e.partition
-            symBuf = new Array[Int](depth); stBuf = new Array[Int](depth)
-            clear()
-          }
-          if (e.isReset) { clear(); Iterator.empty }
-          else {
-            val sym = sdfa.iso.evaluate(e)
-            if (sym < 0) Iterator.empty
-            else {
-              state = sdfa.delta(state)(sym)
-              if (len == depth) {
-                System.arraycopy(symBuf, 1, symBuf, 0, depth - 1)
-                System.arraycopy(stBuf, 1, stBuf, 0, depth - 1)
-                len -= 1
-              }
-              symBuf(len) = sym; stBuf(len) = state; len += 1
-              if (sdfa.isFinal(state)) {
-                // one training sequence: pi + transition + emission counts
-                val out = List.newBuilder[(Int, Int, Int)]
-                out += ((0, symBuf(0), 0))
-                var i = 0
-                while (i < len) {
-                  out += ((2, symBuf(i), stBuf(i)))
-                  if (i > 0) out += ((1, symBuf(i - 1), symBuf(i)))
-                  i += 1
-                }
-                out.result().iterator
-              } else Iterator.empty
+    val counts = Keyed.scan(events)(_ => new SdfaTrail(sdfa, depth)) { (run, e) =>
+      if (e.isReset) { run.clear(); Iterator.empty }
+      else {
+        val sym = sdfa.iso.evaluate(e)
+        if (sym < 0) Iterator.empty
+        else {
+          run.advance(sym)
+          if (sdfa.isFinal(run.state)) {
+            // one training sequence: pi + transition + emission counts
+            val out = List.newBuilder[(Int, Int, Int)]
+            out += ((0, run.syms(0), 0))
+            var i = 0
+            while (i < run.len) {
+              out += ((2, run.syms(i), run.states(i)))
+              if (i > 0) out += ((1, run.syms(i - 1), run.syms(i)))
+              i += 1
             }
-          }
+            out.result().iterator
+          } else Iterator.empty
         }
       }
+    }
       .groupByKey(x => x)
       .count()
       .collect() // model-sized: ≤ |Σ| + |Σ|² + |Σ|·|Q| distinct keys
@@ -333,8 +292,8 @@ object Train {
     (MarkovChain.mle(dis.sdfa.nStates, counts, dis.sdfa.finals), dis)
   }
 
-  /** Run SPST forecasting + detection over events (batch): per-key
-    * [[SpstRun]] with the same secondary-sort scan as [[Detect]].
+  /** Run SPST forecasting over events (batch): per-key [[SpstRun]] on
+    * the batch scan ([[Keyed.scan]]).
     */
   def forecasts(
       events: Dataset[CEvent],
@@ -346,17 +305,31 @@ object Train {
       horizon: Int): Dataset[ForecastOut] = {
     implicit val fEnc: Encoder[ForecastOut] = Encoders.product[ForecastOut]
     val table = spst.forecastTable(method, threshold, spread, horizon)
-    events
-      .repartition(col("partition"))
-      .sortWithinPartitions(col("partition"), col("timestamp"), col("id"))
-      .mapPartitions { rows =>
-        var key: String = null
-        var run: SpstRun = null
-        rows.flatMap { e =>
-          if (e.partition != key) { key = e.partition; run = new SpstRun(cp, spst, table, key) }
-          run.step(e)._2.iterator
-        }
+    Keyed.scan(events)(key => new SpstRun(cp, spst, table, key))((run, e) => run.step(e)._2.iterator)
+  }
+}
+
+/** Per-key state of the SDFA replay scans: the run's state and the last
+  * `depth` (symbol, state) steps, oldest first.
+  */
+private final class SdfaTrail(sdfa: Sdfa, depth: Int) {
+  var state: Int = sdfa.start
+  val syms = new Array[Int](depth)
+  val states = new Array[Int](depth)
+  var len = 0
+
+  def clear(): Unit = { state = sdfa.start; len = 0 }
+
+  def advance(sym: Int): Unit = {
+    state = sdfa.delta(state)(sym)
+    if (depth > 0) {
+      if (len == depth) {
+        System.arraycopy(syms, 1, syms, 0, depth - 1)
+        System.arraycopy(states, 1, states, 0, depth - 1)
+        len -= 1
       }
+      syms(len) = sym; states(len) = state; len += 1
+    }
   }
 }
 
