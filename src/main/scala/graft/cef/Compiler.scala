@@ -19,6 +19,10 @@ final case class CompiledPattern(
   def iso: Isomorphism = sdfa.iso
   def window: Long = pattern.window
   def windowKind: WindowKind = pattern.windowKind
+  /** Event attributes any runtime of this pattern reads: the symbol
+    * predicates (declaration extras included) and the SNFA guards
+    * (register predicates included). The keyed operators ship only these. */
+  def attrsRead: Set[String] = iso.attrsRead ++ snfa.predicates.flatMap(_.attrsRead)
 }
 
 object Compiler {

@@ -16,6 +16,30 @@ sealed trait Predicate extends Product with Serializable {
   def eval(e: CEvent, valuation: Map[String, CEvent]): Boolean = eval(e)
   /** Registers this predicate reads (empty for ordinary predicates). */
   def registersRead: Set[String] = Set.empty
+  /** Event attributes this predicate reads: the names it passes to
+    * `numberOf`/`stringOf` (a register predicate reads the same attribute
+    * on the current and on the stored event). */
+  def attrsRead: Set[String] = {
+    import Predicate._
+    this match {
+      case IsEventType(_) | True                 => Set.empty
+      case EQ(a, _)                              => Set(a)
+      case GT(a, _)                              => Set(a)
+      case GTE(a, _)                             => Set(a)
+      case LT(a, _)                              => Set(a)
+      case LTE(a, _)                             => Set(a)
+      case BT(a, _, _)                           => Set(a)
+      case EQStr(a, _)                           => Set(a)
+      case WithinCircle(lon, lat, _, _, _)       => Set(lon, lat)
+      case OutsideCircle(lon, lat, _, _, _)      => Set(lon, lat)
+      case DistanceBetween(lon, lat, _, _, _, _) => Set(lon, lat)
+      case HeadingTowards(lon, lat, hd, _, _, _) => Set(lon, lat, hd)
+      case EQAttr(a, _)                          => Set(a)
+      case GTAttr(a, _)                          => Set(a)
+      case LTAttr(a, _)                          => Set(a)
+      case EQAttrStr(a, _)                       => Set(a)
+    }
+  }
 }
 
 object Predicate {
@@ -230,6 +254,9 @@ final case class Isomorphism(
     minterms: Vector[Map[Predicate, Boolean]]) {
 
   val size: Int = minterms.size
+
+  /** Event attributes [[evaluate]] reads. */
+  def attrsRead: Set[String] = predicates.flatMap(_.attrsRead).toSet
 
   // Hot-path layout: the truth assignment of the k base predicates packs
   // into a k-bit mask; a dense Array[Int] maps mask → symbol (-1 for

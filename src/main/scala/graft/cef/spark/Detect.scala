@@ -86,7 +86,7 @@ object Detect {
 
   /** Detection points from the deterministic streaming-SDFA runtime. */
   def detections(events: KeyedEvents, cp: CompiledPattern): Dataset[Detection] =
-    Keyed.scan(events)(key => new DetRun(cp, key))((run, e) => run.step(e).iterator)
+    Keyed.scan(events, cp.attrsRead)(key => new DetRun(cp, key))((run, e) => run.step(e).iterator)
 
   /** Multi-pattern detection (a `&`-separated pattern file, docs/lang.md):
     * one pass over the data drives ALL automata per key — the reference's
@@ -98,7 +98,8 @@ object Detect {
       cps: Seq[CompiledPattern]): Dataset[(Int, Detection)] = {
     implicit val enc: Encoder[(Int, Detection)] =
       Encoders.tuple(Encoders.scalaInt, detEnc)
-    Keyed.scan(events)(key => cps.map(cp => new DetRun(cp, key)).toArray) {
+    Keyed.scan(events, cps.flatMap(_.attrsRead).toSet)(
+        key => cps.map(cp => new DetRun(cp, key)).toArray) {
       (runs, e) => runs.iterator.zipWithIndex.flatMap {
         case (run, fsmId) => run.step(e).map(fsmId -> _)
       }
@@ -111,7 +112,7 @@ object Detect {
     * the forecast-ready alternative to match enumeration.
     */
   def detectionsDsra(events: KeyedEvents, cp: CompiledPattern): Dataset[Detection] =
-    Keyed.scan(events)(key => new DsraRun(cp, key))((run, e) => run.step(e).iterator)
+    Keyed.scan(events, cp.attrsRead)(key => new DsraRun(cp, key))((run, e) => run.step(e).iterator)
 
   /** SPSTm symbolization of the DSRA runtime: one row per event with its
     * symbol and anchor-age state ([[graft.cef.DsraSymbolizer]]; `grid`,
@@ -122,7 +123,7 @@ object Detect {
       cp: CompiledPattern,
       grid: Long = 0L): Dataset[DsraStep] = {
     implicit val stepEnc: Encoder[DsraStep] = Encoders.product[DsraStep]
-    Keyed.scan(events)(DsraSymbolizer(cp, grid))((sym, e) => sym.step(e).iterator)
+    Keyed.scan(events, cp.attrsRead)(DsraSymbolizer(cp, grid))((sym, e) => sym.step(e).iterator)
   }
 
   /** Full match enumeration from the nondeterministic runtime.
@@ -132,7 +133,8 @@ object Detect {
       events: KeyedEvents,
       cp: CompiledPattern,
       maxThreads: Int = MatchRun.DefaultMaxThreads): Dataset[MatchOut] =
-    Keyed.scan(events)(key => new MatchRun(cp, key, maxThreads))((run, e) => run.step(e).iterator)
+    Keyed.scan(events, cp.attrsRead)(key => new MatchRun(cp, key, maxThreads))(
+      (run, e) => run.step(e).iterator)
 
   /** MonoRun fast path for the reference opt engine's regime
     * (ERFOptEngine.scala:91-287): a SINGLE pattern with NO partition
@@ -155,8 +157,9 @@ object Detect {
       events: KeyedEvents,
       cp: CompiledPattern,
       maxThreads: Int = MatchRun.DefaultMaxThreads): Dataset[MatchOut] = {
-    val rebuild = events.rebuild
-    events.rows.coalesce(1)
+    val pruned = events.prune(cp.attrsRead)
+    val rebuild = pruned.rebuild
+    pruned.rows.coalesce(1)
       .sortWithinPartitions(col("timestamp"), col("id"))
       .mapPartitions { rows =>
         val evs = rows.map(rebuild)

@@ -73,18 +73,30 @@ object Inference {
     * snapshot plus the reporting state (pending unresolved forecasts,
     * cumulative + last-reported confusion counts, next report time) —
     * exactly the reference's keyed state set (WayebEngine.java:103-128).
+    *
+    * Flat on purpose: primitives and primitive arrays only, so the state
+    * row of every key encodes and decodes on every batch without
+    * Catalyst's per-element object loops. The [[DetRunState]] fields are
+    * inline, the SPST symbol buffer is most-recent-first, the pending
+    * forecasts are three parallel arrays (positive, start, end) and
+    * `cum`/`prev` are the (tp, tn, fp, fn) counts.
     */
   final case class EngineSnapshot(
-      det: DetRunState,
-      buffer: Seq[Int],
+      state: Int,
+      counter: Long,
+      minCounter: Long,
+      minTs: Long,
+      buffer: Array[Int],
       paused: Boolean,
       currentModelId: Int,
       latestModelId: Int,
       pendingSwapAt: Long,
-      pendingForecasts: Seq[PendingForecast] = Nil,
-      cum: Seq[Long] = Seq(0L, 0L, 0L, 0L),
-      prev: Seq[Long] = Seq(0L, 0L, 0L, 0L),
-      nextReportTime: Long = -1L)
+      pendingPositive: Array[Boolean],
+      pendingStart: Array[Long],
+      pendingEnd: Array[Long],
+      cum: Array[Long],
+      prev: Array[Long],
+      nextReportTime: Long)
 
   final case class PendingForecast(positive: Boolean, start: Long, end: Long)
 
@@ -106,7 +118,7 @@ object Inference {
       initialModelId: Int = 0,
       swapDelay: Long = 0L,
       reportingDistance: Long = 3600L): Dataset[Out] =
-    Keyed.stream(events)(key => new EngineRun(key, cp, loadModel, controls,
+    Keyed.stream(events, cp.attrsRead)(key => new EngineRun(key, cp, loadModel, controls,
       initialModelId, swapDelay, reportingDistance))
 
   /** The keyed forecasting engine of one key for one micro-batch: a
@@ -115,7 +127,7 @@ object Inference {
     * `feed` (or `snapshot`): the restored snapshot, then the control
     * summary (read once per key per batch), then the current model.
     */
-  private final class EngineRun(
+  private[cef] final class EngineRun(
       key: String,
       cp: CompiledPattern,
       loadModel: Int => (Spst, Map[(List[Int], Int), ForecastInterval]),
@@ -162,8 +174,13 @@ object Inference {
       val (spst, table) = loadModel(currentId)
       engineRun = new SpstRun(cp, spst, table, key)
       snap.foreach { s =>
-        engineRun.restore(SpstStreamState(s.det, s.buffer))
-        pending ++= s.pendingForecasts
+        engineRun.restore(SpstStreamState(
+          DetRunState(s.state, s.counter, s.minCounter, s.minTs), s.buffer.toSeq))
+        var i = 0
+        while (i < s.pendingStart.length) {
+          pending += PendingForecast(s.pendingPositive(i), s.pendingStart(i), s.pendingEnd(i))
+          i += 1
+        }
         cum = ClassStats(s.cum(0), s.cum(1), s.cum(2), s.cum(3))
         prev = ClassStats(s.prev(0), s.prev(1), s.prev(2), s.prev(3))
         nextReportTime = s.nextReportTime
@@ -226,9 +243,13 @@ object Inference {
     def snapshot: EngineSnapshot = {
       if (!started) start()
       val run = engineRun.snapshot
-      EngineSnapshot(run.det, run.buffer, paused, currentId, latestId, pendingAt,
-        pending.toSeq, Seq(cum.tp, cum.tn, cum.fp, cum.fn),
-        Seq(prev.tp, prev.tn, prev.fp, prev.fn), nextReportTime)
+      val det = run.det
+      val ps = pending.toArray
+      EngineSnapshot(det.state, det.counter, det.minCounter, det.minTs, run.buffer.toArray,
+        paused, currentId, latestId, pendingAt,
+        ps.map(_.positive), ps.map(_.start), ps.map(_.end),
+        Array(cum.tp, cum.tn, cum.fp, cum.fn), Array(prev.tp, prev.tn, prev.fp, prev.fn),
+        nextReportTime)
     }
   }
 

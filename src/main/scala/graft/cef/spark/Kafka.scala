@@ -1,6 +1,5 @@
 package graft.cef.spark
 
-import graft.cef.CEvent
 import graft.cef.adapt.{FactoryReport, SyncCommand}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -63,14 +62,16 @@ object Kafka {
       .option("checkpointLocation", checkpoint)
 
   /** Maritime events end-to-end: Kafka value strings → parsed maritime
-    * frame → typed CEvents keyed by mmsi (streaming equivalent of
-    * [[Sources.maritimeEvents]]). `idCol` must be unique and
+    * frame → the narrow event stream keyed by mmsi ([[Detect.toEventStream]];
+    * streaming equivalent of [[Sources.maritimeEvents]]). The keyed
+    * operators keep only the attributes their pattern reads, so the
+    * unused maritime fields are never built. `idCol` must be unique and
     * arrival-monotone per key; `monotonically_increasing_id` is NOT legal
     * on streaming plans, so the overload derives the id from Kafka's
     * (offset, partition) pair — unique and offset-monotone within each
     * Kafka partition for up to 4096 partitions.
     */
-  def maritimeEventStream(raw: DataFrame, idCol: Column): Dataset[CEvent] = {
+  def maritimeEventStream(raw: DataFrame, idCol: Column): EventStream = {
     val parsed = Sources.maritimeFromJson(
       raw
         .select(from_json(col("value"), Sources.maritimeJsonSchema).as("j"),
@@ -80,11 +81,11 @@ object Kafka {
     val numCols = parsed.schema.fields.collect {
       case f if f.dataType.typeName == "double" => f.name
     }.toSeq
-    Detect.toEvents(parsed, "__id", "eventType", "timestamp", "mmsi", numAttrs = numCols)
+    Detect.toEventStream(parsed, "__id", "eventType", "timestamp", "mmsi", numAttrs = numCols)
   }
 
   /** [[eventSource]] output → events, with the Kafka arrival id. */
-  def maritimeEventStream(raw: DataFrame): Dataset[CEvent] =
+  def maritimeEventStream(raw: DataFrame): EventStream =
     maritimeEventStream(raw, col("kafka_offset") * lit(4096L) + col("kafka_partition"))
 
   /** S2 consumer: dispatch one control micro-batch of (topic, value) rows

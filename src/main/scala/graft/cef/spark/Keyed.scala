@@ -2,7 +2,7 @@ package graft.cef.spark
 
 import graft.cef._
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.functions.{col, map_keys, map_values}
+import org.apache.spark.sql.functions.{array, col, map_filter, map_keys, map_values}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import scala.language.implicitConversions
 
@@ -32,12 +32,15 @@ import scala.language.implicitConversions
 object Keyed {
 
   /** Shuffle by key, external-sort by (key, ts, id), stream per-key state:
-    * `mk(key)` at each key's first row, `step` for every event.
+    * `mk(key)` at each key's first row, `step` for every event. `attrs`
+    * are the attributes `step` reads ([[CompiledPattern.attrsRead]]); the
+    * others are dropped before the shuffle ([[KeyedEvents.prune]]).
     */
-  def scan[R, O: Encoder](events: KeyedEvents)(mk: String => R)(
+  def scan[R, O: Encoder](events: KeyedEvents, attrs: Set[String])(mk: String => R)(
       step: (R, CEvent) => Iterator[O]): Dataset[O] = {
-    val rebuild = events.rebuild
-    events.rows
+    val pruned = events.prune(attrs)
+    val rebuild = pruned.rebuild
+    pruned.rows
       .repartition(col("partition"))
       .sortWithinPartitions(col("partition"), col("timestamp"), col("id"))
       .mapPartitions { rows =>
@@ -59,17 +62,28 @@ object Keyed {
     * keys — the Spark analogue of the reference's run-pool expiration GC
     * (`expirationDeadline`, ERFEngine.scala:95-101, RunPool.scala:186;
     * SURVEY.md §2.3 K5): a key that receives no events for the TTL loses
-    * its state and restarts from a fresh runtime.
+    * its state and restarts from a fresh runtime. Spark plans another
+    * micro-batch after every batch under that timeout, so a TTL stream
+    * needs a trigger interval (`Trigger.ProcessingTime`): with the
+    * default trigger an idle query runs empty batches back to back. Under
+    * any trigger `processAllAvailable()` does not return, because a batch
+    * is always planned.
+    *
+    * `attrs` are the attributes the runtime reads, as in [[scan]]. The
+    * session's checkpoint files go through [[CheckpointFiles]] unless it
+    * names its own manager.
     */
-  def stream[S: Encoder, O: Encoder](events: KeyedEvents, stateTtl: Long = 0L)(
+  def stream[S: Encoder, O: Encoder](events: KeyedEvents, attrs: Set[String], stateTtl: Long = 0L)(
       mk: String => KeyedRuntime[S, O]): Dataset[O] = {
-    val rebuild = events.rebuild
+    val pruned = events.prune(attrs)
+    val rebuild = pruned.rebuild
     val timeout =
       if (stateTtl > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    events.rows
-      .groupByKey((r: events.Row) => r.partition)(Encoders.STRING)
+    CheckpointFiles.selectIn(pruned.rows.sparkSession)
+    pruned.rows
+      .groupByKey((r: pruned.Row) => r.partition)(Encoders.STRING)
       .flatMapGroupsWithState[S, O](OutputMode.Append, timeout) {
-        (key: String, rows: Iterator[events.Row], state: GroupState[S]) =>
+        (key: String, rows: Iterator[pruned.Row], state: GroupState[S]) =>
           if (state.hasTimedOut) {
             state.remove() // stale run reclaimed
             Iterator.empty
@@ -121,31 +135,50 @@ object Keyed {
   * the whole streaming steady state (SCALE.md round-13 throughput table:
   * 0.52 -> 1.24 M ev/s at a 4M batch) and 1.5x on the batch scan (2.28 →
   * 3.37 M ev/s over 4M events).
+  *
+  * Pruning rule ([[prune]]): the keyed operators ship only the attributes
+  * their pattern reads. An attribute in the set that is present on an
+  * event stays present, and an absent one stays absent, so
+  * `CEvent.numberOf`/`stringOf` keep their num↔str fallbacks and their
+  * errors; the attributes outside the set are never built (an
+  * EventStream's unused value slots fold away in Catalyst, a
+  * `Dataset[CEvent]`'s maps are filtered before `map_keys`/`map_values`).
   */
 sealed abstract class KeyedEvents {
   type Row <: KeyedRow
-  val rows: Dataset[Row]
+  def rows: Dataset[Row]
   /** Serializable and free of the Dataset: it rides the task closure. */
   val rebuild: Row => CEvent
+  /** The same events carrying only the attributes in `attrs`. */
+  def prune(attrs: Set[String]): KeyedEvents
 }
 
 object KeyedEvents {
   private val narrowEnc: Encoder[NarrowEvent] = Encoders.product[NarrowEvent]
 
-  implicit def fromDataset(events: Dataset[CEvent]): KeyedEvents = new KeyedEvents {
-    type Row = NarrowEvent
-    val rows: Dataset[NarrowEvent] = events.toDF().select(
-      col("id"), col("eventType"), col("timestamp"), col("partition"),
-      map_keys(col("num")).as("numK"), map_values(col("num")).as("numV"),
-      map_keys(col("str")).as("strK"), map_values(col("str")).as("strV"))
-      .as[NarrowEvent](narrowEnc)
-    val rebuild: NarrowEvent => CEvent = NarrowEvent.rebuild
-  }
+  implicit def fromDataset(events: Dataset[CEvent]): KeyedEvents = narrowed(events, None)
+
+  private def narrowed(events: Dataset[CEvent], attrs: Option[Set[String]]): KeyedEvents =
+    new KeyedEvents {
+      type Row = NarrowEvent
+      lazy val rows: Dataset[NarrowEvent] = {
+        def kept(m: String) =
+          attrs.fold(col(m))(a => map_filter(col(m), (k, _) => k.isin(a.toSeq: _*)))
+        events.toDF().select(
+          col("id"), col("eventType"), col("timestamp"), col("partition"),
+          map_keys(kept("num")).as("numK"), map_values(kept("num")).as("numV"),
+          map_keys(kept("str")).as("strK"), map_values(kept("str")).as("strV"))
+          .as[NarrowEvent](narrowEnc)
+      }
+      val rebuild: NarrowEvent => CEvent = NarrowEvent.rebuild
+      def prune(a: Set[String]): KeyedEvents = narrowed(events, Some(attrs.fold(a)(_ intersect a)))
+    }
 
   implicit def fromStream(events: EventStream): KeyedEvents = new KeyedEvents {
     type Row = NEvent
     val rows: Dataset[NEvent] = events.ds
     val rebuild: NEvent => CEvent = NEvent.rebuilder(events.numNames, events.strNames)
+    def prune(attrs: Set[String]): KeyedEvents = fromStream(events.prune(attrs))
   }
 }
 
@@ -186,7 +219,24 @@ object NEvent {
 final case class EventStream(
     ds: Dataset[NEvent],
     numNames: Array[String],
-    strNames: Array[String])
+    strNames: Array[String]) {
+
+  /** The value slots of the attributes in `attrs` only. Each kept slot is
+    * `numV[i]`/`strV[i]` over the ingest's `array(...)`, which Catalyst
+    * folds to the source column, so the dropped attributes are never
+    * computed. */
+  def prune(attrs: Set[String]): EventStream = {
+    val num = numNames.indices.filter(i => attrs(numNames(i)))
+    val str = strNames.indices.filter(i => attrs(strNames(i)))
+    if (num.length == numNames.length && str.length == strNames.length) this
+    else EventStream(
+      ds.select(col("id"), col("eventType"), col("timestamp"), col("partition"),
+        array(num.map(col("numV")(_)): _*).cast("array<double>").as("numV"),
+        array(str.map(col("strV")(_)): _*).cast("array<string>").as("strV"))
+        .as[NEvent](Encoders.product[NEvent]),
+      num.map(numNames).toArray, str.map(strNames).toArray)
+  }
+}
 
 /** Shuffle-side row of a `Dataset[CEvent]`: the attr maps as parallel
   * key/value arrays (see [[KeyedEvents]]).

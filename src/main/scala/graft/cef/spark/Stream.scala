@@ -26,13 +26,17 @@ object Stream {
 
   /** Deterministic detection-point stream (R1 over the streaming SDFA).
     * `stateTtl` (milliseconds, 0 = keep forever) expires idle keys, see
-    * [[Keyed.stream]].
+    * [[Keyed.stream]]. A TTL stream needs a trigger interval
+    * (`Trigger.ProcessingTime`): under its processing-time timeout Spark
+    * plans another micro-batch after every batch, so with the default
+    * trigger an idle query runs empty batches back to back (and under any
+    * trigger `processAllAvailable()` does not return).
     */
   def detections(
       events: KeyedEvents,
       cp: CompiledPattern,
       stateTtl: Long = 0L): Dataset[Detection] =
-    Keyed.stream(events, stateTtl)(key => new DetRun(cp, key))
+    Keyed.stream(events, cp.attrsRead, stateTtl)(key => new DetRun(cp, key))
 
   /** C10 deterministic register-pattern stream: the DSRA hyper-state
     * (configuration set + valuations + window anchors) lives in GroupState,
@@ -40,7 +44,7 @@ object Stream {
     */
   def detectionsDsra(events: KeyedEvents, cp: CompiledPattern): Dataset[Detection] = {
     implicit val dsraStateEnc: Encoder[DsraRunState] = Encoders.product[DsraRunState]
-    Keyed.stream(events)(key => new DsraRun(cp, key))
+    Keyed.stream(events, cp.attrsRead)(key => new DsraRun(cp, key))
   }
 
   /** Full match-enumeration stream (R4): thread pool lives in GroupState,
@@ -52,7 +56,7 @@ object Stream {
       cp: CompiledPattern,
       maxThreads: Int = MatchRun.DefaultMaxThreads): Dataset[MatchOut] = {
     implicit val matchStateEnc: Encoder[MatchRunState] = Encoders.product[MatchRunState]
-    Keyed.stream(events)(key => new MatchRun(cp, key, maxThreads))
+    Keyed.stream(events, cp.attrsRead)(key => new MatchRun(cp, key, maxThreads))
   }
 
   /** F5 through the streaming engine: the forecasting runtime ([[SpstRun]]
@@ -69,7 +73,7 @@ object Stream {
       spst: Spst,
       table: Map[(List[Int], Int), ForecastInterval]): Dataset[ForecastOut] = {
     implicit val stEnc: Encoder[SpstStreamState] = Encoders.product[SpstStreamState]
-    Keyed.stream(events)(key => new SpstRun(cp, spst, table, key))
+    Keyed.stream(events, cp.attrsRead)(key => new SpstRun(cp, spst, table, key))
   }
 
   /** F5 for REGISTER patterns (C10×F2): the DSRA hyper-state plus the
@@ -87,7 +91,7 @@ object Stream {
       grid: Long = 0L): Dataset[ForecastOut] = {
     implicit val stEnc: Encoder[SpstmStreamState] = Encoders.product[SpstmStreamState]
     val symbolizer = DsraSymbolizer(cp, grid)
-    Keyed.stream(events)(key => new SpstmRun(symbolizer(key), m, table))
+    Keyed.stream(events, cp.attrsRead)(key => new SpstmRun(symbolizer(key), m, table))
   }
 
   /** The same deterministic runtime on Spark 4's transformWithState
@@ -95,6 +99,9 @@ object Stream {
     * variables, native TTL, RocksDB-only backend). Functionally identical
     * to [[detections]]; both are kept because transformWithState requires
     * the RocksDB state store while flatMapGroupsWithState runs anywhere.
+    * A TTL runs in processing-time mode, under which Spark plans another
+    * micro-batch after every batch too: give the query a trigger interval,
+    * as for [[detections]].
     */
   def detectionsTws(
       events: KeyedEvents,
@@ -103,9 +110,11 @@ object Stream {
     // Spark 4 rejects TTLConfig outside ProcessingTime mode
     // (StatefulProcessorHandleImpl.validateTTLConfig)
     val timeMode = if (stateTtl > 0) TimeMode.ProcessingTime() else TimeMode.None()
-    events.rows
-      .groupByKey((r: events.Row) => r.partition)(Encoders.STRING)
-      .transformWithState(new DetProcessor(cp, stateTtl, events.rebuild), timeMode, OutputMode.Append())
+    val pruned = events.prune(cp.attrsRead)
+    CheckpointFiles.selectIn(pruned.rows.sparkSession)
+    pruned.rows
+      .groupByKey((r: pruned.Row) => r.partition)(Encoders.STRING)
+      .transformWithState(new DetProcessor(cp, stateTtl, pruned.rebuild), timeMode, OutputMode.Append())
   }
 }
 

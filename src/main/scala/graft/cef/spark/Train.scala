@@ -30,7 +30,7 @@ object Train {
   /** Count symbol windows of length ≤ maxLen per partition key. */
   def countWindows(events: Dataset[CEvent], cp: CompiledPattern, maxLen: Int): Dataset[WindowCount] = {
     val iso = cp.iso
-    Keyed.scan(events)(_ => new SymbolBuffer(maxLen)) { (buf, e) =>
+    Keyed.scan(events, cp.attrsRead)(_ => new SymbolBuffer(maxLen)) { (buf, e) =>
       if (e.isReset) { buf.clear(); Iterator.empty }
       else {
         val sym = iso.evaluate(e)
@@ -200,7 +200,7 @@ object Train {
   /** Transition counting over any SDFA — pass a disambiguated automaton
     * (Disambiguator, order m) to estimate a full-order-m chain. */
   def countTransitions(events: Dataset[CEvent], sdfa: Sdfa): Dataset[((Int, Int), Long)] =
-    Keyed.scan(events)(_ => new SdfaTrail(sdfa, 0)) { (run, e) =>
+    Keyed.scan(events, sdfa.iso.attrsRead)(_ => new SdfaTrail(sdfa, 0)) { (run, e) =>
       if (e.isReset) { run.clear(); Iterator.empty }
       else {
         val sym = sdfa.iso.evaluate(e)
@@ -234,7 +234,7 @@ object Train {
     val depth = (if (reachable.isEmpty) 1 else reachable.max + 1).max(1)
     implicit val tripleEnc: Encoder[(Int, Int, Int)] =
       Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt, Encoders.scalaInt)
-    val counts = Keyed.scan(events)(_ => new SdfaTrail(sdfa, depth)) { (run, e) =>
+    val counts = Keyed.scan(events, sdfa.iso.attrsRead)(_ => new SdfaTrail(sdfa, depth)) { (run, e) =>
       if (e.isReset) { run.clear(); Iterator.empty }
       else {
         val sym = sdfa.iso.evaluate(e)
@@ -305,7 +305,8 @@ object Train {
       horizon: Int): Dataset[ForecastOut] = {
     implicit val fEnc: Encoder[ForecastOut] = Encoders.product[ForecastOut]
     val table = spst.forecastTable(method, threshold, spread, horizon)
-    Keyed.scan(events)(key => new SpstRun(cp, spst, table, key))((run, e) => run.step(e)._2.iterator)
+    Keyed.scan(events, cp.attrsRead)(key => new SpstRun(cp, spst, table, key))(
+      (run, e) => run.step(e)._2.iterator)
   }
 }
 

@@ -5,10 +5,11 @@ import java.nio.file.attribute.FileTime
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
+import graft.cef.spark.CheckpointFiles
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, lit, ntile}
+import org.apache.spark.sql.functions.{lit, ntile}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -208,8 +209,12 @@ private[graft] object StreamScaffold {
     // The trailing no-data batch only advances the watermark once more:
     // its output matters only to append-mode watermarked aggregations
     // (cef40); for every other gate it is one more commit round.
+    // checkpoint files without forks (CheckpointFiles), unless the
+    // session names its own manager
     val scoped = Seq("spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString)
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString) ++
+      Option.when(s.conf.getOption(CheckpointFiles.Key).isEmpty)(
+        CheckpointFiles.Key -> classOf[CheckpointFiles].getName)
     val prev = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
     try {
       scoped.foreach { case (k, v) => s.conf.set(k, v) }

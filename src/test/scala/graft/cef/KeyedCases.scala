@@ -107,3 +107,61 @@ object KeyedCases {
   /** Output rows as sorted strings: multiset equality over any row type. */
   def canon(rows: Seq[org.apache.spark.sql.Row]): Seq[String] = rows.map(_.toString).sorted
 }
+
+/** A 30-attribute fixture (20 numeric, 10 string) whose patterns read
+  * three of them: `n03` (numeric), `s01` (string) and `s05`, a number
+  * stored as a string (`CEvent.numberOf`'s fallback). [[KeyedInputSpec]]
+  * checks that every keyed operation, which ships only the read
+  * attributes, equals a driver-side replay over these unpruned events.
+  */
+object WideCases {
+  val numNames: Seq[String] = (0 until 20).map(i => f"n$i%02d")
+  val strNames: Seq[String] = (0 until 10).map(i => f"s$i%02d")
+
+  val events: Seq[CEvent] = {
+    val rnd = new scala.util.Random(43)
+    val types = Vector("a", "b", "c")
+    val colors = Vector("red", "blue", "green")
+    (1 to 240).map { i =>
+      CEvent(i.toLong, types(rnd.nextInt(3)), i.toLong * 10, s"u${rnd.nextInt(4)}",
+        numNames.map(_ -> rnd.nextInt(100).toDouble).toMap,
+        strNames.map(a => a -> (if (a == "s05") rnd.nextInt(100).toString
+          else colors(rnd.nextInt(3)))).toMap)
+    }
+  }
+
+  /** The events as a narrow [[EventStream]] (every attribute a column). */
+  def narrow(wide: Dataset[CEvent]): EventStream = {
+    import org.apache.spark.sql.functions.col
+    val df = wide.toDF().select(Seq(col("id"), col("eventType"), col("timestamp"),
+      col("partition")) ++ numNames.map(a => col("num")(a).as(a)) ++
+      strNames.map(a => col("str")(a).as(a)): _*)
+    Detect.toEventStream(df, "id", "eventType", "timestamp", "partition", numNames, strNames)
+  }
+
+  // the declaration extra on n07 is a symbol predicate, so it is read too
+  val pDet: CompiledPattern = Compiler.compile(
+    "#(;(EQStrPredicate(s01,red),^(GTPredicate(n03,50.0),LTPredicate(s05,70.0))))",
+    "+(GTPredicate(n07,30.0))")
+  val pOther: CompiledPattern = Compiler.compile(";(GTPredicate(n11,80.0),IsEventTypePredicate(b))")
+  val pMatch: CompiledPattern = Compiler.compile(
+    "#(;(EQStrPredicate(s01,red),GTPredicate(s05,50.0))){window:8}{windowType:count}")
+  val pDsra: CompiledPattern = Compiler.compileMatchOnly(
+    """#(;(GTPredicate(n03,60.0)["x"],^(GTAttrPredicate(s05,"x"),EQAttrStrPredicate(s01,"x")))){window:10}{windowType:count}""")
+  val pDsraTime: CompiledPattern = Compiler.compileMatchOnly(
+    """#(;(GTPredicate(n03,60.0)["x"],GTAttrPredicate(n03,"x"))){window:80}{windowType:time}""")
+  val grid = 40L
+
+  /** Per key, in (timestamp, id) order, through `mk(key)`: the driver-side
+    * replay of one keyed runtime. */
+  def replay[O](events: Seq[CEvent])(mk: String => CEvent => Iterable[O]): Seq[O] =
+    events.groupBy(_.partition).toSeq.flatMap { case (key, es) =>
+      val step = mk(key)
+      es.sortBy(e => (e.timestamp, e.id)).flatMap(step)
+    }
+
+  def runtime[S, O](mk: String => KeyedRuntime[S, O]): String => CEvent => Iterable[O] = key => {
+    val run = mk(key)
+    e => { val out = scala.collection.mutable.ArrayBuffer.empty[O]; run.feed(e, out += _); out }
+  }
+}
