@@ -1,7 +1,7 @@
 package graft.cef.spark
 
-import java.nio.file.{FileAlreadyExistsException => NioExists, FileSystemException, Files,
-  Path => JPath, StandardCopyOption}
+import java.io.BufferedOutputStream
+import java.nio.file.{FileAlreadyExistsException => NioExists, Files, Path => JPath, StandardCopyOption}
 import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
@@ -52,10 +52,18 @@ object CheckpointFiles {
   /** Spark's key naming the checkpoint file manager class. */
   val Key = "spark.sql.streaming.checkpointFileManagerClass"
 
-  /** Select [[CheckpointFiles]] in `spark` unless the session already
-    * names a manager: a user's choice wins. */
-  def selectIn(spark: SparkSession): Unit =
-    if (spark.conf.getOption(Key).isEmpty) spark.conf.set(Key, classOf[CheckpointFiles].getName)
+  /** The setting that selects [[CheckpointFiles]] in `spark`, or none when
+    * the session already names a manager: a user's choice wins. */
+  def setting(spark: SparkSession): Option[(String, String)] =
+    Option.when(spark.conf.getOption(Key).isEmpty)(Key -> classOf[CheckpointFiles].getName)
+
+  /** Apply [[setting]] to `spark` for good: the keyed stream's manager is
+    * instantiated when the caller starts the query, after the Dataset is
+    * built, so the choice cannot be scoped to one query. Every later
+    * streaming query of the session (file sources and sinks included)
+    * then writes its checkpoint through [[CheckpointFiles]], which keeps
+    * the contract of Spark's default. */
+  def selectIn(spark: SparkSession): Unit = setting(spark).foreach { case (k, v) => spark.conf.set(k, v) }
 
   private def isFileScheme(p: Path, conf: Configuration): Boolean =
     Option(p.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme) == "file"
@@ -68,6 +76,8 @@ object CheckpointFiles {
     * `Files.move(ATOMIC_MOVE)` when overwriting is asked for, else by a
     * hard link, which fails if the target exists (one writer wins; Spark
     * reads Hadoop's FileAlreadyExistsException as a concurrent writer).
+    * Writes are buffered, as Hadoop's local stream is: Spark's log
+    * serializers make several small writes per entry.
     * A published file's stale `.crc` sibling, left by Hadoop's
     * checksummed writers, is removed so that Hadoop still reads the new
     * content.
@@ -89,7 +99,8 @@ object CheckpointFiles {
       val target = local(p)
       Files.createDirectories(target.getParent)
       val temp = target.resolveSibling(s".${target.getFileName}.${UUID.randomUUID}.tmp")
-      new CancellableFSDataOutputStream(Files.newOutputStream(temp)) {
+      val raw = Files.newOutputStream(temp)
+      new CancellableFSDataOutputStream(new BufferedOutputStream(raw, 64 << 10)) {
         private var terminated = false
         override def close(): Unit = synchronized {
           if (!terminated) {
@@ -103,7 +114,7 @@ object CheckpointFiles {
         override def cancel(): Unit = synchronized {
           if (!terminated) {
             terminated = true
-            try underlyingStream.close() finally Files.deleteIfExists(temp)
+            try raw.close() finally Files.deleteIfExists(temp) // unflushed bytes are dropped
           }
         }
       }
@@ -113,13 +124,7 @@ object CheckpointFiles {
       if (overwrite) Files.move(temp, target, StandardCopyOption.ATOMIC_MOVE)
       else
         try Files.createLink(target, temp)
-        catch {
-          case _: NioExists => throw new FileAlreadyExistsException(s"$target already exists")
-          case _: UnsupportedOperationException | _: FileSystemException =>
-            // no hard links here: a check, then the rename
-            if (Files.exists(target)) throw new FileAlreadyExistsException(s"$target already exists")
-            Files.move(temp, target, StandardCopyOption.ATOMIC_MOVE)
-        }
+        catch { case _: NioExists => throw new FileAlreadyExistsException(s"$target already exists") }
       dropChecksum(target)
     }
 

@@ -106,6 +106,8 @@ object Inference {
   /** Build the streaming inference Dataset: one [[EngineRun]] per key on
     * the keyed stream ([[Keyed.stream]]). `controls` is captured when each
     * micro-batch is planned and applied per key before the batch's events.
+    * Like every [[Stream]] operation it selects [[CheckpointFiles]] for the
+    * session when the session names no checkpoint file manager.
     *
     * @param loadModel modelId → (spst, forecast table); must be
     *                  deterministic and serializable (executors call it)

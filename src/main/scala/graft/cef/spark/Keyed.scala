@@ -2,7 +2,7 @@ package graft.cef.spark
 
 import graft.cef._
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.functions.{array, col, map_filter, map_keys, map_values}
+import org.apache.spark.sql.functions.{array, col, map_keys, map_values}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import scala.language.implicitConversions
 
@@ -33,8 +33,9 @@ object Keyed {
 
   /** Shuffle by key, external-sort by (key, ts, id), stream per-key state:
     * `mk(key)` at each key's first row, `step` for every event. `attrs`
-    * are the attributes `step` reads ([[CompiledPattern.attrsRead]]); the
-    * others are dropped before the shuffle ([[KeyedEvents.prune]]).
+    * are the attributes `step` reads ([[CompiledPattern.attrsRead]]); an
+    * [[EventStream]] drops the others before the shuffle
+    * ([[KeyedEvents.prune]]).
     */
   def scan[R, O: Encoder](events: KeyedEvents, attrs: Set[String])(mk: String => R)(
       step: (R, CEvent) => Iterator[O]): Dataset[O] = {
@@ -136,43 +137,38 @@ object Keyed {
   * 0.52 -> 1.24 M ev/s at a 4M batch) and 1.5x on the batch scan (2.28 →
   * 3.37 M ev/s over 4M events).
   *
-  * Pruning rule ([[prune]]): the keyed operators ship only the attributes
-  * their pattern reads. An attribute in the set that is present on an
-  * event stays present, and an absent one stays absent, so
+  * Pruning rule ([[prune]]): an [[EventStream]] ships only the
+  * attributes the pattern reads. An attribute in the set that is present
+  * on an event stays present, and an absent one stays absent, so
   * `CEvent.numberOf`/`stringOf` keep their num↔str fallbacks and their
-  * errors; the attributes outside the set are never built (an
-  * EventStream's unused value slots fold away in Catalyst, a
-  * `Dataset[CEvent]`'s maps are filtered before `map_keys`/`map_values`).
+  * errors; the value slots outside the set fold away in Catalyst and are
+  * never built. A `Dataset[CEvent]` ships its maps whole: its attribute
+  * names live in each row, so filtering them would add a pass over every
+  * row's maps on the batch scans, where that was never shown to pay.
   */
 sealed abstract class KeyedEvents {
   type Row <: KeyedRow
-  def rows: Dataset[Row]
+  val rows: Dataset[Row]
   /** Serializable and free of the Dataset: it rides the task closure. */
   val rebuild: Row => CEvent
-  /** The same events carrying only the attributes in `attrs`. */
+  /** The same events; an [[EventStream]] keeps only the attributes in
+    * `attrs` (the pruning rule above). */
   def prune(attrs: Set[String]): KeyedEvents
 }
 
 object KeyedEvents {
   private val narrowEnc: Encoder[NarrowEvent] = Encoders.product[NarrowEvent]
 
-  implicit def fromDataset(events: Dataset[CEvent]): KeyedEvents = narrowed(events, None)
-
-  private def narrowed(events: Dataset[CEvent], attrs: Option[Set[String]]): KeyedEvents =
-    new KeyedEvents {
-      type Row = NarrowEvent
-      lazy val rows: Dataset[NarrowEvent] = {
-        def kept(m: String) =
-          attrs.fold(col(m))(a => map_filter(col(m), (k, _) => k.isin(a.toSeq: _*)))
-        events.toDF().select(
-          col("id"), col("eventType"), col("timestamp"), col("partition"),
-          map_keys(kept("num")).as("numK"), map_values(kept("num")).as("numV"),
-          map_keys(kept("str")).as("strK"), map_values(kept("str")).as("strV"))
-          .as[NarrowEvent](narrowEnc)
-      }
-      val rebuild: NarrowEvent => CEvent = NarrowEvent.rebuild
-      def prune(a: Set[String]): KeyedEvents = narrowed(events, Some(attrs.fold(a)(_ intersect a)))
-    }
+  implicit def fromDataset(events: Dataset[CEvent]): KeyedEvents = new KeyedEvents {
+    type Row = NarrowEvent
+    val rows: Dataset[NarrowEvent] = events.toDF().select(
+      col("id"), col("eventType"), col("timestamp"), col("partition"),
+      map_keys(col("num")).as("numK"), map_values(col("num")).as("numV"),
+      map_keys(col("str")).as("strK"), map_values(col("str")).as("strV"))
+      .as[NarrowEvent](narrowEnc)
+    val rebuild: NarrowEvent => CEvent = NarrowEvent.rebuild
+    def prune(attrs: Set[String]): KeyedEvents = this
+  }
 
   implicit def fromStream(events: EventStream): KeyedEvents = new KeyedEvents {
     type Row = NEvent

@@ -16,6 +16,11 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * snapshots into Flink ValueState (WayebEngine.java:276-287): automaton
   * state, event counter, running-match bounds, and (for forecasting runs)
   * the symbol buffer.
+  *
+  * Building any of these Datasets selects [[CheckpointFiles]] as the
+  * session's checkpoint file manager, for good and only when the session
+  * names none ([[CheckpointFiles.selectIn]]): later streaming queries of
+  * the session write their checkpoints through it too.
   */
 object Stream {
 

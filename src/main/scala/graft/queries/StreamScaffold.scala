@@ -213,8 +213,7 @@ private[graft] object StreamScaffold {
     // session names its own manager
     val scoped = Seq("spark.sql.shuffle.partitions" -> "4",
       "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString) ++
-      Option.when(s.conf.getOption(CheckpointFiles.Key).isEmpty)(
-        CheckpointFiles.Key -> classOf[CheckpointFiles].getName)
+      CheckpointFiles.setting(s)
     val prev = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
     try {
       scoped.foreach { case (k, v) => s.conf.set(k, v) }

@@ -121,6 +121,7 @@ class CheckpointFilesSpec extends AnyFlatSpec with Matchers with BeforeAndAfterA
       val cp = Compiler.compile(";(IsEventTypePredicate(a),IsEventTypePredicate(b))")
       Stream.detections(KeyedCases.narrow(spark.createDataFrame(Seq.empty[KeyedEv])), cp)
       spark.conf.get(CheckpointFiles.Key) shouldBe own
+      CheckpointFiles.setting(spark) shouldBe None // the streaming-gate scaffold keeps it too
     } finally spark.conf.unset(CheckpointFiles.Key)
   }
 }
