@@ -20,7 +20,8 @@ changes, the check_p15/check_p67 technique:
     table's row groups.
 
 The stage SQL is parsed out of the oracle string the engine registers
-(oracle_sql.json from a Verify/ProbeMain dump), so this script cannot
+(oracle_sql.json from a `Verify` dump, one filtered by
+SPARK_GRAFT_ONLY will do), so this script cannot
 drift from the registered semantics.
 
 Usage: check_p119_sf1.py <sfDir> <verifyOutDir>

@@ -21,12 +21,14 @@ statement form grinds >1h at 50k docs:
     "min(b) over reach" computes.
 
 The stage SQL is NOT restated here -- it is parsed out of the oracle
-string the engine registers (oracle_sql.json from the Verify/ProbeMain
-dump), so this script can never drift from the registered semantics.
+string the engine registers (oracle_sql.json from a `Verify` dump, one
+filtered by SPARK_GRAFT_ONLY will do), so this script can never drift
+from the registered semantics.
 
 Usage: check_p15_sf1.py <sfDir> <verifyOutDir>
   (<verifyOutDir> must contain p15_dd_neardup_groups/*.parquet and
-   oracle_sql.json with the p15 entry, i.e. a ProbeMain/Verify dump.)
+   oracle_sql.json with the p15 entry, i.e. a `Verify` dump, e.g.
+   SPARK_GRAFT_ONLY=p15 runMain graft.Verify <sfDir> <verifyOutDir>.)
 """
 import sys, json, glob, os, re, time
 import duckdb

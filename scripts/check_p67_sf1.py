@@ -17,7 +17,8 @@ check_p15_sf1.py technique:
     reach), in O(log n) rounds.
 
 The stage SQL is parsed out of the oracle string the engine registers
-(oracle_sql.json from a Verify/ProbeMain dump), so this script cannot
+(oracle_sql.json from a `Verify` dump, one filtered by
+SPARK_GRAFT_ONLY will do), so this script cannot
 drift from the registered semantics.
 
 Usage: check_p67_sf1.py <sfDir> <verifyOutDir>

@@ -3,7 +3,10 @@
 # as a whole, print total lines and code lines (non-blank lines whose first
 # non-space characters are not `//`, `/*` or `*`), then the number of
 # `.flatMapGroupsWithState[` call sites under src/main/scala and under its
-# CEF engine (src/main/scala/graft/cef).
+# CEF engine (src/main/scala/graft/cef), then for src/main/scala and
+# src/test/scala the number of `SparkSession.builder` call sites (and how
+# many of them sit in files with a `def main`) and of `def main` entry
+# points.
 # Usage: scripts/src_size.sh [FILE...]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -28,3 +31,13 @@ printf '%8d %8d  %s\n' "$l" "$c" "src/main/scala"
 calls() { grep -rhoE '\.flatMapGroupsWithState\[' "$1" | wc -l; }
 printf 'flatMapGroupsWithState[ call sites: %d in src/main/scala, %d in graft/cef\n' \
   "$(calls src/main/scala)" "$(calls src/main/scala/graft/cef)"
+# grep exits 1 on no match, which pipefail would turn into a second count
+builders() { { grep -rhoE 'SparkSession\.builder' "$@" || true; } | wc -l; }
+mains() { { grep -rhoE 'def main\(' "$1" || true; } | wc -l; }
+for tree in src/main/scala src/test/scala; do
+  main_files=$(grep -rlE 'def main\(' "$tree" || true)
+  in_mains=0
+  if [ -n "$main_files" ]; then in_mains=$(builders $main_files); fi
+  printf '%s: %d SparkSession.builder sites (%d in files with a def main), %d def main\n' \
+    "$tree" "$(builders "$tree")" "$in_mains" "$(mains "$tree")"
+done

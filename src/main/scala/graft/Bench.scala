@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   sealed trait WarmDir
@@ -28,20 +27,8 @@ object Bench {
     "cef22_streaming" -> BenchSf, "p120_src_cusum_stream" -> BenchSf)
 
   def main(args: Array[String]): Unit = {
-    // stale streaming-scaffold dirs from crashed earlier JVMs poison the
-    // bench (the r12 contamination: ~30 leftover slice dirs uniformly
-    // ~2x-ed the streaming family) — sweep before timing anything
-    val swept = graft.queries.StreamScaffold.sweepStale()
-    if (swept > 0) System.err.println(s"[bench] swept $swept stale scaffold dirs")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
     // JVM/codegen/parquet-reader warm-up so the first timed query isn't
     // charged for session initialization (it was absorbing ~5s); the
     // events table warms separately — its TIMESTAMP(NANOS) read path and
@@ -96,9 +83,8 @@ object Bench {
     val calibStart = calibProbe()
     // sweep boundary: the session memo starts cold, so every shared
     // value is built once inside the timed sweep, by its first consumer
-    graft.ops.Release.sweepStart(spark)
+    val ordered = Runner.sweep(spark)
     val errors = scala.collection.mutable.ListBuffer.empty[String]
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     var calibMid = 0.0
     val results = ordered.zipWithIndex.map { case ((name, fn), i) =>
       if (i == ordered.size / 2) calibMid = calibProbe()
@@ -115,15 +101,13 @@ object Bench {
       name -> elapsed
     }
     val calibEnd = calibProbe()
-    // a number, or a string for a non-numeric master spec such as "*"
-    val cpusJson = if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else "\"" + cpus + "\""
     val calib = f"""{"start":$calibStart%.3f,"mid":$calibMid%.3f,"end":$calibEnd%.3f}"""
     val ok = results.filterNot { case (k, _) => errors.contains(k) }
     val qs = ok.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val errJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = ok.map(_._2).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"calib":$calib,"sf":"$sfDir","cpus":$cpusJson}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"calib":$calib,"sf":"$sfDir","cpus":${Runner.cpus}}""")
     // the full per-query line above outgrows the driver's tail capture at
     // 70+ queries — emit a compact per-family subtotal LAST so a truncated
     // capture still parses (same value, families in place of queries; the
@@ -133,7 +117,7 @@ object Bench {
       .toSeq.sortBy(_._1)
       .map { case (f, rs) => s"\"" + f + "\":" + rs.map(_._2).sum }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total_by_family","value":$total,"unit":"sec","queries":$fams,"errors":$errJson,"calib":$calib,"sf":"$sfDir","cpus":$cpusJson}""")
+    println(s"""{"metric":"total_by_family","value":$total,"unit":"sec","queries":$fams,"errors":$errJson,"calib":$calib,"sf":"$sfDir","cpus":${Runner.cpus}}""")
     if (errors.nonEmpty) { spark.stop(); sys.exit(1) }
     spark.stop()
   }

@@ -2,7 +2,7 @@ package graft
 
 import graft.cef._
 import graft.cef.adapt.ModelStore
-import graft.cef.spark.{Detect, Sources, Train}
+import graft.cef.spark.{Detect, Train}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Batch CLI over the engine — the counterpart of the reference's WayebCLI
@@ -20,19 +20,15 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *   forecasting --pattern <sre> --model <file> --input <path> --out <dir>
   *             [--threshold --spread --horizon]
   *             SPST CLASSIFY_NEXTK forecasts + detections
+  *
+  * It runs on [[Runner.session]]: `local[SPARK_GRAFT_CPUS]`, or the
+  * cluster given the Spark way (`spark-submit --master <url>`).
   */
 object Cli {
 
   def main(args: Array[String]): Unit = {
     val (cmd, opts) = parse(args)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
     try run(spark, cmd, opts) finally spark.stop()
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator for the perf sweep (VERDICT r7 #5).
@@ -57,13 +57,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, destDir, copiesS) = args.take(3)
     val copies = copiesS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
     new java.io.File(destDir).mkdirs()
 
     def worlds(name: String)(one: (DataFrame, Int) => DataFrame): Unit = {

@@ -1,28 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    graft.queries.StreamScaffold.sweepStale()
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session()
     new java.io.File(outDir).mkdirs()
-    graft.ops.Release.sweepStart(spark)
     // local-iteration filter: regex over query names (the driver never
     // sets it, so the driver's gate always dumps the full surface)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    // sorted like Bench's sweep, so runs write their output and log in
-    // one deterministic order
-    SparkEntry.queries.toSeq.sortBy(_._1)
+    // Bench's sweep, so runs write their output and log in one
+    // deterministic order
+    Runner.sweep(spark)
       .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

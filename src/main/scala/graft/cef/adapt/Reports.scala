@@ -3,9 +3,10 @@ package graft.cef.adapt
 import graft.cef.ClassStats
 import scala.collection.mutable
 
-/** Per-key periodic reports and the global tumbling aggregation
-  * (SURVEY.md §2.8 A1/A5 — reference WayebEngine.java:370-430
-  * checkAndReportStats and MetricsAggregator.java:21-90).
+/** Report records and the global tumbling aggregation (SURVEY.md §2.8
+  * A1/A5 — reference WayebEngine.java:370-430 checkAndReportStats and
+  * MetricsAggregator.java:21-90). The per-key reports themselves are
+  * emitted by the inference engine (`Inference.EngineRun`).
   */
 final case class MetricGroup(
     tp: Long, tn: Long, fp: Long, fn: Long,
@@ -29,46 +30,6 @@ final case class Report(timestamp: Long, key: String, runtime: MetricGroup, batc
     * (ReportOutput.java:40-42). */
   override def toString: String =
     s"Report{ts=$timestamp, key='$key', runtime MCC=${runtime.mcc}', batch MCC=${batch.mcc}}"
-}
-
-/** S10 log-line formats (InferenceJob.java:232-291; parsed by
-  * python/log_parser.py:14-30). */
-object LogFormat {
-  def localReport(r: Report): String = s"LOCAL_REPORT: $r"
-  def globalReport(r: Report): String = s"GLOBAL_REPORT: $r"
-  def detection(s: String): String = s"DETECTION: $s"
-  def forecast(s: String, positive: Boolean): String =
-    s"FORECAST: $s" + (if (positive) " (POSITIVE)" else " (NEGATIVE)")
-  def instruction(s: String): String = s"INSTRUCTION: $s"
-}
-
-/** A1: every `reportingDistance` event-time seconds per key, emit a report
-  * with cumulative ("runtime") counts and delta-vs-last-report ("batch")
-  * counts. Lives inside the keyed engine state.
-  */
-final class ReportTracker(reportingDistance: Long, key: String) extends Serializable {
-  private var cumulative = ClassStats(0, 0, 0, 0)
-  private var prev = ClassStats(0, 0, 0, 0)
-  private var nextReportTime = -1L
-
-  def add(s: ClassStats): Unit = cumulative += s
-  def currentCounts: ClassStats = cumulative
-
-  /** Clear history on model swap (WayebEngine.java:300-315). */
-  def resetHistory(): Unit = { cumulative = ClassStats(0, 0, 0, 0); prev = ClassStats(0, 0, 0, 0) }
-
-  def maybeReport(currentTime: Long): Option[Report] = {
-    if (nextReportTime == -1L) { nextReportTime = currentTime + reportingDistance; return None }
-    if (currentTime < nextReportTime) None
-    else {
-      val batch = ClassStats(
-        cumulative.tp - prev.tp, cumulative.tn - prev.tn,
-        cumulative.fp - prev.fp, cumulative.fn - prev.fn)
-      prev = cumulative
-      nextReportTime = currentTime + reportingDistance
-      Some(Report(currentTime, key, MetricGroup.of(cumulative), MetricGroup.ofBatch(batch)))
-    }
-  }
 }
 
 /** A5: global tumbling-window aggregation over per-key reports. Sums batch

@@ -54,8 +54,9 @@ import org.apache.spark.sql.types.StructType
   *     process is still alive — a sibling JVM that started EARLIER than
   *     this one but is still RUNNING keeps its live slice sets.
   *     Unmarked dirs (pre-marker leftovers) fall back to the mtime
-  *     rule. The runner mains (Bench, Verify, SoloBench) call it at
-  *     startup.
+  *     rule. `graft.Runner.session` calls it before it builds a
+  *     session, so every main (Bench, Verify, Cli, ScaleGen) starts
+  *     clean.
   */
 private[graft] object StreamScaffold {
 

@@ -8,6 +8,7 @@ package graft
   * plans is the final re-optimized one.
   *
   * `Test/runMain graft.FinalPlanDumpMain <sfDir> <outDir> <name>...`
+  * (on `local[SPARK_GRAFT_CPUS]`, see [[Runner.session]])
   */
 object FinalPlanDumpMain {
   /** One AQE `+- == Initial Plan ==` header (at any indent) and every
@@ -16,16 +17,11 @@ object FinalPlanDumpMain {
   private[graft] val InitialPlan = "(?m)^( *)\\+- == Initial Plan ==\\n(?:\\1 {3}.*(?:\\n|$))*".r
 
   def main(args: Array[String]): Unit = {
-    graft.queries.StreamScaffold.sweepStale()
     val sfDir = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
     java.nio.file.Files.createDirectories(outDir)
     val names = args.drop(2).toSeq
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Runner.session()
     graft.ops.Release.sweepStart(spark)
     for (n <- names) {
       val df = SparkEntry.queries(n)(spark, sfDir)

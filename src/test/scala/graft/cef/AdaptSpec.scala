@@ -1,9 +1,11 @@
 package graft.cef.adapt
 
 import graft.cef._
+import graft.cef.spark.Inference
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 import java.nio.file.Files
+import scala.collection.mutable.ArrayBuffer
 
 /** Adaptation control-plane specs (SURVEY.md §2.9 O1-O8): Observer decision
   * rules, Controller phase machine, ask/tell optimizer contract, Collector
@@ -184,33 +186,60 @@ class AdaptSpec extends AnyFlatSpec with Matchers {
     Instruction.fromJson(ins.toJson) shouldBe ins
   }
 
-  "the synced engine" should "skip events while paused and swap models losslessly at sync time" in {
+  "EngineRun" should "skip paused events and swap losslessly at sync time" in {
     val cp = Compiler.compile(";(IsEventTypePredicate(a),IsEventTypePredicate(b))")
     val train = (1 to 100).map(i =>
       CEvent(i.toLong, if (i % 2 == 0) "b" else "a", i.toLong, "k", Map.empty, Map.empty))
-    val spst = InMemory.train(train, cp, order = 1, pMin = 0.001, gammaMin = 0.001)
+    // order 2: the symbol buffer holds more than the newest event, so a
+    // swap that rebuilt the run would show in it
+    val spst = InMemory.train(train, cp, order = 2, pMin = 0.001, gammaMin = 0.001)
     val table = spst.forecastTable(ForecastMethod.ClassifyNextK, 0.5, 10, 20)
     def load(id: Int) = (spst, table)
-
-    val eng = new SyncedEngine(cp, load, "k", initialModelId = 0, swapDelay = 5L)
     def ev(id: Long, t: String, ts: Long) = CEvent(id, t, ts, "k", Map.empty, Map.empty)
 
+    // each micro-batch of the key runs a new EngineRun on the last
+    // snapshot and reads the control state once, at its start
+    val controls = new Inference.ControlHandle
+    var last: Option[Inference.EngineSnapshot] = None
+    def batch(): (Inference.EngineRun, ArrayBuffer[Inference.Out]) = {
+      val run = new Inference.EngineRun("k", cp, load, controls,
+        initialModelId = 0, swapDelay = 5L, reportingDistance = 3600L)
+      last.foreach(run.restore)
+      (run, ArrayBuffer.empty[Inference.Out])
+    }
+
     // detections flow normally
-    val (d1, _, _) = eng.step(ev(1, "a", 100))
-    val (d2, _, _) = eng.step(ev(2, "b", 101))
-    d2.isDefined shouldBe true
+    val (run1, out1) = batch()
+    Seq(ev(1, "a", 100), ev(2, "b", 101)).foreach(run1.feed(_, out1 += _))
+    out1.filter(_.kind == "detection").map(_.eventId) shouldBe Seq(2L)
+    val s1 = run1.snapshot
+    last = Some(s1)
 
     // paused: nothing comes out, state frozen
-    eng.onSync(SyncCommand.pause(102))
-    eng.step(ev(3, "a", 102)) shouldBe ((None, None, None))
-    eng.isPaused shouldBe true
+    controls.push(SyncCommand.pause(102))
+    val (run2, out2) = batch()
+    run2.feed(ev(3, "a", 102), out2 += _)
+    out2 shouldBe empty
+    val s2 = run2.snapshot
+    s2.paused shouldBe true
+    (s2.counter, s2.buffer.toSeq) shouldBe ((s1.counter, s1.buffer.toSeq))
+    last = Some(s2)
 
     // play with a new model id: swap happens once event time passes syncTime
-    eng.onSync(SyncCommand.play(103, 1))
-    eng.isPaused shouldBe false
-    eng.step(ev(4, "a", 103))
-    eng.modelId shouldBe 0 // pending (syncTime = 103 + 5)
-    eng.step(ev(5, "x", 109))
-    eng.modelId shouldBe 1 // swapped
+    controls.push(SyncCommand.play(103, 1))
+    val (run3, out3) = batch()
+    run3.feed(ev(4, "a", 103), out3 += _)
+    val pre = run3.snapshot
+    pre.paused shouldBe false
+    pre.currentModelId shouldBe 0 // pending (syncTime = 103 + 5)
+    pre.pendingSwapAt shouldBe 108L
+    run3.feed(ev(5, "x", 109), out3 += _)
+    val post = run3.snapshot
+    post.currentModelId shouldBe 1 // swapped
+    post.pendingSwapAt shouldBe -1L
+    // lossless: the run goes on from the pre-swap counter and buffer
+    post.counter shouldBe pre.counter + 1
+    post.buffer.length shouldBe 2
+    post.buffer(1) shouldBe pre.buffer(0)
   }
 }

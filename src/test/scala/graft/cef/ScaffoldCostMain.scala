@@ -2,7 +2,7 @@ package graft.cef
 
 import graft.cef.spark.{Detect, Stream}
 import graft.queries.StreamScaffold
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
@@ -26,19 +26,13 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryPro
   * reps (rep 1 carries codegen/JIT); prints per-rep wall, batch count and
   * rows drained, and the last rep's phase durations.
   *
-  * Usage: scripts/run_main.sh with test-classes on the cp, or
+  * Usage (on `local[SPARK_GRAFT_CPUS]`, see `graft.Runner.session`):
   *   sbt "Test/runMain graft.cef.ScaffoldCostMain /root/testdata/sf0.1"
   */
 object ScaffoldCostMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("scaffold-cost")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Runner.session()
     import spark.implicits._
 
     // built once, outside the timed cells, like Bench's slice warm-up

@@ -2,7 +2,7 @@ package graft.cef
 
 import graft.cef.spark.{Detect, Stream}
 import graft.queries.StreamScaffold
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StreamingQueryListener, StreamingQueryProgress}
@@ -23,29 +23,22 @@ import scala.util.Random
   *   sizing grid: batch rows {1M,4M} × scan splits {default,16MB}
   *
   * SCALE.md's round-13 table was measured with hand-built slices at 8 and
-  * 32 shuffle partitions, before this probe ran on the scaffold. Usage:
-  *   sbt "Test/runMain graft.cef.StreamTputGridMain local[8] 1000000"
+  * 32 shuffle partitions, before this probe ran on the scaffold. Usage
+  * (on `local[SPARK_GRAFT_CPUS]`, see `graft.Runner.session`):
+  *   SPARK_GRAFT_CPUS=8 sbt "Test/runMain graft.cef.StreamTputGridMain 1000000"
   */
 object StreamTputGridMain {
   private val Keys = 32
   private val WarmRows = 50000
 
   def main(args: Array[String]): Unit = {
-    val master = args.headOption.getOrElse("local[8]")
-    val mainRows = if (args.length > 1) args(1).toInt else 1000000
-    val spark = SparkSession.builder().master(master)
-      .appName("stream-tput-grid")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val mainRows = args.headOption.fold(1000000)(_.toInt)
+    val spark = graft.Runner.session()
 
     val cp = Compiler.compile(
       ";(IsEventTypePredicate(a),+(IsEventTypePredicate(b),IsEventTypePredicate(c)),GTPredicate(value,100.0))")
 
     def eventsDf(from: Int, n: Int): DataFrame = {
-      val rnd = new Random(from)
       val types = Array("a", "b", "c", "d")
       import spark.implicits._
       spark.range(from, from + n).map { i =>
@@ -193,7 +186,7 @@ object StreamTputGridMain {
       Detect.toEventStream(df, idCol = "event_id", typeCol = "event_type",
         tsCol = "ts", partitionCol = "user_id", numAttrs = Seq("value"))
 
-    println(s"=== stage ladder ($master, ${mainRows / 1000000}M batch, hdfs store; all stages emit tiny output)")
+    println(s"=== stage ladder (${spark.sparkContext.master}, ${mainRows / 1000000}M batch, hdfs store; all stages emit tiny output)")
     best("noop stateful, narrow tuple (no maps)", src1m, hdfs)(df => noopNarrow(df).toDF())
     best("noop stateful, CEvent (attr maps)", src1m, hdfs)(df => noopStateful(df).toDF())
     best("full detections (Dataset[CEvent] compat)", src1m, hdfs)(df => Stream.detections(toEvents(df), cp).toDF())
