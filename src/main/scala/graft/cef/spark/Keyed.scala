@@ -17,8 +17,9 @@ import scala.language.implicitConversions
   *     with millions of events never lives in memory at once, and the
   *     per-key state (a runtime or a small holder) rides the task closure
   *     as a factory.
-  *   - [[stream]], Structured Streaming: `groupByKey(partition)` →
-  *     `flatMapGroupsWithState`; per key and micro-batch the runtime is
+  *   - [[stream]], Structured Streaming, on [[fold]] — the one
+  *     `flatMapGroupsWithState` of the code base, which the per-key folds
+  *     of `graft.ops` share; per key and micro-batch the runtime is
   *     restored from GroupState, steps the batch's events in (timestamp,
   *     id) order and is snapshotted back — exactly what the reference
   *     keeps in Flink ValueState (WayebEngine.java:276-287).
@@ -59,53 +60,72 @@ object Keyed {
   }
 
   /** The keyed stream: one GroupState per key holding the runtime's
-    * snapshot. `stateTtl` (milliseconds, 0 = keep forever) expires idle
-    * keys — the Spark analogue of the reference's run-pool expiration GC
-    * (`expirationDeadline`, ERFEngine.scala:95-101, RunPool.scala:186;
-    * SURVEY.md §2.3 K5): a key that receives no events for the TTL loses
-    * its state and restarts from a fresh runtime. Spark plans another
-    * micro-batch after every batch under that timeout, so a TTL stream
-    * needs a trigger interval (`Trigger.ProcessingTime`): with the
-    * default trigger an idle query runs empty batches back to back. Under
-    * any trigger `processAllAvailable()` does not return, because a batch
-    * is always planned.
+    * snapshot, on [[fold]]. `stateTtl` (milliseconds, 0 = keep forever)
+    * expires idle keys — the Spark analogue of the reference's run-pool
+    * expiration GC (`expirationDeadline`, ERFEngine.scala:95-101,
+    * RunPool.scala:186; SURVEY.md §2.3 K5): a key that receives no events
+    * for the TTL loses its state and restarts from a fresh runtime. See
+    * [[fold]] for the trigger a TTL stream needs.
     *
-    * `attrs` are the attributes the runtime reads, as in [[scan]]. The
-    * session's checkpoint files go through [[CheckpointFiles]] unless it
-    * names its own manager.
+    * `attrs` are the attributes the runtime reads, as in [[scan]].
     */
   def stream[S: Encoder, O: Encoder](events: KeyedEvents, attrs: Set[String], stateTtl: Long = 0L)(
       mk: String => KeyedRuntime[S, O]): Dataset[O] = {
     val pruned = events.prune(attrs)
     val rebuild = pruned.rebuild
+    implicit val keyEnc: Encoder[String] = Encoders.STRING
+    fold[String, pruned.Row, S, O](pruned.rows, stateTtl)(_.partition) { (key, prior, rows, emit) =>
+      replay(mk(key), prior, sortedEvents(rows, rebuild))(emit)
+    }
+  }
+
+  /** The one GroupState operator under every keyed stream: the engine's
+    * runtimes ([[stream]]) and the per-key folds of `graft.ops`. Rows are
+    * grouped by `key`; per key and micro-batch, `step` gets the key, the
+    * state it returned last time (None on the key's first batch and after
+    * an expiry), the batch's rows in no particular order and an `emit`
+    * callback, and returns the state to save. Emitted rows are buffered
+    * and handed to Spark after the state is saved, so a step never needs
+    * to force its outputs before it returns.
+    *
+    * `stateTtl` (milliseconds, 0 = keep forever) drops the state of a key
+    * that receives no rows for that long. Spark plans another micro-batch
+    * after every batch under that timeout, so a TTL stream needs a
+    * trigger interval (`Trigger.ProcessingTime`): with the default
+    * trigger an idle query runs empty batches back to back. Under any
+    * trigger `processAllAvailable()` does not return, because a batch is
+    * always planned.
+    *
+    * The session's checkpoint files go through [[CheckpointFiles]] unless
+    * it names its own manager.
+    */
+  def fold[K: Encoder, R, S: Encoder, O: Encoder](rows: Dataset[R], stateTtl: Long = 0L)(
+      key: R => K)(step: (K, Option[S], Iterator[R], O => Unit) => S): Dataset[O] = {
     val timeout =
       if (stateTtl > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    CheckpointFiles.selectIn(pruned.rows.sparkSession)
-    pruned.rows
-      .groupByKey((r: pruned.Row) => r.partition)(Encoders.STRING)
+    CheckpointFiles.selectIn(rows.sparkSession)
+    rows.groupByKey(key)
       .flatMapGroupsWithState[S, O](OutputMode.Append, timeout) {
-        (key: String, rows: Iterator[pruned.Row], state: GroupState[S]) =>
+        (k: K, group: Iterator[R], state: GroupState[S]) =>
           if (state.hasTimedOut) {
-            state.remove() // stale run reclaimed
+            state.remove() // stale key reclaimed
             Iterator.empty
           } else {
-            val out = replay(mk(key), state.getOption, sortedEvents(rows, rebuild))(state.update)
+            val out = scala.collection.mutable.ArrayBuffer.empty[O]
+            state.update(step(k, state.getOption, group, out += _))
             if (stateTtl > 0) state.setTimeoutDuration(stateTtl)
-            out
+            out.iterator
           }
       }
   }
 
-  /** One key's micro-batch: restore `prior`, feed the events, `save` the
-    * snapshot; returns the outputs. */
+  /** One key's micro-batch of a runtime: restore `prior`, feed the
+    * events to `emit`; returns the snapshot to save. */
   private[spark] def replay[S, O](run: KeyedRuntime[S, O], prior: Option[S],
-      events: Array[CEvent])(save: S => Unit): Iterator[O] = {
+      events: Array[CEvent])(emit: O => Unit): S = {
     prior.foreach(run.restore)
-    val out = scala.collection.mutable.ArrayBuffer.empty[O]
-    val emit: O => Unit = out += _
     events.foreach(run.feed(_, emit))
-    save(run.snapshot)
-    out.iterator
+    run.snapshot
   }
 
   /** One group's rows → (timestamp, id)-sorted CEvents, rebuilt

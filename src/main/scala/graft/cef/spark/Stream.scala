@@ -9,7 +9,8 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * (java/.../WayebEngine.java:225-320) —
   *
   *   kafka/socket/memory source → parse → groupByKey(partitionAttr)
-  *     → flatMapGroupsWithState[RunState, Output]
+  *     → [[Keyed.fold]], the one GroupState operator
+  *       (flatMapGroupsWithState[RunState, Output])
   *
   * Every operation here is one runtime on the one keyed stream
   * ([[Keyed.stream]]); GroupState persists exactly what the reference
@@ -141,7 +142,10 @@ final class DetProcessor[R](cp: CompiledPattern, stateTtl: Long, rebuild: R => C
   override def handleInputRows(
       key: String,
       rows: Iterator[R],
-      timerValues: TimerValues): Iterator[Detection] =
-    Keyed.replay(new DetRun(cp, key), Option(state.get()), Keyed.sortedEvents(rows, rebuild))(
-      state.update)
+      timerValues: TimerValues): Iterator[Detection] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Detection]
+    state.update(Keyed.replay(new DetRun(cp, key), Option(state.get()),
+      Keyed.sortedEvents(rows, rebuild))(out += _))
+    out.iterator
+  }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.cef.spark.Keyed
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators: exact (hash), MinHash+LSH, SimHash and
@@ -127,7 +128,9 @@ object DedupOps {
       org.apache.spark.sql.graftexpr.VectorExprs.shingleHashes(text, n, HashMod))
       .otherwise(array().cast("array<bigint>"))
 
-  def shingleHashesSql(expr: String, n: Int): String = {
+  /** SQL twin of [[shingleHashes]] over the word list `toks`, which the
+    * calling query puts in scope (`string_split(text, ' ') AS toks`). */
+  def shingleHashesSql(n: Int): String = {
     val parts = (0 until n).map(j => s"toks[i + $j + 1]").mkString(" || ' ' || ")
     s"""list_distinct(list_transform(
        |  list_transform(range(greatest(len(toks) - $n, 0)), i -> $parts),
@@ -925,39 +928,29 @@ object DedupOps {
       idCol: String,
       textCol: String,
       threshold: Double = 0.9,
-      cap: Int = BandBucketCap): org.apache.spark.sql.Dataset[NdHit] = {
-    import org.apache.spark.sql.{Encoder, Encoders}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    implicit val stEnc: Encoder[NdBucketState] = Encoders.product[NdBucketState]
-    implicit val outEnc: Encoder[NdHit] = Encoders.product[NdHit]
-    implicit val rowEnc: Encoder[NdIn] = Encoders.product[NdIn]
-    implicit val keyEnc: Encoder[(Int, Long)] =
-      Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong)
-    val sigs = docs.select(col(idCol).cast("long").as("doc_id"),
+      cap: Int = BandBucketCap): Dataset[NdHit] = {
+    import docs.sparkSession.implicits._
+    val in = docs.select(col(idCol).cast("long").as("doc_id"),
         sort_array(tokenHashes(col(textCol))).as("hashes"))
       .withColumn("bands", bandKeys(minHashSig(col("hashes")), PairBands))
-    sigs
       .select(posexplode(col("bands")).as(Seq("band", "key")),
         col("doc_id"), col("hashes"))
       .as[NdIn]
-      .groupByKey(r => (r.band, r.key))
-      .flatMapGroupsWithState[NdBucketState, NdHit](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: (Int, Long), rows: Iterator[NdIn], state: GroupState[NdBucketState]) =>
-          // a bucket's share of ONE micro-batch — buffered to restore id
-          // order (bucket populations are cap-bounded by construction)
-          val batch = rows.toArray.sortBy(_.doc_id)
-          var st = state.getOption.getOrElse(NdBucketState(0L, Nil))
-          val out = batch.iterator.map { d =>
-            val matches = st.chunk.filter(c => jaccardJvm(c.hashes, d.hashes) >= threshold)
-            val dupOf = if (matches.isEmpty) -1L else matches.map(_.id).min
-            st =
-              if ((st.nSeen + 1) % cap == 0) NdBucketState(st.nSeen + 1, Nil)
-              else NdBucketState(st.nSeen + 1, st.chunk :+ NdChunkDoc(d.doc_id, d.hashes))
-            NdHit(d.doc_id, dupOf)
-          }.toVector
-          state.update(st)
-          out.iterator
-      }
+    Keyed.fold[(Int, Long), NdIn, NdBucketState, NdHit](in)(r => (r.band, r.key)) {
+      (_, prior, rows, emit) =>
+        // a bucket's share of ONE micro-batch — buffered to restore id
+        // order (bucket populations are cap-bounded by construction)
+        val batch = rows.toArray.sortBy(_.doc_id)
+        var st = prior.getOrElse(NdBucketState(0L, Nil))
+        batch.foreach { d =>
+          val matches = st.chunk.filter(c => jaccardJvm(c.hashes, d.hashes) >= threshold)
+          val dupOf = if (matches.isEmpty) -1L else matches.map(_.id).min
+          st =
+            if ((st.nSeen + 1) % cap == 0) NdBucketState(st.nSeen + 1, Nil)
+            else NdBucketState(st.nSeen + 1, st.chunk :+ NdChunkDoc(d.doc_id, d.hashes))
+          emit(NdHit(d.doc_id, dupOf))
+        }
+        st
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import graft.cef.spark.Keyed
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Sequence packing for training-data assembly: place documents into
@@ -103,33 +104,24 @@ object PackOps {
       idCol: String,
       nTokCol: String,
       buckets: Int,
-      budget: Long): org.apache.spark.sql.Dataset[PackedDoc] = {
-    import org.apache.spark.sql.{Encoder, Encoders}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    implicit val stEnc: Encoder[PackState] = Encoders.product[PackState]
-    implicit val outEnc: Encoder[PackedDoc] = Encoders.product[PackedDoc]
-    implicit val inEnc: Encoder[PackIn] = Encoders.product[PackIn]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    docs
+      budget: Long): Dataset[PackedDoc] = {
+    import docs.sparkSession.implicits._
+    val in = docs
       .select(col(idCol).cast("long").as("doc_id"),
         col(nTokCol).cast("long").as("n_tok"),
         pmod(col(idCol).cast("long"), lit(buckets.toLong)).as("bucket"))
       .as[PackIn]
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[PackState, PackedDoc](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (bucket: Long, rows: Iterator[PackIn], state: GroupState[PackState]) =>
-          val batch = rows.toArray.sortBy(_.doc_id)
-          var st = state.getOption.getOrElse(PackState(0L, 0L))
-          val out = batch.iterator.map { d =>
-            st =
-              if (st.fill > 0L && st.fill + d.n_tok > budget) PackState(st.bin + 1L, d.n_tok)
-              else PackState(st.bin, st.fill + d.n_tok)
-            PackedDoc(d.doc_id, bucket, d.n_tok, st.bin)
-          }.toVector
-          state.update(st)
-          out.iterator
+    Keyed.fold[Long, PackIn, PackState, PackedDoc](in)(_.bucket) { (bucket, prior, rows, emit) =>
+      val batch = rows.toArray.sortBy(_.doc_id)
+      var st = prior.getOrElse(PackState(0L, 0L))
+      batch.foreach { d =>
+        st =
+          if (st.fill > 0L && st.fill + d.n_tok > budget) PackState(st.bin + 1L, d.n_tok)
+          else PackState(st.bin, st.fill + d.n_tok)
+        emit(PackedDoc(d.doc_id, bucket, d.n_tok, st.bin))
       }
+      st
+    }
   }
 
   /** One admission verdict: the doc, its source, token count, and
@@ -155,30 +147,21 @@ object PackOps {
       idCol: String,
       srcCol: String,
       nTokCol: String,
-      quota: Long): org.apache.spark.sql.Dataset[QuotaVerdict] = {
-    import org.apache.spark.sql.{Encoder, Encoders}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    implicit val stEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val outEnc: Encoder[QuotaVerdict] = Encoders.product[QuotaVerdict]
-    implicit val inEnc: Encoder[QuotaIn] = Encoders.product[QuotaIn]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    docs
+      quota: Long): Dataset[QuotaVerdict] = {
+    import docs.sparkSession.implicits._
+    val in = docs
       .select(col(idCol).cast("long").as("doc_id"),
         col(srcCol).cast("string").as("source"),
         col(nTokCol).cast("long").as("n_tok"))
       .as[QuotaIn]
-      .groupByKey(_.source)
-      .flatMapGroupsWithState[Long, QuotaVerdict](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (source: String, rows: Iterator[QuotaIn], state: GroupState[Long]) =>
-          val batch = rows.toArray.sortBy(_.doc_id)
-          var cum = state.getOption.getOrElse(0L)
-          val out = batch.iterator.map { d =>
-            cum += d.n_tok
-            QuotaVerdict(d.doc_id, source, d.n_tok, cum <= quota)
-          }.toVector
-          state.update(cum)
-          out.iterator
+    Keyed.fold[String, QuotaIn, Long, QuotaVerdict](in)(_.source) { (source, prior, rows, emit) =>
+      val batch = rows.toArray.sortBy(_.doc_id)
+      var cum = prior.getOrElse(0L)
+      batch.foreach { d =>
+        cum += d.n_tok
+        emit(QuotaVerdict(d.doc_id, source, d.n_tok, cum <= quota))
       }
+      cum
+    }
   }
 }

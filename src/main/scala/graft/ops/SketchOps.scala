@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
+import graft.cef.spark.Keyed
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Per-key KMV snapshot emitted by [[SketchOps.streamingKmv]] each time a
   * micro-batch touches the key; the final snapshot (max `n_seen`) is the
@@ -115,37 +115,30 @@ object SketchOps {
     * aggregation sketch instead of an automaton run.
     */
   def streamingKmv(events: DataFrame, keyCol: String, hashCol: String, k: Int): Dataset[KmvSnap] = {
-    implicit val stEnc: Encoder[KmvState] = Encoders.product[KmvState]
-    implicit val outEnc: Encoder[KmvSnap] = Encoders.product[KmvSnap]
-    implicit val kvEnc: Encoder[(Long, Long)] = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    events.select(col(keyCol).cast("long"), col(hashCol).cast("long"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[KmvState, KmvSnap](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long)], state: GroupState[KmvState]) =>
-          val prev = state.getOption.getOrElse(KmvState(0L, Nil))
-          // chunked fold: a skewed key's whole micro-batch never
-          // materializes — memory is O(k + chunk) however many events
-          // the batch delivers to this key
-          var merged = prev.mins
-          var nNew = 0L
-          val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-          rows.foreach { r =>
-            buf += r._2; nNew += 1
-            if (buf.size >= 4096) { merged = mergeKMins(merged, buf, k); buf.clear() }
-          }
-          if (buf.nonEmpty) merged = mergeKMins(merged, buf, k)
-          val nSeen = prev.nSeen + nNew
-          state.update(KmvState(nSeen, merged))
-          val nSample = merged.size.toLong
-          val kth = if (merged.isEmpty) 0L else merged.last
-          val est =
-            if (nSample < k) nSample
-            else (k - 1).toLong * TextOps.HashMod / kth
-          Iterator.single(KmvSnap(key, nSeen, nSample, kth, est))
+    import events.sparkSession.implicits._
+    val in = events.select(col(keyCol).cast("long"), col(hashCol).cast("long")).as[(Long, Long)]
+    Keyed.fold[Long, (Long, Long), KmvState, KmvSnap](in)(_._1) { (key, prior, rows, emit) =>
+      val prev = prior.getOrElse(KmvState(0L, Nil))
+      // chunked fold: a skewed key's whole micro-batch never
+      // materializes — memory is O(k + chunk) however many events
+      // the batch delivers to this key
+      var merged = prev.mins
+      var nNew = 0L
+      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
+      rows.foreach { r =>
+        buf += r._2; nNew += 1
+        if (buf.size >= 4096) { merged = mergeKMins(merged, buf, k); buf.clear() }
       }
+      if (buf.nonEmpty) merged = mergeKMins(merged, buf, k)
+      val nSeen = prev.nSeen + nNew
+      val nSample = merged.size.toLong
+      val kth = if (merged.isEmpty) 0L else merged.last
+      val est =
+        if (nSample < k) nSample
+        else (k - 1).toLong * TextOps.HashMod / kth
+      emit(KmvSnap(key, nSeen, nSample, kth, est))
+      KmvState(nSeen, merged)
+    }
   }
 
   // ------------------------------- streaming per-key Count-Min (cef45)
@@ -179,36 +172,29 @@ object SketchOps {
       seeds: Seq[(Long, Long)],
       width: Int): Dataset[CmPointSnap] = {
     require(probes.size == probeHashes.size)
-    implicit val stEnc: Encoder[CmFoldState] = Encoders.product[CmFoldState]
-    implicit val outEnc: Encoder[CmPointSnap] = Encoders.product[CmPointSnap]
-    implicit val kvEnc: Encoder[(Long, Long)] = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
+    import events.sparkSession.implicits._
     val rows = seeds.size
     def cell(h: Long, r: Int): Int =
       (((h * seeds(r)._1 + seeds(r)._2) % TextOps.HashMod) % width).toInt
     val probeCells = probeHashes.map(h => Array.tabulate(rows)(r => cell(h, r)))
-    events.select(col(keyCol).cast("long"), col(hashCol).cast("long"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[CmFoldState, CmPointSnap](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[(Long, Long)], state: GroupState[CmFoldState]) =>
-          val prev = state.getOption.getOrElse(CmFoldState(0L, Seq.fill(rows * width)(0L)))
-          val counts = prev.counts.toArray
-          var n = prev.nSeen
-          it.foreach { case (_, h) =>
-            var r = 0
-            while (r < rows) { counts(r * width + cell(h, r)) += 1; r += 1 }
-            n += 1
-          }
-          state.update(CmFoldState(n, counts.toSeq))
-          probes.iterator.zip(probeCells.iterator).map { case (p, cells) =>
-            var est = Long.MaxValue
-            var r = 0
-            while (r < rows) { est = math.min(est, counts(r * width + cells(r))); r += 1 }
-            CmPointSnap(key, n, p, est)
-          }
+    val in = events.select(col(keyCol).cast("long"), col(hashCol).cast("long")).as[(Long, Long)]
+    Keyed.fold[Long, (Long, Long), CmFoldState, CmPointSnap](in)(_._1) { (key, prior, it, emit) =>
+      val prev = prior.getOrElse(CmFoldState(0L, Seq.fill(rows * width)(0L)))
+      val counts = prev.counts.toArray
+      var n = prev.nSeen
+      it.foreach { case (_, h) =>
+        var r = 0
+        while (r < rows) { counts(r * width + cell(h, r)) += 1; r += 1 }
+        n += 1
       }
+      probes.iterator.zip(probeCells.iterator).foreach { case (p, cells) =>
+        var est = Long.MaxValue
+        var r = 0
+        while (r < rows) { est = math.min(est, counts(r * width + cells(r))); r += 1 }
+        emit(CmPointSnap(key, n, p, est))
+      }
+      CmFoldState(n, counts.toSeq)
+    }
   }
 
   // ------------------------------------- sketch-pruned exact heavy hitters
@@ -315,28 +301,21 @@ object SketchOps {
     val probePos: Seq[(Long, Seq[Int])] =
       probes.zip(probeHashes.map(bloomPositionsJvm))
     val words = BloomBits / 64
-    implicit val stEnc: Encoder[BloomFoldState] = Encoders.product[BloomFoldState]
-    implicit val outEnc: Encoder[BloomPointSnap] = Encoders.product[BloomPointSnap]
-    implicit val kvEnc: Encoder[(Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    events.select(col(keyCol).cast("long"), col(hashCol).cast("long"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[BloomFoldState, BloomPointSnap](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long)], state: GroupState[BloomFoldState]) =>
-          val prev = state.getOption.getOrElse(BloomFoldState(0L, Seq.fill(words)(0L)))
-          val bits = prev.words.toArray
-          val nNew = foldBloom(bits, rows.map(_._2))
-          val nSeen = prev.nSeen + nNew
-          state.update(BloomFoldState(nSeen, bits.toSeq))
-          val nBits = bits.map(java.lang.Long.bitCount).sum.toLong
-          probePos.iterator.map { case (p, pos) =>
-            val hit = pos.forall(i => (bits(i >> 6) & (1L << (i & 63))) != 0L)
-            BloomPointSnap(key, nSeen, nBits, p, hit)
-          }
-      }
+    import events.sparkSession.implicits._
+    val in = events.select(col(keyCol).cast("long"), col(hashCol).cast("long")).as[(Long, Long)]
+    Keyed.fold[Long, (Long, Long), BloomFoldState, BloomPointSnap](in)(_._1) {
+      (key, prior, rows, emit) =>
+        val prev = prior.getOrElse(BloomFoldState(0L, Seq.fill(words)(0L)))
+        val bits = prev.words.toArray
+        val nNew = foldBloom(bits, rows.map(_._2))
+        val nSeen = prev.nSeen + nNew
+        val nBits = bits.map(java.lang.Long.bitCount).sum.toLong
+        probePos.foreach { case (p, pos) =>
+          val hit = pos.forall(i => (bits(i >> 6) & (1L << (i & 63))) != 0L)
+          emit(BloomPointSnap(key, nSeen, nBits, p, hit))
+        }
+        BloomFoldState(nSeen, bits.toSeq)
+    }
   }
 
   // ------------------------------- streaming per-key MinHash (cef51)
@@ -385,24 +364,16 @@ object SketchOps {
     val as = DedupOps.MinHashA.take(lanes).toArray
     val bs = DedupOps.MinHashB.take(lanes).toArray
     val mod = TextOps.HashMod
-    implicit val stEnc: Encoder[MhState] = Encoders.product[MhState]
-    implicit val outEnc: Encoder[MhSnap] = Encoders.product[MhSnap]
-    implicit val kvEnc: Encoder[(Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    events.select(col(keyCol).cast("long"), col(hashCol).cast("long"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[MhState, MhSnap](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long)], state: GroupState[MhState]) =>
-          val prev = state.getOption.getOrElse(MhState(0L, Seq.fill(lanes)(mod)))
-          val mins = prev.mins.toArray
-          val nNew = foldMinHash(mins, rows.map(_._2), as, bs, mod)
-          val nSeen = prev.nSeen + nNew
-          state.update(MhState(nSeen, mins.toSeq))
-          Iterator.single(MhSnap(key, nSeen, mins.toSeq))
-      }
+    import events.sparkSession.implicits._
+    val in = events.select(col(keyCol).cast("long"), col(hashCol).cast("long")).as[(Long, Long)]
+    Keyed.fold[Long, (Long, Long), MhState, MhSnap](in)(_._1) { (key, prior, rows, emit) =>
+      val prev = prior.getOrElse(MhState(0L, Seq.fill(lanes)(mod)))
+      val mins = prev.mins.toArray
+      val nNew = foldMinHash(mins, rows.map(_._2), as, bs, mod)
+      val nSeen = prev.nSeen + nNew
+      emit(MhSnap(key, nSeen, mins.toSeq))
+      MhState(nSeen, mins.toSeq)
+    }
   }
 
   // ----------------------------------- streaming per-key HLL (cef52)
@@ -460,24 +431,15 @@ object SketchOps {
   }
 
   def streamingHll(events: DataFrame, keyCol: String, hashCol: String): Dataset[HllSnap] = {
-    val mod = TextOps.HashMod
-    implicit val stEnc: Encoder[HllState] = Encoders.product[HllState]
-    implicit val outEnc: Encoder[HllSnap] = Encoders.product[HllSnap]
-    implicit val kvEnc: Encoder[(Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    events.select(col(keyCol).cast("long"), col(hashCol).cast("long"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[HllState, HllSnap](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long)], state: GroupState[HllState]) =>
-          val prev = state.getOption.getOrElse(HllState(0L, Seq.fill(HllM)(0L)))
-          val regs = prev.regs.toArray
-          val nNew = foldHll(regs, rows.map(_._2))
-          val nSeen = prev.nSeen + nNew
-          state.update(HllState(nSeen, regs.toSeq))
-          Iterator.single(hllSummary(key, nSeen, regs))
-      }
+    import events.sparkSession.implicits._
+    val in = events.select(col(keyCol).cast("long"), col(hashCol).cast("long")).as[(Long, Long)]
+    Keyed.fold[Long, (Long, Long), HllState, HllSnap](in)(_._1) { (key, prior, rows, emit) =>
+      val prev = prior.getOrElse(HllState(0L, Seq.fill(HllM)(0L)))
+      val regs = prev.regs.toArray
+      val nNew = foldHll(regs, rows.map(_._2))
+      val nSeen = prev.nSeen + nNew
+      emit(hllSummary(key, nSeen, regs))
+      HllState(nSeen, regs.toSeq)
+    }
   }
 }

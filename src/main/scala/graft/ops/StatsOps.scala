@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import graft.cef.spark.Keyed
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Per-key weighted-sample snapshot emitted by
   * [[StatsOps.streamingWeightedSample]] each time a key appears in a
@@ -128,29 +128,21 @@ object StatsOps {
       keyCol: String,
       itemCol: String,
       k: Int): Dataset[MgSnap] = {
-    implicit val stEnc: Encoder[MgState] = Encoders.product[MgState]
-    implicit val outEnc: Encoder[MgSnap] = Encoders.product[MgSnap]
-    implicit val rowEnc: Encoder[(Long, String)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    events.select(col(keyCol).cast("long"), col(itemCol).cast("string"))
-      .as[(Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[MgState, MgSnap](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, String)], state: GroupState[MgState]) =>
-          val prev = state.getOption.getOrElse(MgState(0L, Nil, Nil))
-          val counts = scala.collection.mutable.Map.empty[String, Long]
-          prev.items.zip(prev.cnts).foreach { case (i, c) => counts(i) = c }
-          var nNew = 0L
-          rows.foreach { r =>
-            counts(r._2) = counts.getOrElse(r._2, 0L) + 1L; nNew += 1
-          }
-          val merged = mgReduce(counts.toMap, k)
-          val nSeen = prev.nSeen + nNew
-          state.update(MgState(nSeen, merged.map(_._1), merged.map(_._2)))
-          Iterator.single(MgSnap(key, nSeen, merged.map(_._1), merged.map(_._2)))
+    import events.sparkSession.implicits._
+    val in = events.select(col(keyCol).cast("long"), col(itemCol).cast("string")).as[(Long, String)]
+    Keyed.fold[Long, (Long, String), MgState, MgSnap](in)(_._1) { (key, prior, rows, emit) =>
+      val prev = prior.getOrElse(MgState(0L, Nil, Nil))
+      val counts = scala.collection.mutable.Map.empty[String, Long]
+      prev.items.zip(prev.cnts).foreach { case (i, c) => counts(i) = c }
+      var nNew = 0L
+      rows.foreach { r =>
+        counts(r._2) = counts.getOrElse(r._2, 0L) + 1L; nNew += 1
       }
+      val merged = mgReduce(counts.toMap, k)
+      val nSeen = prev.nSeen + nNew
+      emit(MgSnap(key, nSeen, merged.map(_._1), merged.map(_._2)))
+      MgState(nSeen, merged.map(_._1), merged.map(_._2))
+    }
   }
 
   /** Streaming per-key weighted (order) sample: fold each micro-batch's
@@ -182,32 +174,24 @@ object StatsOps {
       idCol: String,
       priCol: String,
       k: Int): Dataset[WsSnap] = {
-    implicit val stEnc: Encoder[WsState] = Encoders.product[WsState]
-    implicit val outEnc: Encoder[WsSnap] = Encoders.product[WsSnap]
-    implicit val rowEnc: Encoder[(Long, Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    events
+    import events.sparkSession.implicits._
+    val in = events
       .select(col(keyCol).cast("long"), col(priCol).cast("long"), col(idCol).cast("long"))
       .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[WsState, WsSnap](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, Long)], state: GroupState[WsState]) =>
-          val prev = state.getOption.getOrElse(WsState(0L, Nil, Nil))
-          var merged: Seq[(Long, Long)] = prev.pris.zip(prev.ids)
-          var nNew = 0L
-          val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          rows.foreach { r =>
-            buf += ((r._2, r._3)); nNew += 1
-            if (buf.size >= 4096) { merged = mergeTopK(merged, buf, k); buf.clear() }
-          }
-          if (buf.nonEmpty) merged = mergeTopK(merged, buf, k)
-          val nSeen = prev.nSeen + nNew
-          state.update(WsState(nSeen, merged.map(_._2), merged.map(_._1)))
-          Iterator.single(
-            WsSnap(key, nSeen, merged.size.toLong, merged.map(_._2), merged.map(_._1)))
+    Keyed.fold[Long, (Long, Long, Long), WsState, WsSnap](in)(_._1) { (key, prior, rows, emit) =>
+      val prev = prior.getOrElse(WsState(0L, Nil, Nil))
+      var merged: Seq[(Long, Long)] = prev.pris.zip(prev.ids)
+      var nNew = 0L
+      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      rows.foreach { r =>
+        buf += ((r._2, r._3)); nNew += 1
+        if (buf.size >= 4096) { merged = mergeTopK(merged, buf, k); buf.clear() }
       }
+      if (buf.nonEmpty) merged = mergeTopK(merged, buf, k)
+      val nSeen = prev.nSeen + nNew
+      emit(WsSnap(key, nSeen, merged.size.toLong, merged.map(_._2), merged.map(_._1)))
+      WsState(nSeen, merged.map(_._2), merged.map(_._1))
+    }
   }
 
   /** One micro-batch of bucket indices folded into a q-cell histogram —
@@ -224,19 +208,6 @@ object StatsOps {
     cnts.toSeq
   }
 
-  /** Streaming per-key fixed-resolution histogram: q bucket counters
-    * per key folded through GroupState, emitting a snapshot per touched
-    * key per batch — the batch histogram-quantile design (p65) as a
-    * cross-batch state fold, completing the per-key sketch family
-    * (KMV cef43, CM cef45, reservoir cef46, Misra-Gries cef47).
-    * Quantiles read off the FINAL snapshot's cumulative counts are
-    * exact for the bucketized distribution, whatever the split.
-    *
-    * Scale shape: state is O(q) per key regardless of stream length or
-    * value range (the bucketize rule clamps); the only shuffle is the
-    * stateful groupByKey; quantile extraction downstream touches q
-    * rows per key, never the stream.
-    */
   /** One decay-fold step: halve the carried counters, add the batch's
     * exact totals. Integer halving truncates toward zero — identical
     * to DuckDB's `//` for the NON-NEGATIVE counters this op maintains
@@ -269,49 +240,46 @@ object StatsOps {
       events: DataFrame,
       keyCol: String,
       valCol: String): Dataset[DecaySnap] = {
-    implicit val stEnc: Encoder[DecayState] = Encoders.product[DecayState]
-    implicit val outEnc: Encoder[DecaySnap] = Encoders.product[DecaySnap]
-    implicit val rowEnc: Encoder[(Long, Long)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    events.select(col(keyCol).cast("long"), col(valCol).cast("long"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[DecayState, DecaySnap](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long)], state: GroupState[DecayState]) =>
-          var n = 0L
-          var s = 0L
-          rows.foreach { r => n += 1; s += r._2 }
-          val st = decayStep(state.getOption.getOrElse(DecayState(0L, 0L, 0L)), n, s)
-          state.update(st)
-          Iterator.single(DecaySnap(key, st.nSeen, st.decCnt, st.decSum))
-      }
+    import events.sparkSession.implicits._
+    val in = events.select(col(keyCol).cast("long"), col(valCol).cast("long")).as[(Long, Long)]
+    Keyed.fold[Long, (Long, Long), DecayState, DecaySnap](in)(_._1) { (key, prior, rows, emit) =>
+      var n = 0L
+      var s = 0L
+      rows.foreach { r => n += 1; s += r._2 }
+      val st = decayStep(prior.getOrElse(DecayState(0L, 0L, 0L)), n, s)
+      emit(DecaySnap(key, st.nSeen, st.decCnt, st.decSum))
+      st
+    }
   }
 
+  /** Streaming per-key fixed-resolution histogram: q bucket counters
+    * per key folded through GroupState, emitting a snapshot per touched
+    * key per batch — the batch histogram-quantile design (p65) as a
+    * cross-batch state fold, completing the per-key sketch family
+    * (KMV cef43, CM cef45, reservoir cef46, Misra-Gries cef47).
+    * Quantiles read off the FINAL snapshot's cumulative counts are
+    * exact for the bucketized distribution, whatever the split.
+    *
+    * Scale shape: state is O(q) per key regardless of stream length or
+    * value range (the bucketize rule clamps); the only shuffle is the
+    * stateful groupByKey; quantile extraction downstream touches q
+    * rows per key, never the stream.
+    */
   def streamingHistogram(
       events: DataFrame,
       keyCol: String,
       bucketCol: String,
       q: Int): Dataset[QhSnap] = {
-    implicit val stEnc: Encoder[QhState] = Encoders.product[QhState]
-    implicit val outEnc: Encoder[QhSnap] = Encoders.product[QhSnap]
-    implicit val rowEnc: Encoder[(Long, Int)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt)
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    events.select(col(keyCol).cast("long"), col(bucketCol).cast("int"))
-      .as[(Long, Int)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[QhState, QhSnap](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Int)], state: GroupState[QhState]) =>
-          val prev = state.getOption.getOrElse(QhState(0L, Seq.fill(q)(0L)))
-          var nNew = 0L
-          val cnts = foldHistogram(prev.cnts, rows.map { r => nNew += 1; r._2 }.toSeq, q)
-          val nSeen = prev.nSeen + nNew
-          state.update(QhState(nSeen, cnts))
-          Iterator.single(QhSnap(key, nSeen, cnts))
-      }
+    import events.sparkSession.implicits._
+    val in = events.select(col(keyCol).cast("long"), col(bucketCol).cast("int")).as[(Long, Int)]
+    Keyed.fold[Long, (Long, Int), QhState, QhSnap](in)(_._1) { (key, prior, rows, emit) =>
+      val prev = prior.getOrElse(QhState(0L, Seq.fill(q)(0L)))
+      var nNew = 0L
+      val cnts = foldHistogram(prev.cnts, rows.map { r => nNew += 1; r._2 }.toSeq, q)
+      val nSeen = prev.nSeen + nNew
+      emit(QhSnap(key, nSeen, cnts))
+      QhState(nSeen, cnts)
+    }
   }
 
   // ------------------------------ robust per-group location statistics
@@ -431,25 +399,18 @@ object StatsOps {
       idCol: String,
       tsUsCol: String,
       gapUs: Long): Dataset[SessVerdict] = {
-    implicit val stEnc: Encoder[SessState] = Encoders.product[SessState]
-    implicit val outEnc: Encoder[SessVerdict] = Encoders.product[SessVerdict]
-    implicit val inEnc: Encoder[SessIn] = Encoders.product[SessIn]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    events
+    import events.sparkSession.implicits._
+    val in = events
       .select(col(keyCol).cast("long").as("user_id"),
         col(idCol).cast("long").as("event_id"),
         col(tsUsCol).cast("long").as("ts_us"))
       .as[SessIn]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, SessVerdict](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[SessIn], state: GroupState[SessState]) =>
-          val batch = rows.toArray.sortBy(r => (r.ts_us, r.event_id)).toSeq
-          val (out, st1) = sessFold(
-            state.getOption.getOrElse(SessState(Long.MinValue, -1L)), batch, gapUs)
-          state.update(st1)
-          out.iterator
-      }
+    Keyed.fold[Long, SessIn, SessState, SessVerdict](in)(_.user_id) { (_, prior, rows, emit) =>
+      val batch = rows.toArray.sortBy(r => (r.ts_us, r.event_id)).toSeq
+      val (out, st1) = sessFold(prior.getOrElse(SessState(Long.MinValue, -1L)), batch, gapUs)
+      out.foreach(emit)
+      st1
+    }
   }
 
   /** Streaming ingest-order CUSUM changepoint gate (the p118 batch
@@ -469,27 +430,20 @@ object StatsOps {
       nTokCol: String,
       c: Long,
       h: Long): Dataset[CusumVerdict] = {
-    implicit val stEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val outEnc: Encoder[CusumVerdict] = Encoders.product[CusumVerdict]
-    implicit val inEnc: Encoder[CusumIn] = Encoders.product[CusumIn]
-    implicit val keyEnc: Encoder[String] = Encoders.STRING
-    docs
+    import docs.sparkSession.implicits._
+    val in = docs
       .select(col(idCol).cast("long").as("doc_id"),
         col(srcCol).cast("string").as("source"),
         col(nTokCol).cast("long").as("n_tok"))
       .as[CusumIn]
-      .groupByKey(_.source)
-      .flatMapGroupsWithState[Long, CusumVerdict](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (source: String, rows: Iterator[CusumIn], state: GroupState[Long]) =>
-          val batch = rows.toArray.sortBy(_.doc_id)
-          val (vals, s1) = cusumFold(
-            state.getOption.getOrElse(0L), batch.map(_.n_tok).toSeq, c)
-          state.update(s1)
-          batch.iterator.zip(vals.iterator).map { case (d, sv) =>
-            CusumVerdict(d.doc_id, source, d.n_tok, sv, sv >= h)
-          }
+    Keyed.fold[String, CusumIn, Long, CusumVerdict](in)(_.source) { (source, prior, rows, emit) =>
+      val batch = rows.toArray.sortBy(_.doc_id)
+      val (vals, s1) = cusumFold(prior.getOrElse(0L), batch.map(_.n_tok).toSeq, c)
+      batch.iterator.zip(vals.iterator).foreach { case (d, sv) =>
+        emit(CusumVerdict(d.doc_id, source, d.n_tok, sv, sv >= h))
       }
+      s1
+    }
   }
 }
 

@@ -124,9 +124,9 @@ object Pipeline {
     }
 
   /** Shared per-(source, word) token count table — the corpus explode
-    * every text audit starts from. Six audits reduce it differently (p88
-    * lift, p94 hapax tail, p100 health report, p102 Simpson, p104 Zipf,
-    * p122 Good-Turing), so in a sweep the ONE corpus explode+agg — the
+    * every text audit starts from. Seven audits reduce it differently
+    * (p66 drift, p88 lift, p94 hapax tail, p100 health report, p102
+    * Simpson, p104 Zipf, p122 Good-Turing), so in a sweep the ONE corpus explode+agg — the
     * dominant cost of each — runs once and the memo serves them all. The
     * cached table is vocabulary-bounded (|sources| × |vocab| rows,
     * corpus-size-independent), which is what makes it cacheable at
@@ -640,7 +640,7 @@ object Pipeline {
     // never all-pairs; the SQL oracle states the identical semantics with
     // the shared deterministic minhash/band formulas.
     Q("p08_dd_ngram_nn", {
-      val sh = DedupOps.shingleHashesSql("text", 3)
+      val sh = DedupOps.shingleHashesSql(3)
       val sig = minHashSigSql("sh")
       val bands = bandKeysSql("sig", NnBands)
       val jac = jaccardSql("a.sh", "b.sh")
@@ -1100,7 +1100,7 @@ object Pipeline {
     // shingles; the shuffle carries only (doc_id, partial count) pairs —
     // the 100 TB shape (corpus text scanned once, never shuffled).
     Q("p17_txt_decontaminate", {
-      val sh = DedupOps.shingleHashesSql("text", 3)
+      val sh = DedupOps.shingleHashesSql(3)
       s"""WITH sh AS (
          |  SELECT doc_id, $sh AS sh
          |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
@@ -1532,7 +1532,7 @@ object Pipeline {
     // per-doc count. The exact leg reuses p17's broadcast-set join so
     // one query certifies the sketch against its ground truth.
     Q("p37_bloom_decontaminate", {
-      val sh = DedupOps.shingleHashesSql("text", 3)
+      val sh = DedupOps.shingleHashesSql(3)
       s"""WITH sh AS (
          |  SELECT doc_id, $sh AS sh
          |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
@@ -1921,7 +1921,7 @@ object Pipeline {
     // there is no float boundary anywhere. Empty-shingle docs (< 3
     // tokens) keep a row via the left join and count as trivially novel.
     Q("p46_txt_novelty", {
-      val sh = DedupOps.shingleHashesSql("toks", 3)
+      val sh = DedupOps.shingleHashesSql(3)
       s"""WITH sh0 AS (SELECT doc_id, $sh AS sh
          |             FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
          |e AS (SELECT doc_id, unnest(sh) AS h FROM sh0),
@@ -2687,7 +2687,7 @@ object Pipeline {
     // side is one map + one per-doc count shuffle — the corpus NEVER
     // joins itself). Score ships as an exact ×10⁶ integer.
     Q("p64_contaminate_score", {
-      val sh = DedupOps.shingleHashesSql("text", 3)
+      val sh = DedupOps.shingleHashesSql(3)
       s"""WITH sh AS (
          |  SELECT doc_id, $sh AS sh
          |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
@@ -2775,9 +2775,9 @@ object Pipeline {
     // corpora are 1e12+), where Spark's Long would silently wrap while
     // DuckDB errors — decimal keeps both engines exact to 1e38, far
     // past any corpus (the neardupGroups lblSum precedent). Shape at
-    // 100 TB: one (source, word) count with map-side combine, a
-    // vocab-bounded re-agg, one vocab-keyed join; sources are bounded
-    // so their totals broadcast.
+    // 100 TB: the shared (source, word) count memo, a vocab-bounded
+    // re-agg, one vocab-keyed join; sources are bounded so their totals
+    // broadcast.
     Q("p66_source_drift",
       """WITH w AS (SELECT source, unnest(string_split(text, ' ')) AS word
         |           FROM documents),
@@ -2796,10 +2796,7 @@ object Pipeline {
         |         // (2 * CAST(ns.n_s AS HUGEINT) * t.n) AS BIGINT) AS drift_q
         |FROM pres p JOIN ns USING (source) CROSS JOIN tot t
         |ORDER BY source""".stripMargin) { (s, dir) =>
-      val wc = graft.ops.Release.afterFirstUse(
-        t(s, dir, "documents")
-          .select(col("source"), explode(tokens(col("text"))).as("word"))
-          .groupBy(col("source"), col("word")).agg(count(lit(1)).as("c")))
+      val wc = sourceWordCounts(s, dir)
       val cc = wc.groupBy(col("word")).agg(sum(col("c")).as("ct"))
       val ns = wc.groupBy(col("source")).agg(sum(col("c")).as("n_s"))
       val tot = ns.agg(sum(col("n_s")).as("n"))
@@ -3262,7 +3259,6 @@ object Pipeline {
         .distinct()
         .withColumn("rk", row_number().over(w)).filter(col("rk") <= OverlapK)
         .select(col("source"), col("h"))
-        .persist()
       val srcs = sk.select(col("source")).distinct()
       val ps = srcs.as("a").join(srcs.as("b"),
           col("a.source") < col("b.source"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
+import org.scalatest.BeforeAndAfterAll
 
 /** The lifetime of each shared DataFrame memo through a sweep, in the
   * sorted order the runners use (the BENCH_r13 p75 incident: the pair
@@ -16,7 +17,7 @@ import org.scalatest.matchers.should.Matchers
   * (`Release.sweepStart`, which runners call before each sweep). The next
   * demand after that boundary rebuilds it once.
   */
-class MemoLifetimeSpec extends AnyFlatSpec with Matchers {
+class MemoLifetimeSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -26,6 +27,8 @@ class MemoLifetimeSpec extends AnyFlatSpec with Matchers {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
 
   private val noise = Seq("p01_txt_tokens", "p03_txt_langid", "p29_split_assign")
 

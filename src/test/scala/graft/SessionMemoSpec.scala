@@ -53,7 +53,7 @@ class SessionMemoSpec extends AnyFlatSpec with Matchers {
     Release.sweepStart(spark)
     val base = builds
     val sweep = FrameConsumers.values.flatten.toSeq.sorted
-    sweep should have size 21
+    sweep should have size 22
     // unrelated queries between consumers must not move anything
     val noise = Seq("p01_txt_tokens", "p03_txt_langid", "p29_split_assign")
     sweep.zipWithIndex.foreach { case (name, i) =>
@@ -67,6 +67,18 @@ class SessionMemoSpec extends AnyFlatSpec with Matchers {
       withClue(s"$kind not cached after the sweep: ") {
         entry(spark, d1, kind).storageLevel should not be StorageLevel.NONE
       }
+  }
+
+  it should "keep a shared frame cached when p66 runs between two of its consumers" in {
+    Release.sweepStart(spark)
+    run("p100_corpus_health")
+    val base = builds
+    // p66 reads the same (source, word) counts: releasing a private copy
+    // of that plan would uncache the shared entry too
+    run("p66_source_drift")
+    run("p88_txt_word_lift")
+    withClue("rebuilds after p66: ") { builds - base shouldBe 0L }
+    entry(spark, d1, "source-word-counts").storageLevel should not be StorageLevel.NONE
   }
 
   it should "rebuild a frame after clearCache and after sweepStart, and key frames by dir" in {
@@ -269,8 +281,8 @@ object SessionMemoSpec {
     "mutual-knn-edges" -> Seq("p67_sim_cluster_stats", "p83_graph_pagerank",
       "p84_graph_kcore", "p85_graph_walks", "p86_graph_triangles"),
     "source-word-counts" -> Seq("p100_corpus_health", "p102_txt_simpson",
-      "p104_txt_zipf_ranks", "p122_txt_good_turing", "p88_txt_word_lift",
-      "p94_txt_hapax_tail"),
+      "p104_txt_zipf_ranks", "p122_txt_good_turing", "p66_source_drift",
+      "p88_txt_word_lift", "p94_txt_hapax_tail"),
     "calibration-pairs" -> Seq("p106_dd_bbit_minhash", "p69_dd_minhash_calibration",
       "p89_dd_threshold_sweep"))
 }

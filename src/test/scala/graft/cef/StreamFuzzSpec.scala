@@ -520,4 +520,229 @@ class StreamFuzzSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
     hitsSeen should be >= 3L
     missesSeen should be >= 3L
   }
+
+  it should "fold histogram counters identically streaming vs the whole-stream kernel under random slicing" in {
+    import graft.ops.StatsOps
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx = sparkS.sqlContext
+    var crossBatchFolds = 0L
+    for (trial <- 1 to 6) {
+      val rnd = new scala.util.Random(11000 + trial)
+      val q = Seq(4, 8, 16)(rnd.nextInt(3))
+      val nKeys = 1 + rnd.nextInt(5)
+      // a few out-of-range buckets so the edge clamp crosses boundaries too
+      val events: Seq[(Long, Int)] = (1 to (40 + rnd.nextInt(160))).map { _ =>
+        (rnd.nextInt(nKeys).toLong, rnd.nextInt(q + 4) - 2)
+      }
+      val slices = randomSlices(events, rnd, maxChunks = 8)
+      val mem = MemoryStream[(Long, Int)]
+      val query = StatsOps.streamingHistogram(
+        mem.toDS().toDF("user_id", "bucket"), "user_id", "bucket", q)
+        .writeStream.format("memory").queryName(s"fuzz_qh_$trial")
+        .outputMode("append").start()
+      slices.foreach { c => mem.addData(c); query.processAllAvailable() }
+      val snaps = sparkS.table(s"fuzz_qh_$trial")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](r.fieldIndex("cnts"))))
+      query.stop()
+      sparkS.catalog.dropTempView(s"fuzz_qh_$trial")
+      // counter addition is associative: the last snapshot per key is the
+      // kernel's one-pass histogram over the key's whole stream
+      val finalByKey = snaps.groupBy(_._1).map { case (key, ss) =>
+        val last = ss.maxBy(_._2)
+        key -> ((last._2, last._3.toSeq))
+      }
+      val expected = events.groupBy(_._1).map { case (key, rows) =>
+        key -> ((rows.size.toLong, StatsOps.foldHistogram(Nil, rows.map(_._2), q)))
+      }
+      withClue(s"trial $trial (q=$q, ${slices.size} slices): ") {
+        finalByKey shouldBe expected
+      }
+      crossBatchFolds += snaps.groupBy(_._1).values.count(_.size >= 2)
+    }
+    crossBatchFolds should be >= 10L
+  }
+
+  it should "fold decayed counters identically streaming vs the kernel's replay of the same slicing" in {
+    import graft.ops.{DecayState, StatsOps}
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx = sparkS.sqlContext
+    var crossBatchFolds = 0L
+    for (trial <- 1 to 6) {
+      val rnd = new scala.util.Random(12000 + trial)
+      val nKeys = 1 + rnd.nextInt(5)
+      // non-negative values: the halving rule is defined on them only
+      val events: Seq[(Long, Long)] = (1 to (40 + rnd.nextInt(160))).map { _ =>
+        (rnd.nextInt(nKeys).toLong, rnd.nextInt(50).toLong)
+      }
+      val slices = randomSlices(events, rnd, maxChunks = 8)
+      val mem = MemoryStream[(Long, Long)]
+      val query = StatsOps.streamingDecay(
+        mem.toDS().toDF("user_id", "v"), "user_id", "v")
+        .writeStream.format("memory").queryName(s"fuzz_decay_$trial")
+        .outputMode("append").start()
+      slices.foreach { c => mem.addData(c); query.processAllAvailable() }
+      val snaps = sparkS.table(s"fuzz_decay_$trial")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      query.stop()
+      sparkS.catalog.dropTempView(s"fuzz_decay_$trial")
+      // decay halves once per batch that touches the key, so the
+      // expectation replays decayStep over the SAME slicing; it matches
+      // only if state survives every boundary in order
+      val finalByKey = snaps.groupBy(_._1).map { case (key, ss) => key -> ss.maxBy(_._2) }
+      val expected = events.map(_._1).distinct.map { key =>
+        var st = DecayState(0L, 0L, 0L)
+        slices.foreach { slice =>
+          val mine = slice.filter(_._1 == key).map(_._2)
+          if (mine.nonEmpty) st = StatsOps.decayStep(st, mine.size.toLong, mine.sum)
+        }
+        key -> ((key, st.nSeen, st.decCnt, st.decSum))
+      }.toMap
+      withClue(s"trial $trial (${slices.size} slices): ") {
+        finalByKey shouldBe expected
+      }
+      crossBatchFolds += snaps.groupBy(_._1).values.count(_.size >= 2)
+    }
+    crossBatchFolds should be >= 10L
+  }
+
+  it should "assign gap sessions identically streaming vs the kernel's whole-stream replay" in {
+    import graft.ops.{SessIn, SessState, StatsOps}
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx = sparkS.sqlContext
+    val gap = 100L
+    var crossBatchFolds = 0L
+    for (trial <- 1 to 6) {
+      val rnd = new scala.util.Random(13000 + trial)
+      val nUsers = 1 + rnd.nextInt(4)
+      // per user: increments at, just over and well under the gap, plus
+      // equal timestamps (the event id breaks those ties)
+      val perUser = (0 until nUsers).flatMap { u =>
+        var ts = rnd.nextInt(50).toLong
+        (1 to (10 + rnd.nextInt(40))).map { _ =>
+          ts += (rnd.nextInt(5) match {
+            case 0 => 0L
+            case 1 => gap
+            case 2 => gap + 1
+            case _ => 1L + rnd.nextInt(80)
+          })
+          (u.toLong, ts)
+        }
+      }
+      // the stream delivers events in (ts, id) order across batches;
+      // arrival within one batch is shuffled
+      val events = rnd.shuffle(perUser).zipWithIndex
+        .map { case ((u, ts), i) => (u, i.toLong, ts) }
+        .sortBy(e => (e._3, e._2))
+      val slices = randomSlices(events, rnd, maxChunks = 8).map(rnd.shuffle(_))
+      val mem = MemoryStream[(Long, Long, Long)]
+      val query = StatsOps.streamingSessions(
+        mem.toDS().toDF("user_id", "event_id", "ts_us"), "user_id", "event_id", "ts_us", gap)
+        .writeStream.format("memory").queryName(s"fuzz_sess_gap_$trial")
+        .outputMode("append").start()
+      slices.foreach { c => mem.addData(c); query.processAllAvailable() }
+      val verdicts = sparkS.table(s"fuzz_sess_gap_$trial")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSeq.sorted
+      query.stop()
+      sparkS.catalog.dropTempView(s"fuzz_sess_gap_$trial")
+      val expected = events.groupBy(_._1).toSeq.flatMap { case (_, rows) =>
+        StatsOps.sessFold(SessState(Long.MinValue, -1L),
+          rows.map(e => SessIn(e._1, e._2, e._3)), gap)._1
+      }.map(v => (v.user_id, v.event_id, v.session_idx, v.is_new)).sorted
+      withClue(s"trial $trial (${slices.size} slices, ${events.size} events): ") {
+        verdicts shouldBe expected
+        expected.map(_._3).max should be >= 1L
+      }
+      crossBatchFolds += events.groupBy(_._1).keys.count { u =>
+        slices.count(_.exists(_._1 == u)) >= 2
+      }
+    }
+    crossBatchFolds should be >= 10L
+  }
+
+  it should "emit CUSUM verdicts identically streaming vs the kernel's whole-stream replay" in {
+    import graft.ops.StatsOps
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx = sparkS.sqlContext
+    val (c, h) = (20L, 60L)
+    var alarms = 0L
+    var crossBatchFolds = 0L
+    for (trial <- 1 to 6) {
+      val rnd = new scala.util.Random(14000 + trial)
+      val nSources = 2 + rnd.nextInt(3)
+      // token counts around the reference level, with bursts that drive
+      // the statistic over the alarm threshold
+      val docs: Seq[(Long, String, Long)] = (1 to (40 + rnd.nextInt(160))).map { i =>
+        (i.toLong, s"src${rnd.nextInt(nSources)}",
+          (if (rnd.nextInt(6) == 0) 40 + rnd.nextInt(40) else rnd.nextInt(35)).toLong)
+      }
+      // id-ordered across batches, shuffled within one
+      val slices = randomSlices(docs, rnd, maxChunks = 8).map(rnd.shuffle(_))
+      val mem = MemoryStream[(Long, String, Long)]
+      val query = StatsOps.streamingCusum(
+        mem.toDS().toDF("doc_id", "source", "n_tok"), "doc_id", "source", "n_tok", c, h)
+        .writeStream.format("memory").queryName(s"fuzz_cusum_$trial")
+        .outputMode("append").start()
+      slices.foreach { s => mem.addData(s); query.processAllAvailable() }
+      val verdicts = sparkS.table(s"fuzz_cusum_$trial")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3), r.getBoolean(4)))
+        .toSeq.sortBy(_._1)
+      query.stop()
+      sparkS.catalog.dropTempView(s"fuzz_cusum_$trial")
+      val expected = docs.groupBy(_._2).toSeq.flatMap { case (src, rows) =>
+        val byId = rows.sortBy(_._1)
+        byId.zip(StatsOps.cusumFold(0L, byId.map(_._3), c)._1).map { case (d, sv) =>
+          (d._1, src, d._3, sv, sv >= h)
+        }
+      }.sortBy(_._1)
+      withClue(s"trial $trial (${slices.size} slices, ${docs.size} docs): ") {
+        verdicts shouldBe expected
+      }
+      alarms += expected.count(_._5)
+      crossBatchFolds += docs.map(_._2).distinct.count { src =>
+        slices.count(_.exists(_._2 == src)) >= 2
+      }
+    }
+    alarms should be >= 3L
+    crossBatchFolds should be >= 10L
+  }
+
+  it should "emit the same Misra-Gries snapshots when restarted from its checkpoint" in {
+    import graft.ops.StatsOps
+    import org.apache.spark.sql.{DataFrame, Row}
+    import scala.jdk.CollectionConverters._
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx = sparkS.sqlContext
+    val rnd = new scala.util.Random(15001)
+    val events: Seq[(Long, String)] = (1 to 300).map { _ =>
+      (rnd.nextInt(4).toLong, s"i${math.min(rnd.nextInt(8), rnd.nextInt(8))}")
+    }
+    val chunks = events.grouped(60).toSeq
+    // stop the query before batch `restartAt` (none if negative) and
+    // restart it on the same checkpoint; all rows its sink received
+    def run(restartAt: Int): Seq[String] = KeyedCases.withCheckpoint { ckpt =>
+      val mem = MemoryStream[(Long, String)]
+      val rows = new java.util.concurrent.ConcurrentLinkedQueue[Row]
+      def start() = StatsOps.streamingMisraGries(mem.toDF().toDF("user_id", "item"), "user_id", "item", 3)
+        .toDF().writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, _: Long) => b.collect().foreach(rows.add) }
+        .start()
+      var q = start()
+      try chunks.zipWithIndex.foreach { case (chunk, i) =>
+        if (i == restartAt) { q.stop(); q = start() }
+        mem.addData(chunk)
+        q.processAllAvailable()
+      } finally q.stop()
+      KeyedCases.canon(rows.asScala.toSeq)
+    }
+    val whole = run(-1)
+    // one snapshot per (key, batch) that touched the key
+    whole.size should be >= chunks.size * 2
+    run(2) shouldBe whole
+  }
 }
