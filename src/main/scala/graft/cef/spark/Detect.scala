@@ -62,7 +62,8 @@ object Detect {
     * only the attr VALUE arrays; the names — constants of the dataset, not
     * of the row — ride in the operator closure and the CEvent is rebuilt
     * exactly once, post-shuffle ([[KeyedEvents]]). Same normalization
-    * rules as [[toEvents]] (shared `tsExpr`).
+    * rules as [[toEvents]] (shared `tsExpr`). The stream's source is this
+    * one `select`, of the kept attr columns only when it is pruned.
     */
   def toEventStream(
       df: DataFrame,
@@ -72,16 +73,18 @@ object Detect {
       partitionCol: String,
       numAttrs: Seq[String] = Nil,
       strAttrs: Seq[String] = Nil): EventStream = {
-    implicit val nEnc: Encoder[NEvent] = Encoders.product[NEvent]
-    val ds = df.select(
-      col(idCol).cast("long").as("id"),
-      col(typeCol).cast("string").as("eventType"),
-      tsExprFor(df, tsCol).as("timestamp"),
-      col(partitionCol).cast("string").as("partition"),
-      array(numAttrs.map(a => col(a).cast("double")): _*).as("numV"),
-      array(strAttrs.map(a => col(a).cast("string")): _*).as("strV"))
-      .as[NEvent]
-    EventStream(ds, numAttrs.toArray, strAttrs.toArray)
+    val nEnc: Encoder[NEvent] = Encoders.product[NEvent]
+    val tsExpr = tsExprFor(df, tsCol)
+    EventStream(numAttrs, strAttrs) { (num, str) =>
+      df.select(
+        col(idCol).cast("long").as("id"),
+        col(typeCol).cast("string").as("eventType"),
+        tsExpr.as("timestamp"),
+        col(partitionCol).cast("string").as("partition"),
+        array(num.map(a => col(a).cast("double")).toSeq: _*).cast("array<double>").as("numV"),
+        array(str.map(a => col(a).cast("string")).toSeq: _*).cast("array<string>").as("strV"))
+        .as[NEvent](nEnc)
+    }
   }
 
   /** Detection points from the deterministic streaming-SDFA runtime. */

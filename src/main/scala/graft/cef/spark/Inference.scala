@@ -69,17 +69,17 @@ object Inference {
     def current: Summary = state.get()
   }
 
-  /** Engine state carried in GroupState across micro-batches: the run
+  /** Engine state carried across micro-batches: the run
     * snapshot plus the reporting state (pending unresolved forecasts,
     * cumulative + last-reported confusion counts, next report time) —
     * exactly the reference's keyed state set (WayebEngine.java:103-128).
     *
-    * Flat on purpose: primitives and primitive arrays only, so the state
-    * row of every key encodes and decodes on every batch without
-    * Catalyst's per-element object loops. The [[DetRunState]] fields are
-    * inline, the SPST symbol buffer is most-recent-first, the pending
-    * forecasts are three parallel arrays (positive, start, end) and
-    * `cum`/`prev` are the (tp, tn, fp, fn) counts.
+    * Flat on purpose: primitives and primitive arrays only, written to the
+    * key's one binary state column by [[toBytes]] and read back by
+    * [[EngineSnapshot.fromBytes]] on every batch. The [[DetRunState]]
+    * fields are inline, the SPST symbol buffer is most-recent-first, the
+    * pending forecasts are three parallel arrays (positive, start, end)
+    * and `cum`/`prev` are the (tp, tn, fp, fn) counts.
     */
   final case class EngineSnapshot(
       state: Int,
@@ -96,12 +96,58 @@ object Inference {
       pendingEnd: Array[Long],
       cum: Array[Long],
       prev: Array[Long],
-      nextReportTime: Long)
+      nextReportTime: Long) {
+
+    /** The key's state column: [[EngineSnapshot.FormatVersion]], then the
+      * fields in declaration order, arrays as a length and the elements
+      * (big-endian, a boolean as one byte). */
+    def toBytes: Array[Byte] = {
+      val arrays = Seq(pendingStart, pendingEnd, cum, prev)
+      val size = 1 + 4 + 3 * 8 + 4 + 4 * buffer.length + 1 + 2 * 4 + 8 +
+        4 + pendingPositive.length + arrays.map(4 + 8 * _.length).sum + 8
+      val b = java.nio.ByteBuffer.allocate(size)
+      b.put(EngineSnapshot.FormatVersion)
+      b.putInt(state).putLong(counter).putLong(minCounter).putLong(minTs)
+      b.putInt(buffer.length); buffer.foreach(b.putInt)
+      b.put((if (paused) 1 else 0).toByte).putInt(currentModelId).putInt(latestModelId)
+      b.putLong(pendingSwapAt)
+      b.putInt(pendingPositive.length); pendingPositive.foreach(p => b.put((if (p) 1 else 0).toByte))
+      arrays.foreach { a => b.putInt(a.length); a.foreach(b.putLong) }
+      b.putLong(nextReportTime)
+      b.array()
+    }
+  }
+
+  object EngineSnapshot {
+    /** The first byte of [[EngineSnapshot.toBytes]]; a change to the
+      * fields or their encoding takes a new value. */
+    val FormatVersion: Byte = 1
+
+    /** Read [[EngineSnapshot.toBytes]]; any other format version fails. */
+    def fromBytes(bytes: Array[Byte]): EngineSnapshot = {
+      if (bytes.isEmpty || bytes(0) != FormatVersion) {
+        val found = if (bytes.isEmpty) "no version byte" else s"version ${bytes(0)}"
+        throw new IllegalStateException(s"engine state has $found, but this build reads " +
+          s"EngineSnapshot format version $FormatVersion: a checkpoint written by another " +
+          "build cannot be resumed")
+      }
+      val b = java.nio.ByteBuffer.wrap(bytes, 1, bytes.length - 1)
+      def longs(): Array[Long] = Array.fill(b.getInt)(b.getLong)
+      EngineSnapshot(
+        state = b.getInt, counter = b.getLong, minCounter = b.getLong, minTs = b.getLong,
+        buffer = Array.fill(b.getInt)(b.getInt),
+        paused = b.get != 0, currentModelId = b.getInt, latestModelId = b.getInt,
+        pendingSwapAt = b.getLong,
+        pendingPositive = Array.fill(b.getInt)(b.get != 0),
+        pendingStart = longs(), pendingEnd = longs(), cum = longs(), prev = longs(),
+        nextReportTime = b.getLong)
+    }
+  }
 
   final case class PendingForecast(positive: Boolean, start: Long, end: Long)
 
   implicit private val outEnc: Encoder[Out] = Encoders.product[Out]
-  implicit private val snapEnc: Encoder[EngineSnapshot] = Encoders.product[EngineSnapshot]
+  implicit private val stateEnc: Encoder[Array[Byte]] = Encoders.BINARY
 
   /** Build the streaming inference Dataset: one [[EngineRun]] per key on
     * the keyed stream ([[Keyed.stream]]). `controls` is captured when each
@@ -120,8 +166,17 @@ object Inference {
       initialModelId: Int = 0,
       swapDelay: Long = 0L,
       reportingDistance: Long = 3600L): Dataset[Out] =
-    Keyed.stream(events, cp.attrsRead)(key => new EngineRun(key, cp, loadModel, controls,
-      initialModelId, swapDelay, reportingDistance))
+    Keyed.stream(events, cp.attrsRead)(key => new BinaryState(new EngineRun(key, cp, loadModel,
+      controls, initialModelId, swapDelay, reportingDistance)))
+
+  /** An [[EngineRun]] on one binary state column per key
+    * ([[EngineSnapshot.toBytes]]): a struct row of the snapshot's fields
+    * costs an encode and a decode through Catalyst per key and batch. */
+  private final class BinaryState(run: EngineRun) extends KeyedRuntime[Array[Byte], Out] {
+    def restore(s: Array[Byte]): Unit = run.restore(EngineSnapshot.fromBytes(s))
+    def feed(e: CEvent, out: Out => Unit): Unit = run.feed(e, out)
+    def snapshot: Array[Byte] = run.snapshot.toBytes
+  }
 
   /** The keyed forecasting engine of one key for one micro-batch: a
     * [[SpstRun]] with pause/play, the event-time gated model swap, online

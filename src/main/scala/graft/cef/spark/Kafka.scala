@@ -1,9 +1,10 @@
 package graft.cef.spark
 
 import graft.cef.adapt.{FactoryReport, SyncCommand}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import scala.annotation.unused
 
 /** Kafka sources/sinks for the reference's topic topology (SURVEY.md §0 +
   * §2.1 S1-S4, S7, S9; reference InferenceJob.java:120-208,
@@ -24,7 +25,7 @@ object Kafka {
 
   /** S1: the event source — earliest offsets like the reference
     * (InferenceJob.java:120-132). Returns the raw value strings; feed them
-    * to a parser (e.g. [[Sources.maritimeFromJson]] over from_json).
+    * to [[maritimeEventStream]].
     */
   def eventSource(spark: SparkSession, brokers: String, topic: String = "maritime_input"): DataFrame =
     spark.readStream.format("kafka")
@@ -61,27 +62,35 @@ object Kafka {
       .option("topic", topic)
       .option("checkpointLocation", checkpoint)
 
-  /** Maritime events end-to-end: Kafka value strings → parsed maritime
-    * frame → the narrow event stream keyed by mmsi ([[Detect.toEventStream]];
-    * streaming equivalent of [[Sources.maritimeEvents]]). The keyed
-    * operators keep only the attributes their pattern reads, so the
-    * unused maritime fields are never built. `idCol` must be unique and
-    * arrival-monotone per key; `monotonically_increasing_id` is NOT legal
-    * on streaming plans, so the overload derives the id from Kafka's
-    * (offset, partition) pair — unique and offset-monotone within each
-    * Kafka partition for up to 4096 partitions.
+  /** Maritime events end-to-end: Kafka value strings → the narrow event
+    * stream keyed by mmsi, with the 26 double attributes of
+    * [[Sources.maritimeFromJson]] ([[Sources.maritimeNumAttrs]]). The rows are
+    * built in one `mapPartitions`: each line gets one Jackson pass over its
+    * UTF-8 bytes ([[MaritimeLines]]) that reads `timestamp`, `mmsi` and
+    * only the fields behind the attributes the keyed operator keeps
+    * ([[EventStream.prune]] rebuilds the stream for them): `from_json`
+    * here parses every line twice — Catalyst copies it into the pushed-down
+    * `timestamp IS NOT NULL` filter — and decodes each value through a
+    * per-record reader.
+    *
+    * `idCol` must be unique and arrival-monotone per key; it is evaluated
+    * (and cast to long) on every line, also on lines the parser drops.
+    * `monotonically_increasing_id` is NOT legal on streaming plans, so the
+    * overload derives the id from Kafka's (offset, partition) pair — unique
+    * and offset-monotone within each Kafka partition for up to 4096
+    * partitions.
     */
   def maritimeEventStream(raw: DataFrame, idCol: Column): EventStream = {
-    val parsed = Sources.maritimeFromJson(
-      raw
-        .select(from_json(col("value"), Sources.maritimeJsonSchema).as("j"),
-          idCol.cast("long").as("__id"))
-        .select(col("j.*"), col("__id")),
-      extra = Seq(col("__id")))
-    val numCols = parsed.schema.fields.collect {
-      case f if f.dataType.typeName == "double" => f.name
-    }.toSeq
-    Detect.toEventStream(parsed, "__id", "eventType", "timestamp", "mmsi", numAttrs = numCols)
+    val lines = raw.select(col("value").cast("binary"), idCol.cast("long"))
+      .as(Encoders.tuple(Encoders.BINARY, Encoders.LONG))
+    val ansi = raw.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
+    val nEnc = Encoders.product[NEvent]
+    EventStream(Sources.maritimeNumAttrs, Nil) { (num, _) =>
+      lines.mapPartitions { rows =>
+        val parser = new MaritimeLines(num, ansi)
+        rows.map(r => parser.parse(r._1, r._2)).filter(_ != null)
+      }(nEnc)
+    }
   }
 
   /** [[eventSource]] output → events, with the Kafka arrival id. */
@@ -95,7 +104,7 @@ object Kafka {
     * InferenceJob.java:145-208 merges the two topics the same way). Use as
     * `controlStream.writeStream.foreachBatch(controlDispatch(handle))`.
     */
-  def controlDispatch(handle: Inference.ControlHandle)(batch: DataFrame, batchId: Long): Unit = {
+  def controlDispatch(handle: Inference.ControlHandle)(batch: DataFrame, @unused batchId: Long): Unit = {
     // collect() order is partition order, not arrival order — commands
     // from different Kafka partitions would apply shuffled (pause/play
     // reversed). Sort by the broker timestamp when the source kept it.

@@ -2,7 +2,7 @@ package graft.cef.spark
 
 import graft.cef._
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.functions.{array, col, map_keys, map_values}
+import org.apache.spark.sql.functions.{col, map_keys, map_values}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import scala.language.implicitConversions
 
@@ -161,14 +161,15 @@ object Keyed {
   * attributes the pattern reads. An attribute in the set that is present
   * on an event stays present, and an absent one stays absent, so
   * `CEvent.numberOf`/`stringOf` keep their num↔str fallbacks and their
-  * errors; the value slots outside the set fold away in Catalyst and are
-  * never built. A `Dataset[CEvent]` ships its maps whole: its attribute
-  * names live in each row, so filtering them would add a pass over every
-  * row's maps on the batch scans, where that was never shown to pay.
+  * errors; the stream is rebuilt from its source for the kept names, so
+  * the attributes outside the set are never built. A `Dataset[CEvent]`
+  * ships its maps whole: its attribute names live in each row, so
+  * filtering them would add a pass over every row's maps on the batch
+  * scans, where that was never shown to pay.
   */
 sealed abstract class KeyedEvents {
   type Row <: KeyedRow
-  val rows: Dataset[Row]
+  def rows: Dataset[Row]
   /** Serializable and free of the Dataset: it rides the task closure. */
   val rebuild: Row => CEvent
   /** The same events; an [[EventStream]] keeps only the attributes in
@@ -192,7 +193,7 @@ object KeyedEvents {
 
   implicit def fromStream(events: EventStream): KeyedEvents = new KeyedEvents {
     type Row = NEvent
-    val rows: Dataset[NEvent] = events.ds
+    lazy val rows: Dataset[NEvent] = events.ds
     val rebuild: NEvent => CEvent = NEvent.rebuilder(events.numNames, events.strNames)
     def prune(attrs: Set[String]): KeyedEvents = fromStream(events.prune(attrs))
   }
@@ -228,30 +229,36 @@ object NEvent {
   }
 }
 
-/** Narrow ingest handle ([[Detect.toEventStream]]): the typed event rows
-  * plus their dataset-constant attr names. The names arrays serialize once
-  * into each task closure.
+/** Narrow ingest handle ([[Detect.toEventStream]],
+  * [[Kafka.maritimeEventStream]]): the attr names of the stream and its
+  * source, which builds the typed event rows for any subset of them. The
+  * names arrays serialize once into each task closure.
   */
-final case class EventStream(
-    ds: Dataset[NEvent],
-    numNames: Array[String],
-    strNames: Array[String]) {
+final class EventStream private (
+    val numNames: Array[String],
+    val strNames: Array[String],
+    source: (Array[String], Array[String]) => Dataset[NEvent]) {
 
-  /** The value slots of the attributes in `attrs` only. Each kept slot is
-    * `numV[i]`/`strV[i]` over the ingest's `array(...)`, which Catalyst
-    * folds to the source column, so the dropped attributes are never
+  /** The rows: one value slot per attr name, in name order. */
+  lazy val ds: Dataset[NEvent] = source(numNames, strNames)
+
+  /** The attributes in `attrs` only: the stream is rebuilt from its source
+    * for the kept names, so the dropped attributes are never parsed or
     * computed. */
   def prune(attrs: Set[String]): EventStream = {
-    val num = numNames.indices.filter(i => attrs(numNames(i)))
-    val str = strNames.indices.filter(i => attrs(strNames(i)))
+    val num = numNames.filter(attrs)
+    val str = strNames.filter(attrs)
     if (num.length == numNames.length && str.length == strNames.length) this
-    else EventStream(
-      ds.select(col("id"), col("eventType"), col("timestamp"), col("partition"),
-        array(num.map(col("numV")(_)): _*).cast("array<double>").as("numV"),
-        array(str.map(col("strV")(_)): _*).cast("array<string>").as("strV"))
-        .as[NEvent](Encoders.product[NEvent]),
-      num.map(numNames).toArray, str.map(strNames).toArray)
+    else new EventStream(num, str, source)
   }
+}
+
+object EventStream {
+  /** A stream of these attrs; `source(num, str)` builds the rows of any
+    * subset of the names, values aligned with the names it is given. */
+  def apply(numNames: Seq[String], strNames: Seq[String])(
+      source: (Array[String], Array[String]) => Dataset[NEvent]): EventStream =
+    new EventStream(numNames.toArray, strNames.toArray, source)
 }
 
 /** Shuffle-side row of a `Dataset[CEvent]`: the attr maps as parallel

@@ -6,10 +6,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Event sources & parsers (SURVEY.md §2.1 S5/S6, §2.2 P1-P4), Spark-first:
-  * each parser is a set of Catalyst column expressions over a file/Kafka
-  * scan (projection + coercion codegen'd by Tungsten), not a per-event
-  * imperative flatMap. The same select() works on `spark.read` and
-  * `spark.readStream` inputs.
+  * each batch parser is a set of Catalyst column expressions over a
+  * file/Kafka scan (projection + coercion codegen'd by Tungsten). The same
+  * select() works on `spark.read` and `spark.readStream` inputs.
+  *
+  * The one exception is the maritime stream of the inference path
+  * ([[Kafka.maritimeEventStream]]): it parses each line in one Jackson
+  * pass ([[MaritimeLines]]) that reads only the fields behind the kept
+  * attributes, because `from_json` there parses every line twice (Catalyst
+  * copies it into the pushed-down `timestamp IS NOT NULL` filter) and
+  * decodes every value through a per-record reader. [[maritimeFromJson]]
+  * is the batch parser and the reference the stream parser is checked
+  * against.
   */
 object Sources {
 
@@ -47,32 +55,35 @@ object Sources {
     StructField("next_timestamp", LongType),
     StructField("critical_bitstring", StringType)))
 
+  /** The maritime doubles read straight from one JSON field, as
+    * (attribute, field): trh→heading and the entry/exit renames, in
+    * [[maritimeFromJson]]'s column order.
+    */
+  private[spark] val maritimeFieldAttrs: Seq[(String, String)] = Seq(
+    "lon" -> "lon", "lat" -> "lat", "speed" -> "speed", "cog" -> "cog", "heading" -> "trh",
+    "entryAnchorage" -> "entry_anchorage", "entryFishing" -> "entry_fishing",
+    "entryNatura" -> "entry_natura", "entryNearcoast" -> "entry_nearcoast",
+    "entryNearcoast5k" -> "entry_nearcoast5k", "entryNearports" -> "entry_nearports",
+    "exitAnchorage" -> "exit_anchorage", "exitFishing" -> "exit_fishing",
+    "exitNatura" -> "exit_natura", "exitNearcoast" -> "exit_nearcoast",
+    "exitNearcoast5k" -> "exit_nearcoast5k", "exitNearports" -> "exit_nearports")
+
+  /** The 26 numeric attributes of a maritime event, in column order: the
+    * field doubles, `gap_start` (timestamp = -1) and the bitstring flags.
+    */
+  val maritimeNumAttrs: Seq[String] =
+    maritimeFieldAttrs.map(_._1) ++ ("gap_start" +: BitstringFlags)
+
   /** P1: maritime JSONL → typed event frame. Field renames (trh→heading,
     * next_timestamp→nextCETimestamp), double coercion, bitstring expansion,
     * gap_start derivation, unparsable lines dropped (timestamp null).
     * Works identically on a batch json scan and on
-    * `from_json(kafka value)` — pass the value column for streams.
+    * `from_json(kafka value)`.
     */
   def maritimeFromJson(df: DataFrame, extra: Seq[Column] = Nil): DataFrame = {
-    val renames = Map(
-      "entry_nearcoast" -> "entryNearcoast", "entry_nearcoast5k" -> "entryNearcoast5k",
-      "entry_fishing" -> "entryFishing", "entry_natura" -> "entryNatura",
-      "entry_nearports" -> "entryNearports", "entry_anchorage" -> "entryAnchorage",
-      "exit_nearcoast" -> "exitNearcoast", "exit_nearcoast5k" -> "exitNearcoast5k",
-      "exit_fishing" -> "exitFishing", "exit_natura" -> "exitNatura",
-      "exit_nearports" -> "exitNearports", "exit_anchorage" -> "exitAnchorage")
     val cols: Seq[Column] =
-      Seq(
-        col("timestamp"),
-        coalesce(col("mmsi"), lit("")).as("mmsi"),
-        coalesce(col("lon"), lit(0.0)).as("lon"),
-        coalesce(col("lat"), lit(0.0)).as("lat"),
-        coalesce(col("speed"), lit(0.0)).as("speed"),
-        coalesce(col("cog"), lit(0.0)).as("cog"),
-        coalesce(col("trh"), lit(0.0)).as("heading")) ++
-      renames.toSeq.sortBy(_._2).map { case (src, dst) =>
-        coalesce(col(src), lit(0.0)).as(dst)
-      } ++
+      Seq(col("timestamp"), coalesce(col("mmsi"), lit("")).as("mmsi")) ++
+      maritimeFieldAttrs.map { case (attr, field) => coalesce(col(field), lit(0.0)).as(attr) } ++
       Seq(
         coalesce(col("next_timestamp"), lit(0L)).as("nextCETimestamp"),
         when(col("timestamp") === -1L, 1.0).otherwise(0.0).as("gap_start"),

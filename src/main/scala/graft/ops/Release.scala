@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -46,9 +47,14 @@ object Release {
   /** Persist `df` and unpersist it automatically after the first
     * completed (or failed) execution that consumed it, or after
     * [[MaxMisses]] unrelated executions (whichever comes first).
+    *
+    * A plan that is already cached (a [[SessionMemo]] frame, say) is
+    * returned as it is, with no listener: unpersisting uncaches by plan,
+    * so releasing it would evict the owner's entry.
     */
   def afterFirstUse(df: DataFrame): DataFrame = {
     reapStopped()
+    if (df.sparkSession.sharedState.cacheManager.lookupCachedData(castToImpl(df)).isDefined) return df
     val cached = df.persist()
     val listener = new WatchedListener(df.sparkSession, cached)
     live.add(listener)

@@ -81,6 +81,20 @@ class SessionMemoSpec extends AnyFlatSpec with Matchers {
     entry(spark, d1, "source-word-counts").storageLevel should not be StorageLevel.NONE
   }
 
+  it should "stay cached when Release.afterFirstUse is handed its plan" in {
+    val memo = SessionMemo.frame(spark, "/memo-spec", "released-plan")(spark.range(777).toDF("v"))
+    val listeners = Release.activeListeners
+    // a private copy of the memo's plan, released after its consumer:
+    // unpersisting it would uncache the shared entry too
+    Release.afterFirstUse(spark.range(777).toDF("v")).count() shouldBe 777L
+    // the listener bus delivers asynchronously: wait until it is drained
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (Release.activeListeners > listeners && System.nanoTime() < deadline) Thread.sleep(50)
+    Release.activeListeners shouldBe listeners
+    memo.storageLevel should not be StorageLevel.NONE
+    entry(spark, "/memo-spec", "released-plan") should be theSameInstanceAs memo
+  }
+
   it should "rebuild a frame after clearCache and after sweepStart, and key frames by dir" in {
     run("p122_txt_good_turing")
     val base = builds
