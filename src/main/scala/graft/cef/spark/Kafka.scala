@@ -66,7 +66,7 @@ object Kafka {
     * stream keyed by mmsi, with the 26 double attributes of
     * [[Sources.maritimeFromJson]] ([[Sources.maritimeNumAttrs]]). The rows are
     * built in one `mapPartitions`: each line gets one Jackson pass over its
-    * UTF-8 bytes ([[MaritimeLines]]) that reads `timestamp`, `mmsi` and
+    * decoded String ([[MaritimeLines]]) that reads `timestamp`, `mmsi` and
     * only the fields behind the attributes the keyed operator keeps
     * ([[EventStream.prune]] rebuilds the stream for them): `from_json`
     * here parses every line twice — Catalyst copies it into the pushed-down
@@ -81,8 +81,8 @@ object Kafka {
     * partitions.
     */
   def maritimeEventStream(raw: DataFrame, idCol: Column): EventStream = {
-    val lines = raw.select(col("value").cast("binary"), idCol.cast("long"))
-      .as(Encoders.tuple(Encoders.BINARY, Encoders.LONG))
+    val lines = raw.select(col("value").cast("string"), idCol.cast("long"))
+      .as(Encoders.tuple(Encoders.STRING, Encoders.LONG))
     val ansi = raw.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
     val nEnc = Encoders.product[NEvent]
     EventStream(Sources.maritimeNumAttrs, Nil) { (num, _) =>

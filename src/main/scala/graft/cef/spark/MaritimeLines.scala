@@ -27,10 +27,11 @@ import scala.util.control.NonFatal
   *     that is not a digit fails the line as Spark's cast fails the query.
   *   - a line without an integer `timestamp` is dropped (`parse` is null).
   *
-  * The pass runs over the UTF-8 bytes. A line that does not start with `{`,
-  * or on which any read failed, is read again from its decoded String, the
-  * way Spark reads it, so malformed UTF-8 decodes to U+FFFD as there. One
-  * instance per task: it keeps per-line scratch state.
+  * The pass reads the line's decoded String: Spark decodes the value's
+  * UTF-8 the same way (`UTF8String.toString`, and the reader `from_json`
+  * wraps around its bytes), so malformed, overlong and surrogate sequences
+  * read as U+FFFD on both. One instance per task: it keeps per-line
+  * scratch state.
   */
 private[spark] final class MaritimeLines(numAttrs: Array[String], ansi: Boolean) {
   import MaritimeLines._
@@ -67,15 +68,12 @@ private[spark] final class MaritimeLines(numAttrs: Array[String], ansi: Boolean)
   private var bits: String = _
   private val dbl = new Array[Double](dblFields.length)
   private val dblSet = new Array[Boolean](dblFields.length)
-  private var failed = false
 
   /** The event of one line, or null when the line has no timestamp.
     * `id` is the line's id, null only if the line is dropped. */
-  def parse(line: Array[Byte], id: java.lang.Long): NEvent = {
+  def parse(line: String, id: java.lang.Long): NEvent = {
     if (line == null) return null
-    val fast = line.length > 1 && line(0) == '{' && line(1) != 0
-    if (!fast || !read(factory.createParser(line)) || failed)
-      read(factory.createParser(new String(line, UTF_8)))
+    read(factory.createParser(line))
     if (!hasTs) null
     else {
       if (id == null)
@@ -84,29 +82,25 @@ private[spark] final class MaritimeLines(numAttrs: Array[String], ansi: Boolean)
     }
   }
 
-  /** Walk one line's root object as Spark's JSON reader does; false when
-    * the line is not an object or its syntax breaks (no timestamp). */
-  private def read(p: JsonParser): Boolean = {
-    hasTs = false; mmsi = null; bits = null; failed = false
+  /** Walk one line's root object as Spark's JSON reader does; a line
+    * that is not an object, or whose syntax breaks, has no timestamp. */
+  private def read(p: JsonParser): Unit = {
+    hasTs = false; mmsi = null; bits = null
     java.util.Arrays.fill(dblSet, false)
-    val ok =
-      try {
-        p.nextToken() == JsonToken.START_OBJECT && {
-          var t = p.nextToken()
-          while (t != null && t != JsonToken.END_OBJECT) {
-            val slot = slots.get(p.currentName())
-            if (slot == null) p.skipChildren()
-            else
-              try readField(slot, p)
-              catch { case NonFatal(_) => failed = true; p.skipChildren() }
-            t = p.nextToken()
-          }
-          true
+    try {
+      if (p.nextToken() == JsonToken.START_OBJECT) {
+        var t = p.nextToken()
+        while (t != null && t != JsonToken.END_OBJECT) {
+          val slot = slots.get(p.currentName())
+          if (slot == null) p.skipChildren()
+          else
+            try readField(slot, p)
+            catch { case NonFatal(_) => p.skipChildren() }
+          t = p.nextToken()
         }
-      } catch { case NonFatal(_) => failed = true; false }
-      finally p.close()
-    if (!ok) hasTs = false
-    ok
+      }
+    } catch { case NonFatal(_) => hasTs = false }
+    finally p.close()
   }
 
   private def readField(slot: Int, p: JsonParser): Unit = {

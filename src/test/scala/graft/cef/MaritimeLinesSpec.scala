@@ -39,7 +39,10 @@ class MaritimeLinesSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll
       """"exit_fishing":6.0,"exit_natura":7.0,"exit_nearports":8.0,"exit_anchorage":9.0,""" +
       s""""next_timestamp":${ts + 60},"critical_bitstring":"$bits"}"""
 
-  /** Lines as bytes: most are text, two carry malformed UTF-8. */
+  /** Lines as bytes: most are text, the rest carry malformed UTF-8 —
+    * broken continuations, overlong forms (C0 B1 is an overlong '1'),
+    * UTF-16 surrogates written as UTF-8 and F5–F7 lead bytes — which
+    * Spark decodes to U+FFFD. */
   private val lines: Seq[Array[Byte]] = {
     val text = Seq(
       // the benchmark's format and a full line
@@ -105,14 +108,26 @@ class MaritimeLinesSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll
       """{"timestamp":34,"mmsi":"r"} trailing""",
       """{"Timestamp":35,"timestamp":36,"MMSI":"x","mmsi":"s","Speed":5,"TRH":1}""",
       """{'timestamp':37,'mmsi':'s2','speed':0.25}""")
-    val bad = Seq(
-      // malformed UTF-8 in the mmsi and in an unknown field
-      Array[Byte](0x80.toByte, 0xC3.toByte),
-      Array[Byte](0xE2.toByte, 0x28.toByte))
-    text.map(_.getBytes(UTF_8)) ++ Seq(
-      """{"timestamp":50,"mmsi":"u""".getBytes(UTF_8) ++ bad(0) ++ """"}""".getBytes(UTF_8),
-      """{"note":"""".getBytes(UTF_8) ++ bad(1) ++ """","timestamp":51,"mmsi":"v"}""".getBytes(UTF_8),
-      Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte) ++ """{"timestamp":52,"mmsi":"w"}""".getBytes(UTF_8))
+    def b(xs: Int*) = xs.map(_.toByte).toArray
+    def utf8(s: String) = s.getBytes(UTF_8)
+    text.map(utf8) ++ Seq(
+      // in the mmsi and in an unknown field: broken continuations
+      utf8("""{"timestamp":50,"mmsi":"u""") ++ b(0x80, 0xC3) ++ utf8(""""}"""),
+      utf8("""{"note":"""") ++ b(0xE2, 0x28) ++ utf8("""","timestamp":51,"mmsi":"v"}"""),
+      // a BOM before the object
+      b(0xEF, 0xBB, 0xBF) ++ utf8("""{"timestamp":52,"mmsi":"w"}"""),
+      // overlong NUL, overlong '1' and a three-byte overlong in the mmsi
+      utf8("""{"timestamp":53,"mmsi":"a""") ++ b(0xC0, 0x80) ++ utf8(""""}"""),
+      utf8("""{"timestamp":54,"mmsi":"""") ++ b(0xC0, 0xB1) ++ b(0xE0, 0x80, 0x80) ++ utf8(""""}"""),
+      // an overlong '1' as a bitstring flag
+      utf8("""{"timestamp":55,"mmsi":"y","critical_bitstring":"""") ++ b(0xC0, 0xB1) ++
+        utf8("""0101010"}"""),
+      // a surrogate in the mmsi and in the bitstring
+      utf8("""{"timestamp":56,"mmsi":"""") ++ b(0xED, 0xA0, 0x80) ++
+        utf8("""","critical_bitstring":"1""") ++ b(0xED, 0xB0, 0x80) ++ utf8("""010101"}"""),
+      // F5–F7 lead bytes in the mmsi and in the bitstring
+      utf8("""{"timestamp":57,"mmsi":"""") ++ b(0xF5, 0x80, 0x80, 0x80, 0xF7, 0xBF, 0xBF, 0xBF) ++
+        utf8("""","critical_bitstring":"""") ++ b(0xF6, 0x80, 0x80, 0x80) ++ utf8("""1010101"}"""))
   }
 
   private lazy val raw: DataFrame = {
@@ -163,7 +178,7 @@ class MaritimeLinesSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll
           want.isFailure shouldBe true
           got.isFailure shouldBe true
         } else {
-          want.get should have size 38
+          want.get should have size 43
           got.get shouldBe want.get
         }
       }
