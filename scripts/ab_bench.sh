@@ -16,7 +16,7 @@ FLAGS+=(--add-opens "java.base/sun.nio.ch=ALL-UNNAMED" \
   --add-opens "java.base/sun.security.action=ALL-UNNAMED" \
   --add-opens "java.base/sun.util.calendar=ALL-UNNAMED")
 export SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
-export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 for i in $(seq 1 "$REPS"); do
   for side in a b; do
     cp="$A"; [ "$side" = b ] && cp="$B"

@@ -1,7 +1,5 @@
 package graft.cef
 
-import scala.collection.mutable
-
 /** T4: probabilistic suffix automaton — the automaton form of a PST
   * (reference model/vmm/pst/psa/PSAUtils.scala:22-100, ProbSuffixAutomaton).
   * States are the PST's leaves; the transition from state L on symbol σ has

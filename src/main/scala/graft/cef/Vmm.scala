@@ -173,12 +173,12 @@ object PstLearner {
     }
 
     // build the tree: each retained context + the path of suffixes up to it
-    retained.toList.foreach(ctx => insert(root, ctx, cst, alphabet))
+    retained.toList.foreach(ctx => insert(root, ctx))
     // step 4: add missing children of internal nodes
     addMissingChildren(root, cst, alphabet)
     // step 5: smooth every node's distribution
     root.nodes.foreach { n =>
-      val raw = rawDistFor(n.label, cst, root, alphabet)
+      val raw = rawDistFor(n.label, cst, alphabet)
       n.dist = alphabet.map { s =>
         s -> (raw.getOrElse(s, 0.0) * (1 - alphabet.size * gammaMin) + gammaMin)
       }.toMap
@@ -189,7 +189,7 @@ object PstLearner {
   /** Insert a node for `ctx` (most-recent-first): children keyed by
     * successively OLDER symbols, so node depth d = context length d.
     */
-  private def insert(root: Pst, ctx: List[Int], cst: Cst, alphabet: Set[Int]): Unit = {
+  private def insert(root: Pst, ctx: List[Int]): Unit = {
     var node = root
     var path = List.empty[Int] // grows most-recent-first
     ctx.foreach { sym =>
@@ -210,7 +210,7 @@ object PstLearner {
   /** Raw (unsmoothed) distribution of the longest suffix of `label` with
     * observed data — the s0 of the reference's step 5.
     */
-  private def rawDistFor(label: List[Int], cst: Cst, root: Pst, alphabet: Set[Int]): Map[Int, Double] = {
+  private def rawDistFor(label: List[Int], cst: Cst, alphabet: Set[Int]): Map[Int, Double] = {
     var ctx = label
     while (ctx.nonEmpty && cst.counterFor(ctx) == 0) ctx = ctx.init
     cst.distributionFor(ctx, alphabet)

@@ -186,7 +186,7 @@ final class Factory(
         case _ => FactoryReport(cmd.id, "error", -1, "", Map("reason" -> 2.0))
       }
 
-    case other =>
+    case _ =>
       FactoryReport(cmd.id, "error", -1, "", Map("reason" -> 0.0))
   }
 }

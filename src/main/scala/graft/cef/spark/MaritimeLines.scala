@@ -26,6 +26,11 @@ import scala.util.control.NonFatal
   *     the bitstring rule and, under ANSI casts (`ansi`), a flag character
   *     that is not a digit fails the line as Spark's cast fails the query.
   *   - a line without an integer `timestamp` is dropped (`parse` is null).
+  *     That includes a line that starts with U+FEFF (a byte-order mark),
+  *     as in Spark: `from_json` and `spark.read.json(Dataset[String])`
+  *     both read such a line as all nulls. A text file source strips a
+  *     BOM at the start of each file (Hadoop's line reader does), so only
+  *     values from a Kafka-style source lose such a line.
   *
   * The pass reads the line's decoded String: Spark decodes the value's
   * UTF-8 the same way (`UTF8String.toString`, and the reader `from_json`

@@ -576,7 +576,7 @@ object DedupOps {
     * per-bit aggregate() majority votes it replaces).
     */
   def simHash(hashes: Column): Column =
-    org.apache.spark.sql.graftexpr.VectorExprs.simHashPackMixed(
+    org.apache.spark.sql.graftexpr.VectorExprs.simHashPack(
       hashes, SimHashBits, SimHashMixMul, SimHashMixAdd, SimHashMixMod)
 
   /** The HOF formulation the native expression replaces (ExprSpec pin). */

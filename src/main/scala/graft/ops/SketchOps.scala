@@ -3,6 +3,7 @@ package graft.ops
 import graft.cef.spark.Keyed
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftexpr.VectorKernel
 
 /** Per-key KMV snapshot emitted by [[SketchOps.streamingKmv]] each time a
   * micro-batch touches the key; the final snapshot (max `n_seen`) is the
@@ -347,15 +348,7 @@ object SketchOps {
   def foldMinHash(mins: Array[Long], hs: Iterator[Long], as: Array[Long],
       bs: Array[Long], mod: Long): Long = {
     var n = 0L
-    hs.foreach { h =>
-      var i = 0
-      while (i < mins.length) {
-        val v = (as(i) * h + bs(i)) % mod
-        if (v < mins(i)) mins(i) = v
-        i += 1
-      }
-      n += 1
-    }
+    hs.foreach { h => VectorKernel.minHashLanes(mins, h, as, bs, mod); n += 1 }
     n
   }
 

@@ -61,10 +61,11 @@ object TextOps {
     org.apache.spark.sql.graftexpr.VectorExprs.polyHash(s, HashMod)
 
   /** JVM twin of [[polyHash]] for driver-side probe hashing (e.g. the
-    * streaming CM point queries) and spec oracles.
+    * streaming CM point queries) and spec oracles: the expression's own
+    * fold, one step per code point.
     */
   def polyHashJvm(s: String): Long =
-    s.foldLeft(0L)((a, c) => (a * 31 + c.toLong) % HashMod)
+    org.apache.spark.sql.graftexpr.TextHashKernel.polyHash(s, HashMod)
 
   /** SQL twin of [[polyHash]] for DuckDB oracles. */
   def polyHashSql(expr: String): String =

@@ -590,7 +590,6 @@ object Cef {
     // 10-cell age automaton interpolated from the same
     // SpstM.anchorAgeTables the Spark side runs.
     Q("cef32_spstm_time", SpstmTimeOracle.sql32) { (s, dir) =>
-      val ev = events(s, dir)
       val m = spstmTime(s, dir)
       val rows = m.pst.leaves.flatMap { leaf =>
         (0 until m.nStates).map { st =>
@@ -613,7 +612,6 @@ object Cef {
     // gates that the multi-batch streaming output equals the batch
     // pipeline's exactly.
     Q("cef33_streaming_forecasts", SpstOracle.sql12) { (s, dir) =>
-      val ev = events(s, dir)
       val spst = spstSkipAny(s, dir)
       val table = spst.forecastTable(ForecastMethod.ClassifyNextK,
         threshold = 0.4, spread = 10, horizon = 20)
@@ -1199,7 +1197,7 @@ object Cef {
     // gates pin, applied to an aggregation sketch. The in-query require
     // proves ≥1 key actually folded across ≥2 batches.
     Q("cef43_streaming_kmv", {
-      import graft.ops.{SketchOps, TextOps}
+      import graft.ops.TextOps
       val k = StreamKmvK
       val est = s"(CAST(${k - 1} AS BIGINT) * ${TextOps.HashMod}) // kth_min"
       s"""WITH b AS (SELECT user_id, CAST(floor(value * 10) AS BIGINT) AS bucket
@@ -1845,7 +1843,6 @@ object Cef {
     // exhaustive SQL window enumeration — the fullScan semantics the
     // scan is spec-pinned equal to.
     Q("cef27_spst_smartscan", SpstOracle.sql27) { (s, dir) =>
-      val ev = events(s, dir)
       val spst = spstSkipAny(s, dir)
       val rows = spst.pst.leaves.flatMap { leaf =>
         (0 until spst.sdfa.nStates).map { st =>
@@ -1867,7 +1864,6 @@ object Cef {
     // θ=0.5 (left on ties, invalid past spread 10); the oracle's
     // recursive CTE replays the identical growth sequence.
     Q("cef29_spst_argmax", SpstOracle.sql29) { (s, dir) =>
-      val ev = events(s, dir)
       val spst = spstSkipAny(s, dir)
       val rows = spst.pst.leaves.flatMap { leaf =>
         (0 until spst.sdfa.nStates).map { st =>

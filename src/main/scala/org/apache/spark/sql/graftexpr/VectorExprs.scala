@@ -2,27 +2,34 @@ package org.apache.spark.sql
 package graftexpr
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the similarity kernels — the hot inner
   * loops of the LSH/ANN queries. These beat the `functions._` compositions
   * they replace because they run one fused primitive loop per row pair with
   * no intermediate array allocation:
   *
-  *   - `jaccardCount` replaces size(array_intersect(a,b)) twice — the
+  *   - `jaccardSim` replaces size(array_intersect(a,b)) twice — the
   *     dominant cost of LSH candidate verification (array_intersect builds
   *     and materializes the intersection array; we only need its size);
   *   - `cosineSim` replaces three aggregate(zip_with(...)) passes with one
   *     loop accumulating dot, |a|² and |b|² together.
   *
-  * Both implement `doGenCode` so they stay inside whole-stage codegen, and
-  * both accumulate in element order, bit-identical to the DuckDB oracle
-  * formulas (list_reduce over list_zip).
+  * One kernel per expression: each algorithm lives once, as a static
+  * method of [[VectorKernel]], [[JaccardKernel]], [[TextHashKernel]] or
+  * [[LevKernel]]. `eval`/`nullSafeEval` calls it, and `doGenCode` is one
+  * generated call of the same method, so every expression stays inside
+  * whole-stage codegen (none is `CodegenFallback`, which would split the
+  * stage) and the interpreted specs test the code codegen runs (ExprSpec
+  * runs every value case both ways). The kernels accumulate in element
+  * order, bit-identical to the DuckDB oracle formulas (list_reduce over
+  * list_zip).
   */
 object VectorExprs {
 
@@ -37,28 +44,17 @@ object VectorExprs {
   def jaccardSortedSim(a: Column, b: Column): Column =
     Bridge.column(JaccardSortedSim(Bridge.expression(a), Bridge.expression(b)))
 
-  /** EXACT Levenshtein distance via Myers' bit-parallel algorithm
-    * (blocked for patterns over 64 code points, Hyyrö's formulation) —
-    * value-identical to `functions.levenshtein` on every input at
-    * O(⌈m/64⌉·n) WORD operations instead of O(m·n) cell updates,
-    * ~20× fewer ops at p119's 300-600-char documents. Chosen over an
-    * Ukkonen band after MEASURING the candidate distances: p119's
-    * ≥0.9-Jaccard pairs are token-SET similar but character-wise far
-    * apart (median lev ≈ 0.7·maxlen at sf0.01), so a doubling band
-    * degrades to ~2× the classic DP cost while Myers is
-    * distance-independent (SCALE.md round-14 addendum).
-    */
+  /** EXACT Levenshtein distance, value-identical to
+    * `functions.levenshtein` at O(⌈m/64⌉·n) WORD operations instead of
+    * O(m·n) cell updates — ~20× fewer ops at p119's 300-600-char
+    * documents. See [[LevKernel]]. */
   def levExact(a: Column, b: Column): Column =
     Bridge.column(LevExact(Bridge.expression(a), Bridge.expression(b)))
 
-  /** SimHash in one codegen'd pass (replaces 31 aggregate() majority
-    * votes). */
-  def simHashPack(hashes: Column, bits: Int): Column =
-    Bridge.column(SimHashPack(Bridge.expression(hashes), bits))
-
-  /** [[simHashPack]] with an affine bit-spreading mix applied to every
-    * element first — see SimHashPack's mixed-form precondition. */
-  def simHashPackMixed(hashes: Column, bits: Int,
+  /** SimHash in one codegen'd pass (replaces `bits` aggregate() majority
+    * votes), each element spread by an affine mix first — see
+    * SimHashPack's precondition. */
+  def simHashPack(hashes: Column, bits: Int,
       mixMul: Long, mixAdd: Long, mixMod: Long): Column =
     Bridge.column(SimHashPack(Bridge.expression(hashes), bits, mixMul, mixAdd, mixMod))
 
@@ -116,46 +112,12 @@ final case class CosineSim(left: Expression, right: Expression)
     Seq(ArrayType(FloatType), ArrayType(FloatType))
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = x.getFloat(i).toDouble
-      val yi = y.getFloat(i).toDouble
-      dot += xi * yi; na += xi * xi; nb += yi * yi
-      i += 1
-    }
-    // zero-norm → 0.0, mirroring SimilarityOps.cosineJvm (r13 advice):
-    // NaN would poison every downstream comparison, and the two paths
-    // must agree bit-for-bit on any input that can reach both
-    if (na == 0.0 || nb == 0.0) 0.0
-    else dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernel.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xi = (double) $a.getFloat($i);
-         |  double $yi = (double) $b.getFloat($i);
-         |  $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-         |}
-         |${ev.value} = ($na == 0.0 || $nb == 0.0)
-         |  ? 0.0 : $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = org.apache.spark.sql.graftexpr.VectorKernel.cosine($a, $b);")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
     copy(left = l, right = r)
@@ -218,67 +180,14 @@ final case class MinHashSig(child: Expression, a: Array[Long], b: Array[Long], m
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
 
-  override def nullSafeEval(input: Any): Any = {
-    val xs = input.asInstanceOf[ArrayData]
-    val n = xs.numElements()
-    // null elements are skipped like the array_min(transform(...)) chain
-    // (a null hash nulls its lane value; array_min ignores nulls)
-    val out = new Array[Long](a.length)
-    java.util.Arrays.fill(out, Long.MaxValue)
-    var valid = 0
-    var i = 0
-    while (i < n) {
-      if (!xs.isNullAt(i)) {
-        valid += 1
-        val h = xs.getLong(i)
-        var k = 0
-        while (k < a.length) {
-          val v = (a(k) * h + b(k)) % mod
-          if (v < out(k)) out(k) = v
-          k += 1
-        }
-      }
-      i += 1
-    }
-    if (valid == 0) new GenericArrayData(new Array[Any](a.length))
-    else UnsafeArrayData.fromPrimitiveArray(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    VectorKernel.minHashSig(input.asInstanceOf[ArrayData], a, b, mod)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val aRef = ctx.addReferenceObj("mhA", a, "long[]")
     val bRef = ctx.addReferenceObj("mhB", b, "long[]")
-    nullSafeCodeGen(ctx, ev, xs => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val k = ctx.freshName("k")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      val out = ctx.freshName("out")
-      val valid = ctx.freshName("valid")
-      s"""
-         |int $n = $xs.numElements();
-         |long[] $out = new long[${a.length}];
-         |java.util.Arrays.fill($out, Long.MAX_VALUE);
-         |int $valid = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$xs.isNullAt($i)) {
-         |    $valid++;
-         |    long $h = $xs.getLong($i);
-         |    for (int $k = 0; $k < ${a.length}; $k++) {
-         |      long $v = ($aRef[$k] * $h + $bRef[$k]) % ${mod}L;
-         |      if ($v < $out[$k]) $out[$k] = $v;
-         |    }
-         |  }
-         |}
-         |if ($valid == 0) {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |    new Object[${a.length}]);
-         |} else {
-         |  ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |    .fromPrimitiveArray($out);
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, xs =>
+      s"${ev.value} = org.apache.spark.sql.graftexpr.VectorKernel.minHashSig($xs, $aRef, $bRef, ${mod}L);")
   }
 
   override protected def withNewChildInternal(c: Expression): MinHashSig =
@@ -301,64 +210,16 @@ final case class BandKeysExpr(child: Expression, bands: Int, k: Int, mod: Long)
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def nullable: Boolean = false
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) new GenericArrayData(new Array[Any](bands))
-    else {
-      val xs = v.asInstanceOf[ArrayData]
-      val n = xs.numElements()
-      val rows = k / bands
-      val out = new Array[Any](bands)
-      var b = 0
-      while (b < bands) {
-        var nulled = false
-        var acc = b.toLong
-        var r = 0
-        while (r < rows && !nulled) {
-          val idx = b * rows + r
-          if (idx >= n || xs.isNullAt(idx)) nulled = true
-          else acc = (acc * 31 + xs.getLong(idx)) % mod
-          r += 1
-        }
-        out(b) = if (nulled) null else java.lang.Long.valueOf(acc)
-        b += 1
-      }
-      new GenericArrayData(out)
-    }
-  }
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    VectorKernel.bandKeys(child.eval(input).asInstanceOf[ArrayData], bands, k, mod)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val c = child.genCode(ctx)
-    val rows = k / bands
-    val n = ctx.freshName("n")
-    val b = ctx.freshName("b")
-    val r = ctx.freshName("r")
-    val idx = ctx.freshName("idx")
-    val acc = ctx.freshName("acc")
-    val nulled = ctx.freshName("nulled")
-    val out = ctx.freshName("out")
-    val code =
-      code"""
-         |${c.code}
-         |Object[] $out = new Object[$bands];
-         |if (!${c.isNull}) {
-         |  int $n = ${c.value}.numElements();
-         |  for (int $b = 0; $b < $bands; $b++) {
-         |    boolean $nulled = false;
-         |    long $acc = (long) $b;
-         |    for (int $r = 0; $r < $rows && !$nulled; $r++) {
-         |      int $idx = $b * $rows + $r;
-         |      if ($idx >= $n || ${c.value}.isNullAt($idx)) { $nulled = true; }
-         |      else { $acc = ($acc * 31L + ${c.value}.getLong($idx)) % ${mod}L; }
-         |    }
-         |    $out[$b] = $nulled ? null : java.lang.Long.valueOf($acc);
-         |  }
-         |}
-         |org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    ev.copy(code = code,
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+    ev.copy(code = code"""${c.code}
+      |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
+      |  org.apache.spark.sql.graftexpr.VectorKernel.bandKeys(
+      |    ${c.isNull} ? null : ${c.value}, $bands, $k, ${mod}L);""".stripMargin,
+      isNull = FalseLiteral)
   }
 
   override protected def withNewChildInternal(c: Expression): BandKeysExpr =
@@ -373,76 +234,27 @@ final case class BandKeysExpr(child: Expression, bands: Int, k: Int, mod: Long)
   * bit (when(null,1).otherwise(-1)), and a negative shifted value's `% 2`
   * remainder is -1, which is != 1 and also votes -1 (ExprSpec-pinned).
   *
-  * When `mixMod > 0`, each element is first spread to `mixMod`'s bit
-  * width via the affine mix (h*mixMul + mixAdd) % mixMod, so a narrow
-  * (31-bit) token hash can vote on a wide (61-bit) signature.
-  * PRECONDITION for the mixed form: elements lie in [0, 2^31) — within
-  * that domain the mix cannot overflow a long, which keeps this
-  * expression, the HOF twin (ANSI-mode arithmetic) and the DuckDB
-  * oracle bit-identical.
+  * Each element is first spread to `mixMod`'s bit width via the affine
+  * mix (h*mixMul + mixAdd) % mixMod, so a narrow (31-bit) token hash can
+  * vote on a wide (61-bit) signature. PRECONDITION: elements lie in
+  * [0, 2^31) — within that domain the mix cannot overflow a long, which
+  * keeps this expression, the HOF twin (ANSI-mode arithmetic) and the
+  * DuckDB oracle bit-identical.
   */
 final case class SimHashPack(child: Expression, bits: Int,
-    mixMul: Long = 1L, mixAdd: Long = 0L, mixMod: Long = 0L)
+    mixMul: Long, mixAdd: Long, mixMod: Long)
     extends UnaryExpression with ImplicitCastInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
-    val xs = input.asInstanceOf[ArrayData]
-    val n = xs.numElements()
-    val votes = new Array[Int](bits)
-    var i = 0
-    while (i < n) {
-      if (xs.isNullAt(i)) {
-        var j = 0
-        while (j < bits) { votes(j) -= 1; j += 1 }
-      } else {
-        val h0 = xs.getLong(i)
-        val h = if (mixMod > 0L) (h0 * mixMul + mixAdd) % mixMod else h0
-        var j = 0
-        while (j < bits) {
-          if (((h >> j) % 2) == 1L) votes(j) += 1 else votes(j) -= 1
-          j += 1
-        }
-      }
-      i += 1
-    }
-    var out = 0L
-    var j = 0
-    while (j < bits) { if (votes(j) > 0) out |= (1L << j); j += 1 }
-    out
-  }
+  override def nullSafeEval(input: Any): Any =
+    VectorKernel.simHash(input.asInstanceOf[ArrayData], bits, mixMul, mixAdd, mixMod)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, xs => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val votes = ctx.freshName("votes")
-      val out = ctx.freshName("out")
-      s"""
-         |int $n = $xs.numElements();
-         |int[] $votes = new int[$bits];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($xs.isNullAt($i)) {
-         |    for (int $j = 0; $j < $bits; $j++) $votes[$j]--;
-         |  } else {
-         |    long $h = $xs.getLong($i);
-         |    if (${mixMod}L > 0L) $h = ($h * ${mixMul}L + ${mixAdd}L) % ${mixMod}L;
-         |    for (int $j = 0; $j < $bits; $j++) {
-         |      if ((($h >> $j) % 2) == 1L) $votes[$j]++; else $votes[$j]--;
-         |    }
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $j = 0; $j < $bits; $j++) {
-         |  if ($votes[$j] > 0) $out |= (1L << $j);
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, xs =>
+      s"${ev.value} = org.apache.spark.sql.graftexpr.VectorKernel.simHash(" +
+        s"$xs, $bits, ${mixMul}L, ${mixAdd}L, ${mixMod}L);")
 
   override protected def withNewChildInternal(c: Expression): SimHashPack =
     copy(child = c)
@@ -461,8 +273,206 @@ final case class HyperplaneBuckets(child: Expression, numPlanes: Int, numTables:
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
-    val xs = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    VectorKernel.hyperplaneBuckets(input.asInstanceOf[ArrayData], numPlanes, numTables)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, xs =>
+      s"${ev.value} = org.apache.spark.sql.graftexpr.VectorKernel.hyperplaneBuckets($xs, $numPlanes, $numTables);")
+
+  override protected def withNewChildInternal(c: Expression): HyperplaneBuckets =
+    copy(child = c)
+}
+
+/** text → long polynomial hash: acc = (acc*31 + char) % mod over the chars
+  * — value-identical to aggregate(split(s, ""), 0, (acc, c) =>
+  * (acc*31 + ascii(c)) % mod) on the oracle charset (ExprSpec-pinned),
+  * without materializing a string per character.
+  */
+final case class PolyHash(child: Expression, mod: Long)
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = LongType
+
+  override def nullSafeEval(input: Any): Any =
+    TextHashKernel.polyHash(input.asInstanceOf[UTF8String], mod)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, s =>
+      s"${ev.value} = org.apache.spark.sql.graftexpr.TextHashKernel.polyHash($s, ${mod}L);")
+
+  override protected def withNewChildInternal(c: Expression): PolyHash = copy(child = c)
+}
+
+/** text → distinct per-token hashes (first-occurrence order), the fused
+  * form of array_distinct(transform(split(text, " "), polyHash)).
+  */
+final case class TokenHashes(child: Expression, mod: Long)
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def nullSafeEval(input: Any): Any =
+    TextHashKernel.tokenHashes(input.asInstanceOf[UTF8String], mod)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, s =>
+      s"${ev.value} = org.apache.spark.sql.graftexpr.TextHashKernel.tokenHashes($s, ${mod}L);")
+
+  override protected def withNewChildInternal(c: Expression): TokenHashes = copy(child = c)
+}
+
+/** text → distinct hashed word n-gram shingles (first-occurrence order):
+  * the window hash rolls across the tokens' chars with the joining spaces
+  * folded in, value-identical to hashing the concat_ws(" ", ...) gram.
+  * Windows are i = 0..len-n-1 (the shingle count is len-n, matching the
+  * SQL twin); len ≤ n yields the empty array.
+  */
+final case class ShingleHashes(child: Expression, n: Int, mod: Long)
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def nullSafeEval(input: Any): Any =
+    TextHashKernel.shingleHashes(input.asInstanceOf[UTF8String], n, mod)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, s =>
+      s"${ev.value} = org.apache.spark.sql.graftexpr.TextHashKernel.shingleHashes($s, $n, ${mod}L);")
+
+  override protected def withNewChildInternal(c: Expression): ShingleHashes = copy(child = c)
+}
+
+/** text → adjacent code-point bigrams (2-code-point strings), value-
+  * identical to transform(sequence(1, length(s) - 1), i -> substr(s, i, 2))
+  * — Spark's substr/length count CODE POINTS, as do DuckDB's
+  * substring/len twins, so parity holds on non-BMP text (ExprSpec pins
+  * it) — without per-element lambda interpretation.
+  */
+final case class CharBigrams(child: Expression)
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+
+  override def nullSafeEval(input: Any): Any =
+    TextHashKernel.charBigrams(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, s =>
+      s"${ev.value} = org.apache.spark.sql.graftexpr.TextHashKernel.charBigrams($s);")
+
+  override protected def withNewChildInternal(c: Expression): CharBigrams = copy(child = c)
+}
+
+/** Static kernels of the array expressions above, shared by eval and
+  * codegen (the [[JaccardKernel]] pattern): each algorithm is written once
+  * and the generated code calls it, so the interpreted specs test the
+  * code whole-stage codegen runs.
+  */
+object VectorKernel {
+
+  /** cos(x, y) over the common prefix; double accumulation in element order. */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = x.getFloat(i).toDouble
+      val yi = y.getFloat(i).toDouble
+      dot += xi * yi; na += xi * xi; nb += yi * yi
+      i += 1
+    }
+    // zero-norm → 0.0, mirroring SimilarityOps.cosineJvm (r13 advice):
+    // NaN would poison every downstream comparison, and the two paths
+    // must agree bit-for-bit on any input that can reach both
+    if (na == 0.0 || nb == 0.0) 0.0
+    else dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** Fold one hash into every MinHash lane: mins(k) = min(mins(k),
+    * (a(k)*h + b(k)) % mod). Also the streaming fold's step
+    * (graft.ops.SketchOps.foldMinHash).
+    */
+  def minHashLanes(mins: Array[Long], h: Long, a: Array[Long], b: Array[Long], mod: Long): Unit = {
+    var k = 0
+    while (k < mins.length) {
+      val v = (a(k) * h + b(k)) % mod
+      if (v < mins(k)) mins(k) = v
+      k += 1
+    }
+  }
+
+  def minHashSig(xs: ArrayData, a: Array[Long], b: Array[Long], mod: Long): ArrayData = {
+    val n = xs.numElements()
+    // null elements are skipped like the array_min(transform(...)) chain
+    // (a null hash nulls its lane value; array_min ignores nulls)
+    val out = new Array[Long](a.length)
+    java.util.Arrays.fill(out, Long.MaxValue)
+    var valid = 0
+    var i = 0
+    while (i < n) {
+      if (!xs.isNullAt(i)) {
+        valid += 1
+        minHashLanes(out, xs.getLong(i), a, b, mod)
+      }
+      i += 1
+    }
+    if (valid == 0) new GenericArrayData(new Array[Any](a.length))
+    else UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** Band keys of `sig`; a null `sig` yields `bands` null keys. */
+  def bandKeys(sig: ArrayData, bands: Int, k: Int, mod: Long): ArrayData = {
+    if (sig == null) return new GenericArrayData(new Array[Any](bands))
+    val n = sig.numElements()
+    val rows = k / bands
+    val out = new Array[Any](bands)
+    var b = 0
+    while (b < bands) {
+      var nulled = false
+      var acc = b.toLong
+      var r = 0
+      while (r < rows && !nulled) {
+        val idx = b * rows + r
+        if (idx >= n || sig.isNullAt(idx)) nulled = true
+        else acc = (acc * 31 + sig.getLong(idx)) % mod
+        r += 1
+      }
+      out(b) = if (nulled) null else java.lang.Long.valueOf(acc)
+      b += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  def simHash(xs: ArrayData, bits: Int, mixMul: Long, mixAdd: Long, mixMod: Long): Long = {
+    val n = xs.numElements()
+    val votes = new Array[Int](bits)
+    var i = 0
+    while (i < n) {
+      if (xs.isNullAt(i)) {
+        var j = 0
+        while (j < bits) { votes(j) -= 1; j += 1 }
+      } else {
+        val h = (xs.getLong(i) * mixMul + mixAdd) % mixMod
+        var j = 0
+        while (j < bits) {
+          if (((h >> j) % 2) == 1L) votes(j) += 1 else votes(j) -= 1
+          j += 1
+        }
+      }
+      i += 1
+    }
+    var out = 0L
+    var j = 0
+    while (j < bits) { if (votes(j) > 0) out |= (1L << j); j += 1 }
+    out
+  }
+
+  def hyperplaneBuckets(xs: ArrayData, numPlanes: Int, numTables: Int): ArrayData = {
     val n = xs.numElements()
     val out = new Array[Long](numTables)
     // a null element nulls every projection in the zip_with/aggregate
@@ -493,132 +503,6 @@ final case class HyperplaneBuckets(child: Expression, numPlanes: Int, numTables:
     }
     UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, xs => {
-      val n = ctx.freshName("n")
-      val t = ctx.freshName("t")
-      val p = ctx.freshName("p")
-      val g = ctx.freshName("g")
-      val i = ctx.freshName("i")
-      val proj = ctx.freshName("proj")
-      val comp = ctx.freshName("comp")
-      val bucket = ctx.freshName("bucket")
-      val out = ctx.freshName("out")
-      val anyNull = ctx.freshName("anyNull")
-      val i0 = ctx.freshName("i0")
-      s"""
-         |int $n = $xs.numElements();
-         |long[] $out = new long[$numTables];
-         |boolean $anyNull = false;
-         |for (int $i0 = 0; $i0 < $n; $i0++) {
-         |  if ($xs.isNullAt($i0)) { $anyNull = true; break; }
-         |}
-         |for (int $t = 0; !$anyNull && $t < $numTables; $t++) {
-         |  long $bucket = 0L;
-         |  for (int $p = 0; $p < $numPlanes; $p++) {
-         |    long $g = (long) $t * $numPlanes + $p;
-         |    double $proj = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      double $comp = (double) (($g * 31L + $i) * 2654435761L % 1000003L) / 1000003d - 0.5;
-         |      $proj += (double) $xs.getFloat($i) * $comp;
-         |    }
-         |    if ($proj > 0) $bucket += (1L << $p);
-         |  }
-         |  $out[$t] = $bucket;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): HyperplaneBuckets =
-    copy(child = c)
-}
-
-/** text → long polynomial hash: acc = (acc*31 + char) % mod over the chars
-  * — value-identical to aggregate(split(s, ""), 0, (acc, c) =>
-  * (acc*31 + ascii(c)) % mod) on the oracle charset (ExprSpec-pinned),
-  * without materializing a string per character.
-  */
-final case class PolyHash(child: Expression, mod: Long)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashKernel.polyHash(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], mod)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = org.apache.spark.sql.graftexpr.TextHashKernel.polyHash($s, ${mod}L);")
-
-  override protected def withNewChildInternal(c: Expression): PolyHash = copy(child = c)
-}
-
-/** text → distinct per-token hashes (first-occurrence order), the fused
-  * form of array_distinct(transform(split(text, " "), polyHash)).
-  */
-final case class TokenHashes(child: Expression, mod: Long)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashKernel.tokenHashes(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], mod)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = org.apache.spark.sql.graftexpr.TextHashKernel.tokenHashes($s, ${mod}L);")
-
-  override protected def withNewChildInternal(c: Expression): TokenHashes = copy(child = c)
-}
-
-/** text → distinct hashed word n-gram shingles (first-occurrence order):
-  * the window hash rolls across the tokens' chars with the joining spaces
-  * folded in, value-identical to hashing the concat_ws(" ", ...) gram.
-  * Windows are i = 0..len-n-1 (the shingle count is len-n, matching the
-  * SQL twin); len ≤ n yields the empty array.
-  */
-final case class ShingleHashes(child: Expression, n: Int, mod: Long)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashKernel.shingleHashes(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n, mod)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = org.apache.spark.sql.graftexpr.TextHashKernel.shingleHashes($s, $n, ${mod}L);")
-
-  override protected def withNewChildInternal(c: Expression): ShingleHashes = copy(child = c)
-}
-
-/** text → adjacent code-point bigrams (2-code-point strings), value-
-  * identical to transform(sequence(1, length(s) - 1), i -> substr(s, i, 2))
-  * — Spark's substr/length count CODE POINTS, as do DuckDB's
-  * substring/len twins, so parity holds on non-BMP text (ExprSpec pins
-  * it) — without per-element lambda interpretation.
-  */
-final case class CharBigrams(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    TextHashKernel.charBigrams(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = org.apache.spark.sql.graftexpr.TextHashKernel.charBigrams($s);")
-
-  override protected def withNewChildInternal(c: Expression): CharBigrams = copy(child = c)
 }
 
 /** Primitive text-hashing kernel shared by eval and codegen.
@@ -630,7 +514,6 @@ final case class CharBigrams(child: Expression)
   * holds on non-BMP text too (ExprSpec pins emoji/accent cases).
   */
 object TextHashKernel {
-  import org.apache.spark.unsafe.types.UTF8String
 
   /** Fold js[from, until) into acc — one step per code point. */
   private def foldChars(js: String, from: Int, until: Int, acc0: Long, mod: Long): Long = {
@@ -665,10 +548,10 @@ object TextHashKernel {
       UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(out, cnt))
   }
 
-  def polyHash(s: UTF8String, mod: Long): Long = {
-    val js = s.toString
-    foldChars(js, 0, js.length, 0L, mod)
-  }
+  def polyHash(s: UTF8String, mod: Long): Long = polyHash(s.toString, mod)
+
+  /** [[polyHash]] of a JVM string — the fold behind TextOps.polyHashJvm. */
+  def polyHash(js: String, mod: Long): Long = foldChars(js, 0, js.length, 0L, mod)
 
   def tokenHashes(s: UTF8String, mod: Long): ArrayData = {
     val toks = s.toString.split(" ", -1)
@@ -798,8 +681,7 @@ final case class LevExact(left: Expression, right: Expression)
   override def dataType: DataType = IntegerType
 
   override def nullSafeEval(a: Any, b: Any): Any =
-    LevKernel.exact(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    LevKernel.exact(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) =>
@@ -809,18 +691,12 @@ final case class LevExact(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** Static kernel so codegen calls primitive JIT-compiled code directly
-  * (the JaccardKernel pattern). `exact` strips the common flanks and
-  * runs blocked bit-parallel Myers ([[myers]]) — O(⌈m/64⌉·n) word ops,
-  * distance-independent. An Ukkonen band was built first and REJECTED
-  * on measurement (SCALE.md round-14 addendum 1): p119's candidates sit
-  * at median distance ≈ 0.7·len, where a doubling band costs ~2× the
-  * classic DP while Myers doesn't care how far apart the strings are.
+/** Levenshtein kernel: `exact` strips the common flanks and runs
+  * blocked bit-parallel Myers ([[myers]]).
   */
 object LevKernel {
 
-  def exact(a: org.apache.spark.unsafe.types.UTF8String,
-      b: org.apache.spark.unsafe.types.UTF8String): Int = {
+  def exact(a: UTF8String, b: UTF8String): Int = {
     if (a.equals(b)) return 0
     // code points, NOT UTF-16 units — functions.levenshtein edits code
     // points, and surrogate pairs must count as one edit
@@ -847,10 +723,11 @@ object LevKernel {
     * bit-vectors (Pv = +1 rows, Mv = −1 rows), each text character
     * advances ALL m rows of the column in O(⌈m/64⌉) word operations,
     * and the running score tracks row m through the horizontal delta
-    * out of the top block. Chosen over the first-cut Ukkonen band
-    * after measurement: p119's candidates sit at median distance
-    * ≈ 0.7·len, where a doubling band costs ~2× the classic DP while
-    * this is distance-independent.
+    * out of the top block. Chosen over an Ukkonen band after
+    * measurement (SCALE.md round-14 addendum 1): p119's ≥0.9-Jaccard
+    * candidates are token-set similar but character-wise far apart
+    * (median distance ≈ 0.7·len), where a doubling band costs ~2× the
+    * classic DP while this is distance-independent.
     */
   private def myers(p: Array[Int], t: Array[Int]): Int = {
     val m = p.length

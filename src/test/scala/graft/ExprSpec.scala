@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions.{col, array_intersect}
 import org.scalatest.flatspec.AnyFlatSpec
@@ -8,9 +8,13 @@ import org.scalatest.matchers.should.Matchers
 import org.scalatest.BeforeAndAfterAll
 import scala.util.Random
 
-/** Native Catalyst expression specs: the fused CosineSim / JaccardSim
-  * kernels must be bit-identical to the functions._ compositions they
-  * replaced, in both interpreted and whole-stage-codegen evaluation.
+/** Native Catalyst expression specs: every fused graftexpr expression
+  * must be bit-identical to the functions._ composition it replaced, in
+  * both interpreted and whole-stage-codegen evaluation. The first cases
+  * read `Seq(...).toDF` frames, which ConvertToLocalRelation folds to a
+  * LocalRelation and so evaluates interpreted; the "through whole-stage
+  * codegen" cases at the end run each value case again over the same
+  * rows read back from parquet, where the projection is a `*(n) Project`.
   */
 class ExprSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
 
@@ -319,5 +323,196 @@ class ExprSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
       org.apache.spark.sql.graftexpr.VectorExprs.levExact(col("a"), col("b")).as("myers"),
       functions.levenshtein(col("a"), col("b")).as("builtin")).collect()
     out.foreach(row => row.getInt(0) shouldBe row.getInt(1))
+  }
+
+  // ---- the value cases again, through whole-stage codegen
+
+  private val cgRnd = new Random(23)
+
+  /** Evaluates `native` over `rows` twice — interpreted (the Seq-backed
+    * frame folds to a LocalTableScan) and whole-stage-codegen'd (the same
+    * rows read back from parquet, the plan a `*(n) Project` naming
+    * `name`) — and checks, per `id`, that both equal `composed`.
+    */
+  private def bothWays(rows: DataFrame, name: String, native: Column, composed: Column): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("expr-cg")
+    try {
+      val path = dir.resolve("rows.parquet").toString
+      rows.write.parquet(path)
+      val interp = rows.select(col("id"), native.as("native"), composed.as("composed"))
+      interp.queryExecution.executedPlan.toString should include ("LocalTableScan")
+      val cg = spark.read.parquet(path).select(col("id"), native.as("native"))
+      cg.queryExecution.executedPlan.toString should include regex
+        s"\\*\\(\\d+\\) Project \\[id#\\d+, [^\\n]*$name\\("
+      val cgById = cg.collect().map(r => r.get(0) -> r.get(1)).toMap
+      val expected = interp.collect()
+      cgById.size shouldBe expected.length
+      // doubles compare bit-for-bit: both sides accumulate in element order
+      def bits(v: Any): Any = v match {
+        case d: Double => java.lang.Double.doubleToLongBits(d)
+        case other => other
+      }
+      expected.foreach { r =>
+        bits(r.get(1)) shouldBe bits(r.get(2))
+        bits(cgById(r.get(0))) shouldBe bits(r.get(1))
+      }
+    } finally {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.delete)
+    }
+  }
+
+  private def hashLists(n: Int, len: Int, withNulls: Boolean): Seq[(Int, Seq[Option[Long]])] =
+    (1 to n).map { i =>
+      (i, Seq.fill(cgRnd.nextInt(len + 1))(
+        if (withNulls && cgRnd.nextInt(25) == 0) None
+        else Some(cgRnd.nextLong().abs % ops.TextOps.HashMod)))
+    }
+
+  "CosineSim through whole-stage codegen" should "equal its interpreted value and the composition" in {
+    val sparkS = spark
+    import sparkS.implicits._
+    val rows = (1 to 200).map { i =>
+      (i, Array.fill(48)(cgRnd.nextFloat() * 2 - 1), Array.fill(48)(cgRnd.nextFloat() * 2 - 1))
+    } :+ ((0, Array.fill(48)(0f), Array.fill(48)(1f))) // zero norm → 0.0
+    val norms = ops.SimilarityOps.norm(col("a")) * ops.SimilarityOps.norm(col("b"))
+    bothWays(rows.toDF("id", "a", "b"), "cosinesim",
+      org.apache.spark.sql.graftexpr.VectorExprs.cosineSim(col("a"), col("b")),
+      functions.when(norms === 0, 0.0).otherwise(ops.SimilarityOps.dot(col("a"), col("b")) / norms))
+  }
+
+  "JaccardSim and JaccardSortedSim through whole-stage codegen" should
+    "equal their interpreted values and the array_intersect formulation" in {
+    val sparkS = spark
+    import sparkS.implicits._
+    val rows = (1 to 200).map { i =>
+      (i, Seq.fill(30)(cgRnd.nextInt(50).toLong).distinct.sorted,
+        Seq.fill(30)(cgRnd.nextInt(50).toLong).distinct.sorted)
+    } ++ Seq((0, Seq.empty[Long], Seq.empty[Long]), (-1, Seq.empty[Long], Seq(1L)))
+    val inter = functions.size(array_intersect(col("a"), col("b")))
+    val composed = functions.when(functions.size(col("a")) + functions.size(col("b")) === 0, 1.0)
+      .otherwise(inter.cast("double") /
+        (functions.size(col("a")) + functions.size(col("b")) - inter).cast("double"))
+    val df = rows.toDF("id", "a", "b")
+    bothWays(df, "jaccardsim",
+      org.apache.spark.sql.graftexpr.VectorExprs.jaccardSim(col("a"), col("b")), composed)
+    bothWays(df, "jaccardsortedsim",
+      org.apache.spark.sql.graftexpr.VectorExprs.jaccardSortedSim(col("a"), col("b")), composed)
+  }
+
+  "MinHashSig through whole-stage codegen" should "equal its interpreted value and the composition" in {
+    import org.apache.spark.sql.functions._
+    val sparkS = spark
+    import sparkS.implicits._
+    import ops.DedupOps._
+    // null elements are skipped; an empty or all-null input nulls every lane
+    val rows = hashLists(200, 40, withNulls = true) ++
+      Seq((0, Seq.empty[Option[Long]]), (-1, Seq(Option.empty[Long])))
+    bothWays(rows.toDF("id", "hashes"), "minhashsig", minHashSig(col("hashes")),
+      array((0 until MinHashK).map { i =>
+        array_min(transform(col("hashes"),
+          h => (lit(MinHashA(i)) * h + MinHashB(i)) % ops.TextOps.HashMod))
+      }: _*))
+  }
+
+  "BandKeysExpr through whole-stage codegen" should "equal its interpreted value and the fold" in {
+    val sparkS = spark
+    import sparkS.implicits._
+    import ops.DedupOps._
+    // full signatures with null lanes, and a NULL one (the fold's ANSI
+    // element_at fails on a short one; the first BandKeysExpr case pins it)
+    val rows: Seq[(Int, Option[Seq[Option[Long]]])] =
+      (1 to 200).map { i =>
+        (i, Some(Seq.fill(MinHashK)(
+          if (cgRnd.nextInt(60) == 0) None else Some(cgRnd.nextLong().abs % ops.TextOps.HashMod))))
+      } :+ ((0, None))
+    Seq(PairBands, NnBands).foreach { bands =>
+      bothWays(rows.toDF("id", "sig"), "bandkeysexpr",
+        bandKeys(col("sig"), bands), bandKeysHof(col("sig"), bands))
+    }
+  }
+
+  "SimHashPack through whole-stage codegen" should "equal its interpreted value and the majority votes" in {
+    val sparkS = spark
+    import sparkS.implicits._
+    import ops.DedupOps._
+    val rows = hashLists(200, 40, withNulls = true) :+ ((0, Seq.empty[Option[Long]]))
+    bothWays(rows.toDF("id", "hashes"), "simhashpack",
+      simHash(col("hashes")), simHashHof(col("hashes")))
+  }
+
+  "HyperplaneBuckets through whole-stage codegen" should "equal its interpreted value and the composition" in {
+    import org.apache.spark.sql.functions._
+    import ops.SimilarityOps.{planeComponent, lshBuckets, NumPlanes, NumTables}
+    val sparkS = spark
+    import sparkS.implicits._
+    // a null component zeroes every bucket
+    val rows = (1 to 200).map(i => (i, Seq.fill(64)(Option(cgRnd.nextFloat() * 2 - 1)))) :+
+      ((0, Seq(Option(0.5f), Option.empty[Float], Option(-0.5f))))
+    val composed = array((0 until NumTables).map { tbl =>
+      (0 until NumPlanes).map { p =>
+        val proj = aggregate(
+          zip_with(col("emb"),
+            sequence(lit(0L), functions.size(col("emb")).cast("long") - 1),
+            (x, i) => x.cast("double") * planeComponent(tbl * NumPlanes + p, i)),
+          lit(0d), (acc, v) => acc + v)
+        when(proj > 0, lit(1L << p)).otherwise(lit(0L))
+      }.reduce(_ + _)
+    }: _*)
+    bothWays(rows.toDF("id", "emb"), "hyperplanebuckets", lshBuckets(col("emb")), composed)
+  }
+
+  "the text hash expressions through whole-stage codegen" should
+    "equal their interpreted values and the higher-order formulations" in {
+    import org.apache.spark.sql.functions._
+    val sparkS = spark
+    import sparkS.implicits._
+    val mod = ops.TextOps.HashMod
+    val words = Vector("the", "cat", "sat", "on", "a", "mat", "x1", "zz!", "", "q-9")
+    val texts = (1 to 200).map(_ =>
+      (1 to cgRnd.nextInt(12)).map(_ => words(cgRnd.nextInt(words.size))).mkString(" ")) ++
+      Seq("", " ", "a", "a b", "a b c d ", "café naïve", "a 😀 b",
+        "a𝄞b")
+    val df = texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "t")
+    def hofPoly(s: Column) =
+      aggregate(split(s, ""), lit(0L), (acc, c) => (acc * 31 + ascii(c)) % mod)
+    val toks = split(col("t"), " ")
+    val grams = transform(sequence(lit(0), functions.size(toks) - 3 - 1),
+      i => concat_ws(" ", element_at(toks, i + 1), element_at(toks, i + 2), element_at(toks, i + 3)))
+    bothWays(df, "polyhash", ops.TextOps.polyHash(col("t")), hofPoly(col("t")))
+    bothWays(df, "tokenhashes", ops.TextOps.tokenHashes(col("t")),
+      array_distinct(transform(toks, x => hofPoly(x))))
+    bothWays(df, "shinglehashes", ops.DedupOps.shingleHashes(col("t"), 3),
+      when(functions.size(toks) > 3, array_distinct(transform(grams, g => hofPoly(g))))
+        .otherwise(array().cast("array<bigint>")))
+    bothWays(df, "charbigrams",
+      org.apache.spark.sql.graftexpr.VectorExprs.charBigrams(col("t")),
+      when(functions.length(col("t")) >= 2,
+        transform(sequence(lit(1), functions.length(col("t")) - 1), i => col("t").substr(i, lit(2))))
+        .otherwise(array().cast("array<string>")))
+  }
+
+  "LevExact through whole-stage codegen" should "equal its interpreted value and functions.levenshtein" in {
+    val sparkS = spark
+    import sparkS.implicits._
+    val alphabet = Vector("a", "b", "c", "é", "世", "😀")
+    def randStr(n: Int): String = (1 to n).map(_ => alphabet(cgRnd.nextInt(alphabet.size))).mkString
+    val pairs = (1 to 100).map(_ => (randStr(cgRnd.nextInt(150)), randStr(cgRnd.nextInt(150)))) ++
+      Seq(("", ""), ("", "abc"), ("same", "same"), ("x" * 200 + "ab", "x" * 200 + "ba"))
+    val df = pairs.zipWithIndex.map { case ((a, b), i) => (i, a, b) }.toDF("id", "a", "b")
+    bothWays(df, "levexact",
+      org.apache.spark.sql.graftexpr.VectorExprs.levExact(col("a"), col("b")),
+      functions.levenshtein(col("a"), col("b")))
+  }
+
+  "TextOps.polyHashJvm" should "fold code points like the PolyHash expression" in {
+    val sparkS = spark
+    import sparkS.implicits._
+    // U+1D11E is a surrogate pair: one fold step of 119070, not two
+    val s = "a𝄞b"
+    ops.TextOps.polyHashJvm(s) shouldBe 3784485L
+    val viaExpr = Seq(s).toDF("t").select(ops.TextOps.polyHash(col("t"))).collect()(0).getLong(0)
+    ops.TextOps.polyHashJvm(s) shouldBe viaExpr
   }
 }
